@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark every registered query, in ``spark_queries()`` order, at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS].
 
 Prints ONE SHORT JSON line as the final stdout line:
   {"metric": "...", "value": <total_sec>, "unit": "sec",
@@ -207,310 +208,6 @@ def load_baseline(path: str, sf: str) -> dict[str, float]:
         pass
     return out
 
-HEADLINE = [
-    "pricing_summary",
-    "join_chain_revenue",
-    "join_customer_orders",
-    "range_join_acctbal_bands",
-    "priority_dedup_orders",
-    "window_topk_orders_per_customer",
-    "union_priority_dedup",
-    "json_extract_events",
-    "window_hourly_events",
-    "dedup_exact_documents",
-    "text_token_stats",
-    "lang_id_documents",
-    "cosine_topk_bruteforce",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "embedding_neardup",
-    "grouping_sets_orders",
-    "cube_lineitem_stats",
-    "sessionize_events",
-    "rank_customers_in_segment",
-    "monthly_order_revenue",
-    "quality_score_documents",
-    "ngram_jaccard_pairs",
-    "cosine_topk_lsh",
-    "asof_prior_purchase",
-    "media_meta_stats",
-    "cosine_topk_ivf",
-    "array_functions_suite",
-    "date_functions_suite",
-    "full_outer_order_events",
-    "embedding_neardup_exact",
-    "top_ngrams_per_lang",
-    "content_flags_documents",
-    "corpus_curation_pipeline",
-    "percentile_stats_lineitem",
-    "stratified_sample_documents",
-    "pii_redaction_documents",
-    "dau_rolling_events",
-    "dedup_clusters_documents",
-    "salted_agg_lineitem",
-    "decontaminate_documents",
-    "quantile_trim_documents",
-    "corpus_mixture_sample",
-    "repetition_filter_documents",
-    "tfidf_top_terms",
-    "funnel_events",
-    "fuzzy_match_nations",
-    "scd_upsert_orders",
-    "bloom_semi_join_lineitem",
-    "semantic_dedup_exact_embeddings",
-    "semantic_dedup_embeddings",
-    "span_dedup_documents",
-    "pack_sequences_documents",
-    "resample_gapfill_events",
-    "flatten_props_udtf",
-    "hll_daily_users_events",
-    "small_quantity_revenue",
-    "value_trend_events",
-    "scd2_priority_history",
-    "dedup_clusters_star",
-    "variant_props_stats",
-    "window_sliding_events",
-    "unpivot_order_metrics",
-    "embedding_outliers_by_label",
-    "holdout_split_documents",
-    "length_buckets_documents",
-    "exists_late_orders",
-    "loyal_customers_by_nation",
-    "heavy_hitters_parts",
-    "window_distribution_suite",
-    "listagg_nations",
-    "activity_streaks_events",
-    "zscore_outliers_events",
-    "corpus_composition_report",
-    "bucketed_range_join_quantity",
-    "domain_quota_sample",
-    "chunk_documents_sliding",
-    "normalize_text_suite",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q10_returned_items",
-    "tpch_q18_large_orders",
-    "media_audio_features",
-    "higher_order_funcs_suite",
-    "regex_extraction_suite",
-    "vocab_encode_documents",
-    "window_value_functions",
-    "referential_integrity_audit",
-    "ansi_safe_arithmetic_suite",
-    "percentile_disc_stats",
-    "incremental_dedup_ingest",
-    "price_histogram_orders",
-    "cohort_retention_events",
-    "argmax_suite_customers",
-    "copurchase_part_pairs",
-    "headdup_keep_longest",
-    "approx_topk_priorities",
-    "event_transition_matrix",
-    "ewma_user_values",
-    "sql_udf_cid_functions",
-    "aggregate_completeness_suite",
-    "grouping_id_disambiguation",
-    "unigram_logprob_score",
-    "embedding_quantize_int8",
-    "null_safe_join_counts",
-    "multiset_ops_orders",
-    "inverted_index_lookup",
-    "bm25_search_documents",
-    "hybrid_rrf_search",
-    "bpe_pair_counts",
-    "snapshot_diff_orders",
-    "audience_overlap_events",
-    "contiguous_ids_documents",
-    "revenue_share_within_region",
-    # round 2 additions
-    "csv_sink_roundtrip",
-    "csv_dialect_latin1_scan",
-    "cid_pipeline_golden",
-    "cosine_topk_ivf_fullprobe",
-    "cosine_topk_lsh_probeall",
-    "interval_overlap_shipments",
-    "weighted_sample_documents",
-    "minhash_lsh_verified",
-    "winnowing_fingerprints_verified",
-    "simhash_pairs_verified",
-    "pagerank_copurchase",
-    "tpch_q7_nation_volume",
-    "tpch_q14_promo_effect",
-    "scd2_point_in_time_join",
-    "ohlc_user_hourly",
-    "purchase_click_attribution",
-    "media_video_frames",
-    # round 2 (cont.): TPC-H completion — full 22-query suite
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_order_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_shipments",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_part_promotion",
-    "tpch_q21_waiting_orders",
-    "tpch_q22_global_sales",
-    # round 2 (cont.): training-pipeline widening
-    "neardup_curation_pipeline",
-    "hard_negative_mining",
-    "data_quality_expectations",
-    "cdc_merge_full",
-    "salted_join_events_hot",
-    "multigrain_time_rollup",
-    "gdpr_erasure_cascade",
-    "parse_url_suite",
-    "kmeans_cluster_assign",
-    "curriculum_phases",
-    "recursive_month_spine",
-    "recursive_supplier_tree",
-    "bpe_train_rounds",
-    "psi_drift_orders",
-    "incremental_agg_maintenance",
-    "pseudonymize_events",
-    "pretraining_data_pipeline",
-    "partitioned_lake_roundtrip",
-    # round 2 (cont., session 3): quality models, asymmetric/multimodal
-    # dedup, layout, graph census, sketches
-    "quality_classifier_score",
-    "ngram_containment_pairs",
-    "phash_image_neardup",
-    "zorder_lake_roundtrip",
-    "pareto_frontier_orders",
-    "bigram_lm_score",
-    "char_entropy_documents",
-    "oov_rate_by_split",
-    "export_shards_report",
-    "triangle_census_copurchase",
-    "kmv_distinct_users",
-    "cogroup_click_purchase",
-    "embedding_norms_arrow",
-    "lpa_communities_copurchase",
-    "jl_projection_embeddings",
-    "ab_test_events",
-    "top_session_paths",
-    "binaryfile_ingest_roundtrip",
-    "bfs_distances_copurchase",
-    "dedup_rate_by_source",
-    "mad_outliers_events",
-    "seasonal_naive_mape_orders",
-    "schema_evolution_roundtrip",
-    "compaction_roundtrip",
-    "arrow_udf_reading_time",
-    "dp_noised_counts",
-    "kcore_copurchase",
-    "degree_assortativity_copurchase",
-    "consecutive_dup_collapse",
-    "source_similarity_weighted_jaccard",
-    "quarantine_split_roundtrip",
-    "ab_funnel_lift",
-    "anomaly_months_orders",
-    "peak_transit_concurrency",
-    "conversion_time_percentiles",
-    # round 3 additions
-    "csv_plain_scan_fragment",
-    "media_real_png_decode",
-    "media_real_wav_decode",
-    "temperature_mixture_sample",
-    "zipf_fit_tokens",
-    # round 4 additions: hard-oracle streaming rows (§2.10)
-    "stream_hourly_events",
-    "stream_sessionized_users",
-    "stream_click_attribution",
-    "stream_user_totals_stateful",
-    "stream_dedup_admission",
-    # round 5 additions: PQ ADC retrieval + analytics widening
-    "pq_adc_topk",
-    "rfm_segmentation_customers",
-    "benford_first_digit_orders",
-    "session_entropy_users",
-    "knn_label_vote_embeddings",
-    "rolling_corr_daily_events",
-    "data_profile_orders",
-    "pmi_bigrams_tokens",
-    "gini_by_region_orders",
-    "cusum_changepoint_orders",
-    "feature_hashing_documents",
-    "target_encode_loo_orders",
-    "countmin_heavy_users_events",
-    "tokenizer_fertility_by_lang",
-    "dup_family_size_histogram",
-    "seasonality_index_orders",
-    "repeated_spans_documents",
-    "cross_split_contamination",
-    "ccnet_quality_buckets",
-    # full-registry sweep: the early/trivial rows that predate the
-    # HEADLINE list, so EVERY registered query has a benched, baselined
-    # wall time (round-5 completeness pass)
-    "scan_project_filter",
-    "scalar_string_suite",
-    "conditional_count_quality",
-    "rollup_order_counts",
-    "top_k_orders",
-    "semi_join_active_suppliers",
-    "anti_join_idle_customers",
-    "window_running_revenue",
-    "intersect_nations",
-    "except_nations",
-    "lag_order_gaps",
-    "count_distinct_per_nation",
-    "approx_distinct_users",
-    "pivot_status_by_priority",
-    "from_json_typed_events",
-    "bpe_token_estimate",
-    "media_image_features",
-    "approx_percentile_lineitem",
-    "content_fingerprints",
-    # statistical-test rows (round 5, late batch)
-    "ks_test_priority_orders",
-    "trend_slope_region_monthly",
-    "chi_square_priority_status",
-    "jaro_winkler_part_pairs",
-    "kaplan_meier_conversion",
-    "weighted_median_lineitem",
-    "readability_documents",
-    "interarrival_burstiness_users",
-    "lsh_recall_report",
-    "mann_whitney_priority_orders",
-    "theil_sen_region_monthly",
-    "autocorrelation_daily_revenue",
-    "runs_test_daily_revenue",
-    "spearman_acctbal_spend",
-    # round 7: the run_batch surface's own driver row
-    "run_batch_fragments_verified",
-    # round 9: the stats-family fragment batch digest
-    "run_batch_stats_verified",
-    # round 11 additions (queries/round11.py)
-    "adamic_adar_link_prediction",
-    "assoc_rules_copurchase",
-    "mutual_information_lang_source",
-    "calibration_ece_classifier",
-    "holt_linear_monthly_revenue",
-    "correlation_matrix_lineitem",
-    "embedding_split_contamination",
-    "ndcg_retrieval_eval",
-    "apriori_triples_copurchase",
-    "incremental_join_maintenance",
-    # round 12 additions (queries/round12.py)
-    "weighted_geomean_grouped_agg",
-    "skipgram_cooccurrence_topk",
-    "welch_t_test_click_purchase",
-    "cramers_v_categorical",
-    "hill_tail_index_prices",
-    "group_kfold_split_audit",
-    "preference_pairs_by_quality",
-    "markov_stationary_events",
-    # round 12, second batch
-    "conformal_threshold_classifier",
-    "mcnemar_heuristic_vs_classifier",
-    "gini_best_split_lineitem",
-    "kendall_tau_top_customers",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -579,9 +276,7 @@ def main() -> None:
         return raw if raw <= _AMBIENT_DRIFT_CAP else 1.0
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        if name not in queries:
-            continue
+    for name in queries:
         if (
             name in WARM_FIRST
             or baseline.get(name, _STEADY_STATE_BASELINE_SEC)

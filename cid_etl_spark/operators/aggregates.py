@@ -171,8 +171,8 @@ _ADAPTIVE_LARGE_BUCKETS = 1024
 #: small for compressed leaf scans (parquet bytes < in-memory bytes),
 #: which errs toward a cheaper tier only within each threshold's ~10×
 #: safety margin; callers at known extreme scale can always pass
-#: ``n_buckets`` explicitly.  Round-9 crossover sweep
-#: (tools/sweep_bucket_tiers.py, table in BASELINE.md): the measured
+#: ``n_buckets`` explicitly.  Round-9 crossover sweep (table in
+#: BASELINE.md; the sweep script is in commit 9bd0d2c): the measured
 #: 8↔32 crossover lies between 12 and 37 MiB of plan estimate — the
 #: 32 MiB TINY edge sits inside the band — and n=32 still beats
 #: n=1024 at 105 MiB (the largest local slice), so 256 MiB stays the

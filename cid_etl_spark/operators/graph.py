@@ -275,7 +275,7 @@ def pagerank(
     (PARTITION BY src)`` ships every edge of a hot source to one task
     with no partial aggregation.  On symmetric graphs (every caller
     here) support-thresholded co-purchase degrees are bounded by
-    basket overlap — ``tools/probe_graph_skew.py`` measures the
+    basket overlap — the hub-skew probe (BASELINE.md, 9bd0d2c) measures the
     fixture's hottest src at a few hundred edges, orders below task
     grain.  A hot-key DIRECTED graph (web crawl with a super-hub)
     skews this window harder than the old groupBy+join shape only when

@@ -6,7 +6,8 @@ CANONICALIZED logical subtree into later queries — so cross-query reuse
 needs no plan rewriting, only that the queries build their hot
 intermediates through ONE shared helper (identical construction ⇒
 identical canonical plan ⇒ substitution fires).  Probe #7
-(tools/probe_batch_reuse.py, BASELINE.md) fixed the design point:
+(BASELINE.md table; the probe script is in commit 9bd0d2c) fixed the
+design point:
 
 - caching the bare ``documents`` scan is a measured NEGATIVE (0.89× —
   a codegen parquet scan with pushdown beats the row cache), so no

@@ -31,10 +31,6 @@ from cid_etl_spark.queries._registry import (  # noqa: F401
     _ORACLE,
     _SPARK,
     _DRIVER_WINDOW_PRIORITY,
-    _ROUND1_VERIFIED,
-    _ROUND2_VERIFIED,
-    _ROUND3_VERIFIED,
-    _ROUND4_VERIFIED,
     _ordered_names,
     _register,
     QueryFn,

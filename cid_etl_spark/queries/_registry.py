@@ -19,34 +19,15 @@ for them (the math itself is covered by unit tests in tests/).
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import re
+import tempfile
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from cid_etl_spark.functions.strings import (
-    extract_root_category,
-    format_subcat,
-    normalize_code,
-    subcategory_or_null,
-)
-from cid_etl_spark.functions.text import (
-    mean_token_length,
-    punct_ratio,
-    token_count,
-    tokens,
-)
-from cid_etl_spark.functions.text import LANG_MARKERS
-from cid_etl_spark.functions.vectors import cosine_similarity
-from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
-from cid_etl_spark.operators.similarity import embedding_neardup_pairs
-from cid_etl_spark.sources.parquet import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -64,452 +45,77 @@ def _register(name: str, oracle: str | None = None):
     return deco
 
 
-#: Queries the driver's round-1 window already hash-verified
-#: (CORRECTNESS_r01.json).  The driver checks the FIRST 50 entries of
-#: ``queries()`` each round, so registration order is a verification
-#: budget: already-green queries rotate to the back (their parity stays
-#: pinned by tests/test_oracle_parity.py at sf0.001 every run), and the
-#: strongest not-yet-checked queries take the window.
-_ROUND1_VERIFIED: frozenset[str] = frozenset(
-    {
-        "scan_project_filter", "scalar_string_suite", "pricing_summary",
-        "conditional_count_quality", "priority_dedup_orders",
-        "rollup_order_counts", "top_k_orders", "join_customer_orders",
-        "join_chain_revenue", "range_join_acctbal_bands",
-        "semi_join_active_suppliers", "anti_join_idle_customers",
-        "union_priority_dedup", "window_topk_orders_per_customer",
-        "window_running_revenue", "json_extract_events",
-        "window_hourly_events", "dedup_exact_documents", "text_token_stats",
-        "lang_id_documents", "cosine_topk_bruteforce", "minhash_lsh_pairs",
-        "simhash_pairs", "embedding_neardup", "grouping_sets_orders",
-        "cube_lineitem_stats", "intersect_nations", "except_nations",
-        "lag_order_gaps", "rank_customers_in_segment",
-        "count_distinct_per_nation", "monthly_order_revenue",
-        "pivot_status_by_priority", "from_json_typed_events",
-        "sessionize_events", "bpe_token_estimate", "ngram_jaccard_pairs",
-        "quality_score_documents", "content_fingerprints", "cosine_topk_lsh",
-        "asof_prior_purchase", "media_meta_stats", "cosine_topk_ivf",
-        "array_functions_suite", "date_functions_suite",
-        "full_outer_order_events", "embedding_neardup_exact",
-    }
-)
-
-#: Queries the round-2 driver window hash-verified
-#: (CORRECTNESS_r02.json) — rotated to the back like the round-1 set;
-#: parity stays pinned by tests/test_oracle_parity.py + the full local
-#: replica (tools/driver_check.py).
-_ROUND2_VERIFIED: frozenset[str] = frozenset(
-    {
-        "cid_pipeline_golden", "csv_sink_roundtrip", "csv_dialect_latin1_scan",
-        "corpus_curation_pipeline",
-        "tpch_q3_shipping_priority", "tpch_q5_local_supplier_volume",
-        "tpch_q10_returned_items", "tpch_q18_large_orders",
-        "dedup_clusters_documents", "dedup_clusters_star",
-        "inverted_index_lookup", "bm25_search_documents", "hybrid_rrf_search",
-        "vocab_encode_documents", "unigram_logprob_score", "bpe_pair_counts",
-        "scd_upsert_orders", "scd2_priority_history", "funnel_events",
-        "semantic_dedup_exact_embeddings", "bloom_semi_join_lineitem",
-        "decontaminate_documents", "span_dedup_documents",
-        "pack_sequences_documents", "incremental_dedup_ingest",
-        "holdout_split_documents", "corpus_mixture_sample",
-        "domain_quota_sample", "quantile_trim_documents",
-        "repetition_filter_documents", "tfidf_top_terms",
-        "stratified_sample_documents", "pii_redaction_documents",
-        "salted_agg_lineitem", "percentile_stats_lineitem",
-        "dau_rolling_events", "resample_gapfill_events",
-        "small_quantity_revenue", "exists_late_orders",
-        "loyal_customers_by_nation", "heavy_hitters_parts",
-        "flatten_props_udtf", "cosine_topk_ivf_fullprobe",
-        "approx_distinct_users", "approx_percentile_lineitem",
-        "hll_daily_users_events", "cosine_topk_lsh_probeall",
-        "media_image_features", "pretraining_data_pipeline",
-        "embedding_outliers_by_label",
-    }
-)
-
-#: Queries the round-3 driver window hash-verified
-#: (CORRECTNESS_r03.json) — rotated to the back like the earlier sets.
-_ROUND3_VERIFIED: frozenset[str] = frozenset(
-    {
-        "minhash_lsh_verified", "simhash_pairs_verified",
-        "winnowing_fingerprints_verified", "neardup_curation_pipeline",
-        "pagerank_copurchase", "bfs_distances_copurchase",
-        "kcore_copurchase", "lpa_communities_copurchase",
-        "tpch_q2_min_cost_supplier", "tpch_q4_order_priority",
-        "tpch_q6_forecast_revenue", "tpch_q7_nation_volume",
-        "tpch_q8_market_share", "tpch_q9_product_profit",
-        "tpch_q11_important_stock", "tpch_q12_late_shipments",
-        "tpch_q13_customer_distribution", "tpch_q14_promo_effect",
-        "tpch_q15_top_supplier", "tpch_q16_parts_supplier",
-        "tpch_q19_discounted_revenue", "tpch_q20_part_promotion",
-        "tpch_q21_waiting_orders", "tpch_q22_global_sales",
-        "recursive_month_spine", "recursive_supplier_tree",
-        "ewma_user_values", "csv_plain_scan_fragment",
-        "top_session_paths", "pareto_frontier_orders",
-        "dedup_rate_by_source", "oov_rate_by_split",
-        "binaryfile_ingest_roundtrip", "media_video_frames",
-        "phash_image_neardup", "triangle_census_copurchase",
-        "degree_assortativity_copurchase", "hard_negative_mining",
-        "cogroup_click_purchase", "arrow_udf_reading_time",
-        "sql_udf_cid_functions", "embedding_norms_arrow",
-        "bigram_lm_score", "char_entropy_documents",
-        "quality_classifier_score", "ngram_containment_pairs",
-        "kmeans_cluster_assign", "bpe_train_rounds",
-        "media_real_png_decode", "media_real_wav_decode",
-    }
-)
-
-#: Round-4 driver window, hash-verified 50/50 (CORRECTNESS_r04.json) —
-#: rotated to the back like the earlier sets.
-_ROUND4_VERIFIED: frozenset[str] = frozenset(
-    {
-        "ab_test_events", "activity_streaks_events",
-        "ansi_safe_arithmetic_suite", "argmax_suite_customers",
-        "bucketed_range_join_quantity", "cdc_merge_full",
-        "chunk_documents_sliding", "cohort_retention_events",
-        "compaction_roundtrip", "content_flags_documents",
-        "conversion_time_percentiles", "corpus_composition_report",
-        "curriculum_phases", "export_shards_report", "fuzzy_match_nations",
-        "higher_order_funcs_suite", "incremental_agg_maintenance",
-        "jl_projection_embeddings", "kmv_distinct_users",
-        "length_buckets_documents", "listagg_nations",
-        "normalize_text_suite", "partitioned_lake_roundtrip",
-        "peak_transit_concurrency", "percentile_disc_stats",
-        "price_histogram_orders", "purchase_click_attribution",
-        "quarantine_split_roundtrip", "referential_integrity_audit",
-        "regex_extraction_suite", "scd2_point_in_time_join",
-        "schema_evolution_roundtrip", "snapshot_diff_orders",
-        "stream_click_attribution", "stream_dedup_admission",
-        "stream_hourly_events", "stream_sessionized_users",
-        "stream_user_totals_stateful", "temperature_mixture_sample",
-        "top_ngrams_per_lang", "unpivot_order_metrics",
-        "value_trend_events", "variant_props_stats",
-        "weighted_sample_documents", "window_distribution_suite",
-        "window_sliding_events", "window_value_functions",
-        "zipf_fit_tokens", "zorder_lake_roundtrip", "zscore_outliers_events",
-    }
-)
-
-#: Round-5 driver window, hash-verified 50/50 (CORRECTNESS_r05.json) —
-#: after this round every oracled query had been driver-checked at
-#: least once EXCEPT the 14 late-r5 statistical rows (registered after
-#: the window froze; builder-replica + sf0.001-parity green, queued
-#: first for r6).
-_ROUND5_VERIFIED: frozenset[str] = frozenset(
-    {
-        "ab_funnel_lift", "aggregate_completeness_suite",
-        "anomaly_months_orders", "approx_topk_priorities",
-        "audience_overlap_events", "benford_first_digit_orders",
-        "ccnet_quality_buckets", "consecutive_dup_collapse",
-        "contiguous_ids_documents", "copurchase_part_pairs",
-        "countmin_heavy_users_events", "cross_split_contamination",
-        "cusum_changepoint_orders", "data_profile_orders",
-        "data_quality_expectations", "dp_noised_counts",
-        "dup_family_size_histogram", "embedding_quantize_int8",
-        "event_transition_matrix", "feature_hashing_documents",
-        "gdpr_erasure_cascade", "gini_by_region_orders",
-        "grouping_id_disambiguation", "headdup_keep_longest",
-        "interval_overlap_shipments", "knn_label_vote_embeddings",
-        "mad_outliers_events", "media_audio_features",
-        "multigrain_time_rollup", "multiset_ops_orders",
-        "null_safe_join_counts", "ohlc_user_hourly", "parse_url_suite",
-        "pmi_bigrams_tokens", "pq_adc_topk", "pseudonymize_events",
-        "psi_drift_orders", "repeated_spans_documents",
-        "revenue_share_within_region", "rfm_segmentation_customers",
-        "rolling_corr_daily_events", "salted_join_events_hot",
-        "seasonal_naive_mape_orders", "seasonality_index_orders",
-        "session_entropy_users", "source_similarity_weighted_jaccard",
-        "stream_dedup_admission", "stream_user_totals_stateful",
-        "target_encode_loo_orders", "tokenizer_fertility_by_lang",
-    }
-)
-
-#: Round-6 driver window, hash-verified 50/50 (CORRECTNESS_r06.json):
-#: the 14 late-r5 statistical backlog rows, the 3 staging-refactored
-#: streaming rows, the r6 scale-rewrite set, and 24 stale
-#: re-verifications.
-_ROUND6_VERIFIED: frozenset[str] = frozenset(
-    {
-        "anti_join_idle_customers", "array_functions_suite",
-        "asof_prior_purchase", "autocorrelation_daily_revenue",
-        "bpe_token_estimate", "ccnet_quality_buckets",
-        "chi_square_priority_status", "conditional_count_quality",
-        "cosine_topk_bruteforce", "count_distinct_per_nation",
-        "cube_lineitem_stats", "curriculum_phases", "date_functions_suite",
-        "dedup_exact_documents", "embedding_neardup_exact",
-        "except_nations", "from_json_typed_events",
-        "full_outer_order_events", "gini_by_region_orders",
-        "grouping_sets_orders", "hybrid_rrf_search",
-        "interarrival_burstiness_users", "intersect_nations",
-        "jaro_winkler_part_pairs", "join_chain_revenue",
-        "join_customer_orders", "json_extract_events",
-        "kaplan_meier_conversion", "ks_test_priority_orders",
-        "lag_order_gaps", "lang_id_documents", "lsh_recall_report",
-        "mann_whitney_priority_orders", "media_meta_stats",
-        "monthly_order_revenue", "ngram_jaccard_pairs",
-        "pack_sequences_documents", "pq_adc_topk",
-        "pretraining_data_pipeline", "rank_customers_in_segment",
-        "readability_documents", "rfm_segmentation_customers",
-        "runs_test_daily_revenue", "spearman_acctbal_spend",
-        "stream_click_attribution", "stream_hourly_events",
-        "stream_sessionized_users", "theil_sen_region_monthly",
-        "trend_slope_region_monthly", "weighted_median_lineitem",
-    }
-)
-
-#: Round-7 driver window, hash-verified 50/50 (CORRECTNESS_r07.json):
-#: the 19 equi-depth/fragment plan-change re-verifications, the new
-#: run_batch digest row, and 30 stalest-first rotations.
-_ROUND7_VERIFIED: frozenset[str] = frozenset(
-    {
-        "approx_distinct_users", "approx_percentile_lineitem",
-        "bloom_semi_join_lineitem", "bm25_search_documents",
-        "bpe_pair_counts", "ccnet_quality_buckets", "cid_pipeline_golden",
-        "contiguous_ids_documents", "corpus_curation_pipeline",
-        "corpus_mixture_sample", "cosine_topk_ivf_fullprobe",
-        "cosine_topk_lsh_probeall", "csv_dialect_latin1_scan",
-        "csv_sink_roundtrip", "curriculum_phases", "dau_rolling_events",
-        "decontaminate_documents", "dedup_clusters_documents",
-        "gini_by_region_orders", "hybrid_rrf_search",
-        "inverted_index_lookup", "ks_test_priority_orders",
-        "mann_whitney_priority_orders", "pack_sequences_documents",
-        "pivot_status_by_priority", "pretraining_data_pipeline",
-        "pricing_summary", "priority_dedup_orders",
-        "quality_score_documents", "range_join_acctbal_bands",
-        "rank_customers_in_segment", "rfm_segmentation_customers",
-        "rollup_order_counts", "run_batch_fragments_verified",
-        "scalar_string_suite", "scan_project_filter",
-        "semi_join_active_suppliers", "sessionize_events",
-        "spearman_acctbal_spend", "text_token_stats", "tfidf_top_terms",
-        "top_k_orders", "top_ngrams_per_lang", "unigram_logprob_score",
-        "union_priority_dedup", "vocab_encode_documents",
-        "weighted_median_lineitem", "window_hourly_events",
-        "window_running_revenue", "window_topk_orders_per_customer",
-    }
-)
-
-#: Queries the round-8 driver window hash-verified
-#: (CORRECTNESS_r08.json, 50/50 green): the adaptive-bucket family,
-#: the r8 fragment refactors, the batch digest row, and the 32-row
-#: stalest fill that cleared the whole r2-latest tail.
-_ROUND8_VERIFIED: frozenset[str] = frozenset(
-    {
-        "arrow_udf_reading_time", "bfs_distances_copurchase",
-        "ccnet_quality_buckets", "consecutive_dup_collapse",
-        "contiguous_ids_documents", "cosine_topk_lsh_probeall",
-        "curriculum_phases", "dedup_clusters_star", "domain_quota_sample",
-        "embedding_outliers_by_label", "event_transition_matrix",
-        "exists_late_orders", "flatten_props_udtf", "funnel_events",
-        "gini_by_region_orders", "heavy_hitters_parts",
-        "hll_daily_users_events", "holdout_split_documents",
-        "incremental_dedup_ingest", "interarrival_burstiness_users",
-        "ks_test_priority_orders", "loyal_customers_by_nation",
-        "mann_whitney_priority_orders", "media_image_features",
-        "oov_rate_by_split", "pack_sequences_documents",
-        "percentile_stats_lineitem", "pii_redaction_documents",
-        "pretraining_data_pipeline", "quantile_trim_documents",
-        "rank_customers_in_segment", "repetition_filter_documents",
-        "resample_gapfill_events", "rfm_segmentation_customers",
-        "run_batch_fragments_verified", "salted_agg_lineitem",
-        "scd2_priority_history", "scd_upsert_orders",
-        "semantic_dedup_exact_embeddings", "sessionize_events",
-        "small_quantity_revenue", "span_dedup_documents",
-        "spearman_acctbal_spend", "stratified_sample_documents",
-        "top_session_paths", "tpch_q10_returned_items",
-        "tpch_q18_large_orders", "tpch_q3_shipping_priority",
-        "tpch_q5_local_supplier_volume", "weighted_median_lineitem",
-    }
-)
-
-#: Queries the round-9 driver window hash-verified
-#: (CORRECTNESS_r09.json, 50/50 green): the two batch digest rows (the
-#: only plans r9 changed), the doc_token_seq fragment consumers, and
-#: the 46-row fill that cleared the whole r3-latest tail.
-_ROUND9_VERIFIED: frozenset[str] = frozenset(
-    {
-        "bigram_lm_score", "binaryfile_ingest_roundtrip",
-        "bpe_train_rounds", "char_entropy_documents",
-        "cogroup_click_purchase", "cross_split_contamination",
-        "csv_plain_scan_fragment", "dedup_rate_by_source",
-        "degree_assortativity_copurchase", "embedding_norms_arrow",
-        "ewma_user_values", "hard_negative_mining",
-        "kcore_copurchase", "kmeans_cluster_assign",
-        "lpa_communities_copurchase", "media_real_png_decode",
-        "media_real_wav_decode", "media_video_frames",
-        "minhash_lsh_verified", "neardup_curation_pipeline",
-        "ngram_containment_pairs", "pagerank_copurchase",
-        "pareto_frontier_orders", "phash_image_neardup",
-        "quality_classifier_score", "recursive_month_spine",
-        "recursive_supplier_tree", "repeated_spans_documents",
-        "run_batch_fragments_verified", "run_batch_stats_verified",
-        "simhash_pairs_verified", "sql_udf_cid_functions",
-        "tpch_q11_important_stock", "tpch_q12_late_shipments",
-        "tpch_q13_customer_distribution", "tpch_q14_promo_effect",
-        "tpch_q15_top_supplier", "tpch_q16_parts_supplier",
-        "tpch_q19_discounted_revenue", "tpch_q20_part_promotion",
-        "tpch_q21_waiting_orders", "tpch_q22_global_sales",
-        "tpch_q2_min_cost_supplier", "tpch_q4_order_priority",
-        "tpch_q6_forecast_revenue", "tpch_q7_nation_volume",
-        "tpch_q8_market_share", "tpch_q9_product_profit",
-        "triangle_census_copurchase",
-        "winnowing_fingerprints_verified",
-    }
-)
-
-#: Queries the round-10 driver window hash-verified
-#: (CORRECTNESS_r10.json, 50/50 green): the 6 priority rows (batch
-#: digests, adaptive-tier consumers, the two changed-plan stats
-#: queries) plus the 43-row r4-latest tail + 1 oldest-r5 fill.
-_ROUND10_VERIFIED: frozenset[str] = frozenset(
-    {
-        "ab_funnel_lift", "ab_test_events", "activity_streaks_events",
-        "ansi_safe_arithmetic_suite", "argmax_suite_customers",
-        "bucketed_range_join_quantity", "cdc_merge_full",
-        "chi_square_priority_status", "chunk_documents_sliding",
-        "cohort_retention_events", "compaction_roundtrip",
-        "content_flags_documents", "contiguous_ids_documents",
-        "conversion_time_percentiles", "corpus_composition_report",
-        "data_profile_orders", "export_shards_report",
-        "fuzzy_match_nations", "higher_order_funcs_suite",
-        "incremental_agg_maintenance", "jl_projection_embeddings",
-        "kmv_distinct_users", "length_buckets_documents", "listagg_nations",
-        "normalize_text_suite", "pack_sequences_documents",
-        "partitioned_lake_roundtrip", "peak_transit_concurrency",
-        "percentile_disc_stats", "price_histogram_orders",
-        "purchase_click_attribution", "quarantine_split_roundtrip",
-        "referential_integrity_audit", "regex_extraction_suite",
-        "run_batch_fragments_verified", "run_batch_stats_verified",
-        "scd2_point_in_time_join", "schema_evolution_roundtrip",
-        "snapshot_diff_orders", "temperature_mixture_sample",
-        "unpivot_order_metrics", "value_trend_events",
-        "variant_props_stats", "weighted_sample_documents",
-        "window_distribution_suite", "window_sliding_events",
-        "window_value_functions", "zipf_fit_tokens",
-        "zorder_lake_roundtrip", "zscore_outliers_events",
-    }
-)
-
-#: Queries the round-11 driver window hash-verified
-#: (CORRECTNESS_r11.json, 50/50 green): the 3 priority rows (golden +
-#: batch digests), the 10 new round-11 queries, and the 37-row fill
-#: that cleared all but two of the r5-latest tail.
-_ROUND11_VERIFIED: frozenset[str] = frozenset(
-    {
-        "adamic_adar_link_prediction", "aggregate_completeness_suite",
-        "anomaly_months_orders", "approx_topk_priorities",
-        "apriori_triples_copurchase", "assoc_rules_copurchase",
-        "audience_overlap_events", "benford_first_digit_orders",
-        "calibration_ece_classifier", "cid_pipeline_golden",
-        "copurchase_part_pairs", "correlation_matrix_lineitem",
-        "countmin_heavy_users_events", "cusum_changepoint_orders",
-        "data_quality_expectations", "dp_noised_counts",
-        "dup_family_size_histogram", "embedding_quantize_int8",
-        "embedding_split_contamination", "feature_hashing_documents",
-        "gdpr_erasure_cascade", "grouping_id_disambiguation",
-        "headdup_keep_longest", "holt_linear_monthly_revenue",
-        "incremental_join_maintenance", "interval_overlap_shipments",
-        "knn_label_vote_embeddings", "mad_outliers_events",
-        "media_audio_features", "multigrain_time_rollup",
-        "multiset_ops_orders", "mutual_information_lang_source",
-        "ndcg_retrieval_eval", "null_safe_join_counts", "ohlc_user_hourly",
-        "parse_url_suite", "pmi_bigrams_tokens", "pseudonymize_events",
-        "psi_drift_orders", "revenue_share_within_region",
-        "rolling_corr_daily_events", "run_batch_fragments_verified",
-        "run_batch_stats_verified", "salted_join_events_hot",
-        "seasonal_naive_mape_orders", "seasonality_index_orders",
-        "session_entropy_users", "source_similarity_weighted_jaccard",
-        "stream_dedup_admission", "stream_user_totals_stateful",
-    }
-)
-
-#: Queries the round-12 driver window hash-verified
-#: (CORRECTNESS_r12.json, 50/50 green): the 6 priority rows (ADVICE
-#: r11 closeouts + the two sf1-guard plan rewrites), the 12 new
-#: round-12 queries, and the 32-row fill from the r5/r6-latest tail.
-_ROUND12_VERIFIED: frozenset[str] = frozenset(
-    {
-        "adamic_adar_link_prediction", "anti_join_idle_customers",
-        "apriori_triples_copurchase", "array_functions_suite",
-        "asof_prior_purchase", "autocorrelation_daily_revenue",
-        "bpe_token_estimate", "conditional_count_quality",
-        "conformal_threshold_classifier", "cosine_topk_bruteforce",
-        "count_distinct_per_nation", "cramers_v_categorical",
-        "cube_lineitem_stats", "date_functions_suite",
-        "dedup_exact_documents", "embedding_neardup_exact",
-        "embedding_split_contamination", "ewma_user_values",
-        "except_nations", "from_json_typed_events",
-        "full_outer_order_events", "gini_best_split_lineitem",
-        "group_kfold_split_audit", "grouping_sets_orders",
-        "hill_tail_index_prices", "holt_linear_monthly_revenue",
-        "intersect_nations", "jaro_winkler_part_pairs",
-        "join_chain_revenue", "join_customer_orders",
-        "json_extract_events", "kaplan_meier_conversion",
-        "kendall_tau_top_customers", "lag_order_gaps",
-        "lang_id_documents", "lsh_recall_report",
-        "markov_stationary_events", "mcnemar_heuristic_vs_classifier",
-        "media_meta_stats", "monthly_order_revenue",
-        "ndcg_retrieval_eval", "ngram_jaccard_pairs", "pq_adc_topk",
-        "preference_pairs_by_quality", "readability_documents",
-        "skipgram_cooccurrence_topk", "target_encode_loo_orders",
-        "tokenizer_fertility_by_lang", "weighted_geomean_grouped_agg",
-        "welch_t_test_click_purchase",
-    }
-)
-
-#: All driver-verified rounds, oldest first — the freshness ladder
-#: behind :func:`_ordered_names`.  A name appearing in several sets is
-#: dated by its LATEST green row.
-_VERIFIED_ROUNDS: tuple[frozenset[str], ...] = (
-    _ROUND1_VERIFIED, _ROUND2_VERIFIED, _ROUND3_VERIFIED,
-    _ROUND4_VERIFIED, _ROUND5_VERIFIED, _ROUND6_VERIFIED,
-    _ROUND7_VERIFIED, _ROUND8_VERIFIED, _ROUND9_VERIFIED,
-    _ROUND10_VERIFIED, _ROUND11_VERIFIED, _ROUND12_VERIFIED,
-)
-
-#: Round-13 driver window.  The priority rows are the three ADVICE r12
-#: closeouts whose code changed this round.  New round-13 queries are
-#: never-verified, so rule 2 of ``_ordered_names`` places them right
-#: after this block automatically.  The remaining slots fall through
-#: to the freshness rule: after the r12 window every oracled row's
-#: latest green is r6+, so the fill starts at the r6-latest tail
-#: (VERDICT r12 #2's "no row older than r6 after r13" bar).
-_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # ADVICE r12 closeouts changed these plans/oracles this round:
-    # Hill estimator gained a nullif zero-sum guard in BOTH engines
-    # (round12.py), the conformal calibration threshold was trimmed to
-    # exactly 32 hex chars (value-identical, but the constant feeds
-    # both the Spark filter and the SQL oracle), and adamic_adar's
-    # sizing aggregate is now skippable under SPARK_GRAFT_PLAN_ONLY
-    # (production path unchanged, but the function body is).
-    "hill_tail_index_prices",
-    "conformal_threshold_classifier",
-    "adamic_adar_link_prediction",
-)
+def scratch_dir(sf_dir: str, family: str) -> str:
+    """Scratch directory for a query that writes files, created if
+    missing: ``<tempdir>/cid_etl_<family>_<key>``.  ``key`` is an md5
+    prefix of the whole *sf_dir*, so two inputs that share a basename
+    (``a/sf0.01`` and ``b/sf0.01``) never share files, and the root
+    follows ``TMPDIR`` through :func:`tempfile.gettempdir`."""
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = os.path.join(tempfile.gettempdir(), f"cid_etl_{family}_{key}")
+    os.makedirs(path, exist_ok=True)
+    return path
 
 
-def _ordered_names() -> list[str]:
+#: Where the driver's per-round results live: one
+#: ``CORRECTNESS_rNN.json`` per round at the repository root.
+_CORRECTNESS_DIR = Path(__file__).resolve().parents[2]
+
+
+def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
+    """The freshness ladder, oldest round first: for each
+    ``CORRECTNESS_rNN.json`` under *root* (ordered by NN), the names
+    whose ``hash_match`` is true.  No files, no ladder."""
+    files = sorted(
+        (int(m.group(1)), f)
+        for f in root.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
+    )
+    return [
+        frozenset(
+            n for n, row in json.loads(f.read_text()).items()
+            if row.get("hash_match") is True
+        )
+        for _, f in files
+    ]
+
+
+#: Rows to put at the very front of the next driver window (changed
+#: plans, suspect rows).  Empty: without an entry here the window is
+#: the never-verified rows, then the stalest green rows.
+_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = ()
+
+
+def _ordered_names(
+    ladder: list[frozenset[str]] | None = None,
+    priority: tuple[str, ...] = _DRIVER_WINDOW_PRIORITY,
+) -> list[str]:
     """Registry order = the driver's verification budget (the driver
     checks the FIRST 50 entries of ``queries()`` each round):
 
-    1. this round's explicit priority window (changed/new/suspect rows);
-    2. never-driver-verified oracled queries;
-    3. verified oracled queries, OLDEST green row first (name-sorted
-       within a round) — the standing freshness rule (VERDICT r5 #6):
-       once everything has been verified at least once, each window
-       automatically re-verifies the rows whose last driver check is
-       stalest, so verification decays gracefully instead of freezing
-       at "verified once in round 1";
+    1. *priority* (:data:`_DRIVER_WINDOW_PRIORITY`), in its own order;
+    2. oracled queries no driver round has hash-verified;
+    3. verified oracled queries, OLDEST latest-green round first
+       (name-sorted within a round), so each window re-verifies the
+       rows whose last driver check is stalest;
     4. rows-only entries (no DuckDB oracle — a driver slot spent on
        them can only score ``err: no_oracle``) dead last.
+
+    *ladder* defaults to :func:`_verified_rounds`, read from the
+    ``CORRECTNESS_rNN.json`` files: a finished driver round is recorded
+    by adding its file, with no code edit, and the next window rotates
+    on its own.
     """
-    front = [n for n in _DRIVER_WINDOW_PRIORITY if n in _SPARK]
+    if ladder is None:
+        ladder = _verified_rounds()
+    front = [n for n in priority if n in _SPARK]
     seen = set(front)
     rows_only = [
         n for n in _SPARK if n not in seen and n not in _ORACLE
     ]
     seen.update(rows_only)
     last_round: dict[str, int] = {}
-    for rnd, names in enumerate(_VERIFIED_ROUNDS, start=1):
+    for rnd, names in enumerate(ladder, start=1):
         for n in names:
             last_round[n] = rnd
     mid = [n for n in _SPARK if n not in seen and n not in last_round]

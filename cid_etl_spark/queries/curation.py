@@ -33,7 +33,7 @@ from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
-from cid_etl_spark.queries._registry import _register
+from cid_etl_spark.queries._registry import _register, scratch_dir
 
 # ---------------------------------------------------------------------------
 # R2-continuation: model-based quality filtering (north-star extension)
@@ -217,17 +217,14 @@ def zorder_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the layout round-trip is lossless, which is the property
     that lets a 100 TB lake adopt the layout without a correctness
     risk.  Writes land in an sf-keyed scratch dir."""
-    import hashlib
     import os
-    import tempfile
 
     from cid_etl_spark.sources.sinks import zorder_write
 
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     ).withColumn("__hr", F.hour("ts").cast("bigint"))
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"cid_etl_zorder_{key}", "events_z")
+    path = os.path.join(scratch_dir(sf_dir, "zorder"), "events_z")
     zorder_write(e, "user_id", "__hr", path, n_files=8)
     z = spark.read.parquet(path)
     return (
@@ -1065,14 +1062,8 @@ def binaryfile_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     miss into a loud read failure — see that helper's docstring).
     In production the media lake already lives on shared/object
     storage and this fixture stage doesn't exist at all."""
-    import hashlib
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    media_dir = os.path.join(tempfile.gettempdir(), f"cid_etl_binmedia_{key}")
-    os.makedirs(media_dir, exist_ok=True)
+    media_dir = scratch_dir(sf_dir, "binmedia")
 
     def _write_assets(rows):
         import hashlib as _hl
@@ -1134,13 +1125,7 @@ def media_real_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the Rec.601 mean luma from the id formulas — a hash match
     therefore proves actual pixel-level decode (IHDR parse, inflate,
     unfilter, luma average), not plumbing."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    media_dir = os.path.join(tempfile.gettempdir(), f"cid_etl_realpng_{key}")
-    os.makedirs(media_dir, exist_ok=True)
+    media_dir = scratch_dir(sf_dir, "realpng")
 
     def _write_pngs(rows):
         import os as _os
@@ -1208,13 +1193,7 @@ def media_real_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sample| makes the true RMS exactly amplitude/32768, so the oracle
     recomputes every output column from first principles; a hash match
     proves genuine RIFF header + PCM frame decode."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    media_dir = os.path.join(tempfile.gettempdir(), f"cid_etl_realwav_{key}")
-    os.makedirs(media_dir, exist_ok=True)
+    media_dir = scratch_dir(sf_dir, "realwav")
 
     def _write_wavs(rows):
         import os as _os
@@ -1687,13 +1666,10 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     make this a metadata operation (no rewrite of batch 1); the score
     itself is a deterministic logistic of n_chars so both engines
     replay it."""
-    import hashlib
     import os
-    import tempfile
 
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cid_etl_evolve_{key}")
+    base = scratch_dir(sf_dir, "evolve")
     v1 = d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang", "n_chars")
     v2 = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id",
@@ -1745,13 +1721,10 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction that loses rows) hash-mismatches.  At 100 TB the same
     job runs per partition-directory with a target-bytes heuristic
     instead of a fixed 4."""
-    import hashlib
     import os
-    import tempfile
 
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cid_etl_compact_{key}")
+    base = scratch_dir(sf_dir, "compact")
     frag_dir = os.path.join(base, "fragmented")
     tidy_dir = os.path.join(base, "compacted")
     d.repartition(64).write.mode("overwrite").parquet(frag_dir)
@@ -2125,10 +2098,6 @@ def quarantine_split_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes to its own directory), zero joins; the same gate in front
     of a 100 TB feed is what keeps one malformed batch from poisoning
     the lake."""
-    import hashlib
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     judged = d.select(
         "doc_id",
@@ -2144,8 +2113,7 @@ def quarantine_split_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "valid",
         ).otherwise("quarantine"),
     )
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cid_etl_quarantine_{key}")
+    base = scratch_dir(sf_dir, "quarantine")
     judged.write.mode("overwrite").partitionBy("bucket").parquet(base)
     back = spark.read.parquet(base)
     return back.groupBy("bucket").agg(

@@ -3,6 +3,7 @@ and md5-verified similarity twins (Z)."""
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +34,7 @@ from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
-from cid_etl_spark.queries._registry import _register
+from cid_etl_spark.queries._registry import _register, scratch_dir
 
 # ---------------------------------------------------------------------------
 # Z. Driver-visible source/sink round-trips + CID pipeline golden run
@@ -43,17 +44,6 @@ from cid_etl_spark.queries._registry import _register
 #    reader capabilities — the Spark side must round-trip the bytes and
 #    land back on exactly the parquet content for the hash to match.)
 # ---------------------------------------------------------------------------
-
-
-def _scratch_dir(sf_dir: str, leaf: str) -> str:
-    """Deterministic per-sf scratch location for sink round-trips
-    (kept out of the read-only testdata tree)."""
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join("/tmp", "cid_etl_spark_scratch", tag, leaf)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    return path
 
 
 @_register(
@@ -80,7 +70,7 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    out = _scratch_dir(sf_dir, "nation_quoted.csv")
+    out = os.path.join(scratch_dir(sf_dir, "csv_sink"), "nation_quoted.csv")
     write_csv_single(nation, out, sep=";", quote_all=True, bom=True)
     raw = read_csv_robust(spark, out)
     renamed = raw.toDF("n_nationkey", "n_name", "n_regionkey")  # P2 fallback
@@ -126,14 +116,15 @@ def csv_dialect_latin1_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("key"),
         F.upper("n_name").alias("val"),
     )
-    comma_dir = _scratch_dir(sf_dir, "nation_comma_dir") + "_d"
+    base = scratch_dir(sf_dir, "csv_dialect")
+    comma_dir = os.path.join(base, "nation_comma")
     write_csv(comma_df, comma_dir, sep=",", quote_all=False, encoding="UTF-8")
 
     latin_df = nation.select(
         F.col("n_nationkey").alias("key"),
         F.concat(F.col("n_name"), F.lit(" - São_ç")).alias("val"),
     )
-    latin_dir = _scratch_dir(sf_dir, "nation_latin1_dir") + "_d"
+    latin_dir = os.path.join(base, "nation_latin1")
     write_csv(latin_df, latin_dir, sep=";", quote_all=True, encoding="iso-8859-1")
 
     back_comma = read_csv_robust(spark, comma_dir).select(
@@ -167,8 +158,6 @@ def csv_plain_scan_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side of the trip breaks the hash.  (The comma embedded in
     ``detail`` exercises the quote path of the plain dialect — a
     reader that naively splits on ',' shears the column.)"""
-    import os as _os
-
     from cid_etl_spark.sources.csv import find_file_by_fragment, read_csv_default
     from cid_etl_spark.sources.sinks import write_csv_single
 
@@ -178,9 +167,10 @@ def csv_plain_scan_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name"), F.lit(", zone "), F.col("n_regionkey").cast("string")
         ).alias("detail"),
     )
-    out = _scratch_dir(sf_dir, "CID10_NACOES_plain.csv")
+    base = scratch_dir(sf_dir, "csv_plain")
+    out = os.path.join(base, "CID10_NACOES_plain.csv")
     write_csv_single(nation, out, sep=",", quote_all=False, bom=False)
-    found = find_file_by_fragment(_os.path.dirname(out), "nacoes")
+    found = find_file_by_fragment(base, "nacoes")
     raw = read_csv_default(spark, found)
     return raw.select(F.col("n_nationkey").cast("int"), "detail")
 
@@ -383,11 +373,10 @@ def cid_pipeline_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     blank-4th-char SUBCAT ('C02 ' → bare C02), and a subcategory whose
     category has no covering range (Z99.0 → NULL hierarchy)."""
     import csv as _csv
-    import os
 
     from cid_etl_spark.plans.cid_pipeline import run_etl_from_datasus_dir
 
-    fixture_dir = os.path.dirname(_scratch_dir(sf_dir, "cid_golden/x"))
+    fixture_dir = scratch_dir(sf_dir, "cid_golden")
     for fname, (header, rows) in _CID_GOLDEN_FIXTURE.items():
         with open(
             os.path.join(fixture_dir, fname), "w", newline="", encoding="latin-1"

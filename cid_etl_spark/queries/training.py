@@ -41,7 +41,7 @@ from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
-from cid_etl_spark.queries._registry import _register
+from cid_etl_spark.queries._registry import _register, scratch_dir
 from cid_etl_spark.queries.roundtrips import _minhash_verified_sql, minhash_lsh_verified
 
 # ---------------------------------------------------------------------------
@@ -1352,17 +1352,12 @@ def partitioned_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip is lossless.  The write lands in a scratch dir keyed by
     sf so concurrent scales don't collide; at 100 TB this shape is the
     difference between reading one directory and reading the lake."""
-    import hashlib
     import os
-    import tempfile
 
     from cid_etl_spark.sources.sinks import write_parquet_partitioned
 
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"cid_etl_lake_{key}", "documents_by_lang"
-    )
+    path = os.path.join(scratch_dir(sf_dir, "lake"), "documents_by_lang")
     write_parquet_partitioned(d, path, partition_by="lang")
     lake = spark.read.parquet(path)
     return (

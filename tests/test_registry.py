@@ -1,0 +1,63 @@
+"""Registry machinery: the freshness ladder read from
+``CORRECTNESS_rNN.json`` files, the order it induces, and the per-input
+scratch directories of queries that write files.  No Spark session.
+"""
+
+from __future__ import annotations
+
+import json
+import tempfile
+from pathlib import Path
+
+from cid_etl_spark.queries._registry import (
+    _ORACLE,
+    _SPARK,
+    _ordered_names,
+    _verified_rounds,
+    scratch_dir,
+)
+
+
+def _write_round(root: Path, name: str, rows: dict) -> None:
+    (root / name).write_text(json.dumps(
+        {n: {"hash_match": hm} for n, hm in rows.items()}
+    ))
+
+
+def test_ladder_orders_rounds_numerically_and_keeps_only_green(tmp_path):
+    assert _verified_rounds(tmp_path) == []
+    _write_round(tmp_path, "CORRECTNESS_r10.json", {"c": True})
+    _write_round(tmp_path, "CORRECTNESS_r2.json", {"a": True, "b": False})
+    _write_round(tmp_path, "CORRECTNESS_r01.json", {"b": True, "x": None})
+    _write_round(tmp_path, "CORRECTNESS_r03_draft.json", {"z": True})
+    assert _verified_rounds(tmp_path) == [
+        frozenset({"b"}), frozenset({"a"}), frozenset({"c"}),
+    ]
+
+
+def test_order_with_an_empty_ladder_is_registration_order():
+    oracled = [n for n in _SPARK if n in _ORACLE]
+    rows_only = [n for n in _SPARK if n not in _ORACLE]
+    assert _ordered_names([], ()) == oracled + rows_only
+
+
+def test_order_puts_priority_then_unverified_then_stalest():
+    oracled = [n for n in _SPARK if n in _ORACLE]
+    p, new, old, fresh = oracled[5], oracled[:3], oracled[3], oracled[4]
+    ladder = [frozenset({old, fresh, p}), frozenset({fresh})]
+    order = _ordered_names(ladder, (p,))
+    assert order[0] == p
+    assert order[1:4] == new
+    tail = [n for n in order if n in (old, fresh)]
+    assert tail == [old, fresh]
+
+
+def test_scratch_dir_keys_on_the_whole_input_path(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    a = scratch_dir("/srv/testdata/sf0.01", "csv_sink")
+    b = scratch_dir("perfbench/data/sf0.01", "csv_sink")
+    assert a != b
+    assert scratch_dir("/srv/testdata/sf0.01", "csv_sink") == a
+    assert scratch_dir("/srv/testdata/sf0.01", "csv_plain") != a
+    for d in (a, b):
+        assert Path(d).is_dir() and Path(d).parent == tmp_path
