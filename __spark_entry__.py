@@ -49,9 +49,9 @@ def oracle_sql() -> dict[str, str]:
 def rows_only_verified_by() -> dict[str, str]:
     """rows-only query name -> the oracled twin (driver-green
     rows+schema+hash) that certifies it.  Scope differs by family:
-    the minhash/simhash rows differ from their twins ONLY in hash
-    family (xxhash64/siphash vs md5), so the twin certifies the full
-    pipeline; content_fingerprints' winnowing column is a numpy
+    the minhash/simhash rows run the same dedup pipeline as their twins
+    and differ ONLY in the base-hash argument of the one signer
+    (pandas siphash vs md5), so the twin certifies the full pipeline; content_fingerprints' winnowing column is a numpy
     rolling-hash Arrow UDF whose algorithm the md5 twin proves in SQL
     and whose implementation is pinned bit-for-bit to a pure-Python
     reference in tests; the four similarity rows (cosine_topk_lsh/ivf,

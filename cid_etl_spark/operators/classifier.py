@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cid_etl_spark.functions.text import tokens
+from cid_etl_spark.operators.dedup import md5_base_hash
 
 #: Number of hash buckets (feature-space dimensionality).
 BUCKETS = 4096
@@ -45,9 +46,9 @@ ALPHA = 4.0
 
 
 def _token_bucket(tok: Column) -> Column:
-    """Feature hash bucket: 28-bit md5-prefix hash mod BUCKETS
-    (engine-replicable; same base hash as operators.dedup.md5_base_hash)."""
-    return F.conv(F.substring(F.md5(tok), 1, 7), 16, 10).cast("long") % BUCKETS
+    """Feature hash bucket: the 28-bit md5-prefix hash mod BUCKETS
+    (engine-replicable)."""
+    return md5_base_hash(tok) % BUCKETS
 
 
 def _bucket_weight(bucket: Column) -> Column:

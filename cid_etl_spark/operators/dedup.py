@@ -10,14 +10,21 @@ SimHash, and n-gram Jaccard near-dup.  All are shuffle-conscious:
   shuffle on (band, bucket-signature) — only documents that collide in
   some band are ever compared, which is what makes near-dup feasible
   on 100 TB.
-- All hashing is deterministic (``xxhash64``/``md5``-derived), so runs
-  are reproducible across clusters and match SQL oracles.
+- All hashing is deterministic (``xxhash64``, siphash or
+  ``md5``-derived), so runs are reproducible across clusters; the md5
+  family is what SQL oracles replay.
+- There is one MinHash signer (:func:`minhash_signature_table_arrow`),
+  one SimHash signer (:func:`simhash_table_arrow`) and one banding
+  routine (:func:`lsh_candidate_pairs`); each signer takes the
+  base-hash family (``siphash`` or ``md5``).
 """
 
 from __future__ import annotations
 
 import logging
+import re
 from collections.abc import Sequence
+from hashlib import md5
 
 import pandas as pd
 
@@ -127,50 +134,22 @@ def shingles(text: Column | str, n: int = 5, words: bool = True) -> Column:
 
 
 def md5_base_hash(s: Column) -> Column:
-    """28-bit shingle hash from an md5 prefix — slower than xxhash64
-    but reproducible in any engine with md5 (DuckDB oracle parity:
-    ``('0x' || substr(md5(g), 1, 7))::BIGINT``)."""
+    """28-bit hash of a string column from its md5 prefix, reproducible
+    in any engine with md5 (DuckDB: ``('0x' || substr(md5(g), 1,
+    7))::BIGINT``).  The Column form of the ``md5`` base hash the Arrow
+    MinHash signer computes in Python."""
     return F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
-
-
-def minhash_signature(
-    shingle_arr: Column,
-    num_hashes: int = 64,
-    seed: int = 42,
-    base_hash=None,
-) -> Column:
-    """MinHash signature as an ``array<bigint>`` of length *num_hashes*.
-
-    Base shingle hash is ``xxhash64`` truncated to 31 bits (JVM-side,
-    deterministic) unless *base_hash* (Column→Column) overrides it —
-    pass :func:`md5_base_hash` when an external engine must replay the
-    signature bit-for-bit; each permutation is a universal hash
-    ``(a*h + b) mod 2^31-1`` evaluated with ``F.transform`` /
-    ``F.array_min`` — all codegen, no Python in the row path.
-    """
-    if base_hash is None:
-        base_hash = lambda s: F.xxhash64(s).bitwiseAND(  # noqa: E731
-            F.lit(_MERSENNE_31).cast("bigint")
-        )
-    base = F.transform(shingle_arr, base_hash)
-    mins = [
-        F.array_min(
-            F.transform(base, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE_31))
-        )
-        for a, b in _hash_params(num_hashes, seed)
-    ]
-    return F.array(*mins)
 
 
 def _drop_hot_buckets(
     banded: DataFrame, max_bucket_size: int | None
 ) -> DataFrame:
-    """Hot-bucket guard shared by the banded LSH self-joins: drop
-    ``(band, bucket)`` groups larger than *max_bucket_size* — NEVER
-    silently (counts logged at WARNING) — so one degenerate bucket
+    """Hot-bucket guard of the :func:`lsh_candidate_pairs` self-join:
+    drop ``(band, bucket)`` groups larger than *max_bucket_size* —
+    NEVER silently (counts logged at WARNING) — so one degenerate bucket
     can't become a single quadratic straggler task.  The membership
     table stays LAZY on purpose: banding is cheap map work over the
-    (usually cached) signature table, while materializing it would
+    (checkpointed) signature table, while materializing it would
     round-trip the raw band-key strings through RDD serialization —
     measured ~15% of the composed pipeline's wall at sf0.1.  The guard
     costs one extra banding pass for the bucket-count check; the
@@ -203,36 +182,30 @@ def _drop_hot_buckets(
 
 
 def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    signature_col: str,
+    signed: DataFrame,
     num_bands: int = 16,
-    hash_buckets: bool = True,
     max_bucket_size: int | None = None,
+    base_hash: str = "siphash",
 ) -> DataFrame:
-    """Band the signatures and emit candidate duplicate pairs
-    ``(id_a, id_b)`` with ``id_a < id_b``.
+    """Band a MinHash signature table ``(__id, mh_0..mh_{k-1})`` (the
+    output of :func:`minhash_signature_table_arrow`) and emit candidate
+    duplicate pairs ``(id_a, id_b)`` with ``id_a < id_b``.
 
-    Rows agreeing on ALL rows-per-band values within any band land in
-    the same bucket; the self-join shuffles on the (band, bucket-hash)
-    key only.  Output is distinct pairs — verify with
-    :func:`jaccard_similarity` downstream.  ``hash_buckets=False``
-    keeps the raw band-value string as the bucket key (byte-identical
-    across engines, for oracle replay) instead of xxhash64-ing it —
-    same candidate set modulo hash collisions, fatter shuffle key.
+    Rows agreeing on all ``k // num_bands`` signature values of any band
+    land in the same bucket; the self-join shuffles on the (band,
+    bucket) key only.  Output is distinct pairs — verify with
+    :func:`jaccard_similarity` downstream.  The bucket key follows the
+    signature's *base_hash* family: a multi-argument ``xxhash64`` over
+    the band's columns for ``siphash``, and the raw comma-joined value
+    string for ``md5`` (byte-identical across engines, so a SQL oracle
+    replays the banding exactly).
 
     **Hot-bucket guard.**  The within-bucket self-join is quadratic in
     bucket size, so ONE degenerate band bucket (boilerplate-heavy
     corpus: thousands of docs agreeing on a band) turns into a single
     straggler task emitting billions of pairs.  With *max_bucket_size*
-    set, buckets larger than the cap are DROPPED before the join, and
-    the drop is never silent: the banded membership table stays LAZY
-    (banding is cheap map work over the usually-cached signature
-    table; materializing it would round-trip raw band keys through RDD
-    serialization — ~15% of the composed pipeline's wall at sf0.1), so
-    the guard costs one extra banding pass for the bucket-count check
-    and the dropped bucket/row counts are logged at WARNING; the
-    anti-join is added only when a hot bucket actually exists.  Docs
+    set, buckets larger than the cap are DROPPED before the join by
+    :func:`_drop_hot_buckets`, and the drop is logged at WARNING.  Docs
     in a dropped bucket still pair through their other
     ``num_bands - 1`` bands, and a bucket that hot is a near-clone
     family the EXACT dedup stage upstream already collapses.
@@ -244,32 +217,29 @@ def lsh_candidate_pairs(
     corpus produces at test SF, so fixtures never trip it and any
     firing is attributable via the WARNING log).
     """
-    sig = F.col(signature_col)
-    # bands as (band_index, hash of the band slice)
-    rows_per_band = F.floor(F.size(sig) / num_bands).cast("int")
+    _check_base_hash(base_hash)
+    num_hashes = sum(c.startswith("mh_") for c in signed.columns)
+    rows_per_band = max(num_hashes // num_bands, 1)
 
-    def band_key(b):
-        key = F.concat_ws(
-            ",",
-            F.transform(
-                F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                lambda v: v.cast("string"),
+    def band_key(b: int) -> Column:
+        cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
+        if base_hash == "md5":
+            return F.concat_ws(",", *[c.cast("string") for c in cols])
+        return F.xxhash64(*cols)
+
+    banded = _drop_hot_buckets(
+        signed.select(
+            "__id",
+            F.posexplode(F.array(*[band_key(b) for b in range(num_bands)])).alias(
+                "band", "bucket"
             ),
-        )
-        return F.xxhash64(key) if hash_buckets else key
-
-    banded = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(num_bands - 1)), band_key)
-        ).alias("band", "bucket"),
+        ),
+        max_bucket_size,
     )
-    banded = _drop_hot_buckets(banded, max_bucket_size)
-    left = banded.alias("l")
-    right = banded.alias("r")
+    l, r = banded.alias("l"), banded.alias("r")
     return (
-        left.join(
-            right,
+        l.join(
+            r,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bucket") == F.col("r.bucket"))
             & (F.col("l.__id") < F.col("r.__id")),
@@ -286,32 +256,44 @@ def jaccard_similarity(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+#: Java's default ``\s`` class, which :func:`shingles` splits on
+#: (``split(text, '\\s+')``); Python's unicode ``\s`` is wider.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _word_grams(t: str | None, n: int) -> list[str]:
+    """:func:`shingles` ``(text, n)`` in Python, element for element,
+    given ``t = lower(trim(text))``: split on Java ``\\s+`` keeping
+    empty edge tokens, join each *n*-token window with ``' '`` (one
+    gram of all tokens when there are at most *n*), keep distinct grams
+    in first-seen order.  NULL yields ``[""]``, as it does in Spark
+    (``size(split(NULL))`` is NULL, so ``shingles`` slices nothing and
+    ``concat_ws`` of that is the empty string)."""
+    toks = _JAVA_WS.split(t) if t is not None else []
+    if len(toks) > n:
+        grams = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
+    else:
+        grams = [" ".join(toks)]
+    return list(dict.fromkeys(grams))
+
+
 def _gram_hashes_exploded(texts, n: int) -> "tuple":
-    """Distinct word-n-gram hashes per text, replicating EXACTLY the
-    tokenization of :func:`shingles` (and therefore of the DuckDB
-    oracles written against it): ``lower`` → trim *spaces only* →
-    split on Java ``\\s+`` keeping empty edge tokens → n-gram join with
-    ``' '`` → distinct.  The only difference is that each gram leaves
-    the batch as a 64-bit deterministic hash
-    (``pandas.util.hash_array`` siphash) instead of a string.
+    """Distinct word-n-gram hashes per text, over the grams of
+    :func:`shingles` (:func:`_word_grams` after ``lower`` → trim
+    *spaces only*), each leaving the batch as a 64-bit deterministic
+    hash (``pandas.util.hash_array`` siphash) instead of a string.
+    NULL text contributes no rows.
 
     Returns ``(flat: uint64 ndarray, lens: int64 ndarray)``.
     """
-    import re
-
     import numpy as np
 
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java regex \s, not Python unicode \s
     all_grams: list = []
     lens = np.zeros(len(texts), dtype=np.int64)
     for i, t in enumerate(texts):
         if not isinstance(t, str):
-            continue  # null text: shingles() yields null, explode drops it
-        toks = ws.split(t.lower().strip(" "))
-        if len(toks) > n:
-            grams = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
-        else:
-            grams = [" ".join(toks)]
+            continue
+        grams = _word_grams(t.lower().strip(" "), n)
         h = np.unique(pd.util.hash_array(np.asarray(grams, dtype=object)))
         all_grams.append(h)
         lens[i] = len(h)
@@ -573,36 +555,6 @@ def ngram_jaccard_pairs_prefix(
     return verified.select("id_a", "id_b", "jaccard")
 
 
-def minhash_signature_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 5,
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures as ``(id, mh_0..mh_{k-1})`` columns via
-    explode + hash aggregate — the scale path.
-
-    Array higher-order functions (transform/aggregate) are interpreted
-    per element outside whole-stage codegen; exploding the shingles
-    and taking ``k`` plain ``min()`` aggregates keeps everything in
-    codegen with map-side partial aggregation, so the shuffle carries
-    one row per document, not per shingle.  (~6× faster than the
-    HOF formulation at sf0.1.)
-    """
-    sh = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(shingles(text_col, shingle_n)).alias("__shingle"),
-    )
-    h = F.xxhash64("__shingle").bitwiseAND(F.lit(_MERSENNE_31).cast("bigint"))
-    aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE_31)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_hash_params(num_hashes, seed))
-    ]
-    return sh.groupBy("__id").agg(*aggs)
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -613,57 +565,32 @@ def minhash_dedup_pairs(
     threshold: float = 0.8,
     seed: int = 42,
     max_bucket_size: int | None = None,
+    base_hash: str = "siphash",
 ) -> DataFrame:
     """End-to-end MinHash near-dup: shingle → sign → band → candidate
     pairs → exact-Jaccard verify ≥ *threshold*.
 
     Returns ``(id_a, id_b, jaccard)``.  Signatures come from
-    :func:`minhash_signature_table` (codegen'd aggregate); banding
-    hashes ``rows_per_band`` signature columns directly with a
-    multi-arg ``xxhash64`` — no array materialization at all.  The
+    :func:`minhash_signature_table_arrow` (one map-side Arrow pass) in
+    the *base_hash* family; :func:`lsh_candidate_pairs` bands them
+    (behind its hot-bucket guard when *max_bucket_size* is set).  The
     exact-verify join then moves shingle arrays for candidate rows
     only — at 100 TB that's the difference between feasible and not.
-    With *max_bucket_size* set (scale-oriented callers pass 2000;
-    the default ``None`` keeps oracle-exact uncapped semantics) the
-    band self-join runs behind the :func:`_drop_hot_buckets` guard —
-    see :func:`lsh_candidate_pairs` for the rationale and why fixtures
-    never trip it.
+    Oracle-checked callers that compare ``round(jaccard, 4)`` pass
+    ``threshold=0.0`` and apply their rounded threshold themselves.
     """
     signed = minhash_signature_table_arrow(
-        df, id_col, text_col, shingle_n, num_hashes, seed
+        df, id_col, text_col, shingle_n, num_hashes, seed, base_hash
     )
     # Materialize the signature table: it is k×8 bytes per DOCUMENT
-    # (thousands of times smaller than the corpus), while the plan
-    # below consumes it four times (both self-join sides + downstream).
-    # Without the barrier Spark recomputes the shingle+sign pipeline —
+    # (thousands of times smaller than the corpus), while the banding
+    # consumes it three times (both self-join sides + the hot-bucket
+    # guard).  Without the barrier Spark recomputes the sign pass —
     # i.e. re-reads the corpus — once per consumer.  localCheckpoint
     # rather than persist: the result is consumed lazily by the caller,
     # so a persist would pin executor storage for the session.
     signed = signed.localCheckpoint(eager=True)
-    rows_per_band = max(num_hashes // num_bands, 1)
-    band_hashes = F.array(
-        *[
-            F.xxhash64(
-                *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-            for b in range(num_bands)
-        ]
-    )
-    banded = _drop_hot_buckets(
-        signed.select("__id", F.posexplode(band_hashes).alias("band", "bucket")),
-        max_bucket_size,
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
-    )
+    pairs = lsh_candidate_pairs(signed, num_bands, max_bucket_size, base_hash)
     # candidate list is tiny (bucket collisions only) but consumed three
     # times below — materialize it so each consumer doesn't replay the
     # band self-join (localCheckpoint: released on GC, never pinned)
@@ -700,78 +627,6 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash(text: Column | str, n: int = 3, bits: int = 64) -> Column:
-    """64-bit SimHash over word n-gram features, as a BIGINT column.
-
-    Per bit: count features with that hash bit set; the fingerprint bit
-    is 1 iff more than half vote 1.  ONE ``aggregate`` pass over the
-    feature array with an array-of-counters accumulator (``bit_get``
-    extracts bits with a non-literal position); the final assembly is a
-    64-way unrolled OR of literal shifts — all codegen, no Python.
-    """
-    feats = shingles(text, n)
-    hashes = F.transform(feats, lambda s: F.xxhash64(s))
-    total = F.size(hashes)
-    positions = F.sequence(F.lit(0), F.lit(bits - 1))
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("bigint"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(positions, lambda b: F.bit_get(h, b)),
-            lambda a, x: a + x,
-        ),
-    )
-    sig = F.lit(0).cast("bigint")
-    for i in range(bits):
-        bit = (
-            F.when(F.get(counts, i) * 2 > total, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-        )
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return sig
-
-
-def simhash_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    bits: int = 64,
-    base_hash=None,
-) -> DataFrame:
-    """SimHash fingerprints as ``(__id, __fp)`` via explode + codegen'd
-    aggregate — the scale path (same rationale as
-    :func:`minhash_signature_table`): per exploded feature row we take
-    64 plain conditional sums (literal shift positions), which
-    whole-stage-codegens and partially aggregates map-side; the
-    array-lambda formulation in :func:`simhash` is interpreted.
-    *base_hash* (Column→Column) overrides the xxhash64 feature hash —
-    pass an md5-prefix hash (with ``bits<=60``) when an external
-    engine must replay the fingerprint bit-for-bit."""
-    feats = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(shingles(text_col, n)).alias("__feat"),
-    )
-    h = base_hash(F.col("__feat")) if base_hash else F.xxhash64("__feat")
-    one = F.lit(1).cast("bigint")
-    aggs = [
-        F.sum(F.shiftrightunsigned(h, i).bitwiseAND(one)).alias(f"b{i}")
-        for i in range(bits)
-    ] + [F.count(F.lit(1)).alias("__n")]
-    counts = feats.groupBy("__id").agg(*aggs)
-    sig = F.lit(0).cast("bigint")
-    for i in range(bits):
-        bit = (
-            F.when(F.col(f"b{i}") * 2 > F.col("__n"), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-        )
-        sig = sig.bitwiseOR(F.shiftleft(bit, i))
-    return counts.select("__id", sig.alias("__fp"))
-
-
 def hamming_distance64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit fingerprints via bit_count."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -784,25 +639,19 @@ def simhash_dedup_pairs(
     max_hamming: int = 3,
     n: int = 3,
     bits: int = 64,
-    signer=None,
+    base_hash: str = "siphash",
 ) -> DataFrame:
     """SimHash near-dup pairs with pigeonhole banding.
 
-    The *bits*-wide fingerprint is split into ``max_hamming + 1``
-    chunks: two fingerprints within the Hamming budget MUST agree on
-    at least one chunk, so the self-join shuffles on (chunk_index,
-    chunk_value) only — never all-pairs — with guaranteed recall.
-    Smaller budgets → wider chunks → fewer candidate collisions.
-    *signer* overrides the fingerprint stage (default: the Arrow
-    xxhash64 signer) — e.g. an md5-based :func:`simhash_table` for
-    engine-replicable fingerprints.
+    The *bits*-wide fingerprint (:func:`simhash_table_arrow`, in the
+    *base_hash* family) is split into ``max_hamming + 1`` chunks: two
+    fingerprints within the Hamming budget MUST agree on at least one
+    chunk, so the self-join shuffles on (chunk_index, chunk_value) only
+    — never all-pairs — with guaranteed recall.  Smaller budgets →
+    wider chunks → fewer candidate collisions.
     """
-    if signer is None:
-        signer = lambda d: simhash_table_arrow(d, id_col, text_col, n)  # noqa: E731
-    fp = signer(df).select(F.col("__id"), F.col("__fp"))
-    return hamming_pairs_from_fingerprints(
-        fp, id_col="__id", fp_col="__fp", bits=bits, max_hamming=max_hamming
-    )
+    fp = simhash_table_arrow(df, id_col, text_col, n, bits, base_hash)
+    return hamming_pairs_from_fingerprints(fp, bits=bits, max_hamming=max_hamming)
 
 
 def hamming_pairs_from_fingerprints(
@@ -865,26 +714,59 @@ def hamming_pairs_from_fingerprints(
     )
 
 
-def _shingle_hashes_py(texts, n: int) -> "tuple":
-    """Vectorized Python-side word-shingle hashing for the Arrow
-    signers: per text, DISTINCT word n-gram hashes (64-bit, via
-    ``pandas.util.hash_array`` — deterministic siphash, identical on
-    every executor and run).
+# ---------------------------------------------------------------------------
+# Arrow signers (MinHash, SimHash)
+# ---------------------------------------------------------------------------
+
+#: Base-hash families of the Arrow signers.  ``siphash`` (the default,
+#: ``pandas.util.hash_array``) is the fast production hash; ``md5``
+#: hashes each gram to an md5 hex prefix that any SQL engine replays
+#: (DuckDB: ``('0x' || substr(md5(g), 1, N))::BIGINT``), which is what
+#: the oracle-checked near-dup queries sign with.
+_BASE_HASHES = ("siphash", "md5")
+
+
+def _check_base_hash(base_hash: str) -> None:
+    if base_hash not in _BASE_HASHES:
+        raise ValueError(f"base_hash must be one of {_BASE_HASHES}, got {base_hash!r}")
+
+
+def _shingle_hashes_py(texts, n: int, base_hash: str, md5_digits: int) -> "tuple":
+    """Per-text word-shingle hashes for the Arrow signers over
+    ``lower(trim(text))`` values *texts*:
+
+    - ``siphash``: tokens from ``str.split()``, each gram hashed to 64
+      bits, DISTINCT hashes per text; a text without tokens (NULL,
+      blank) has no grams.
+    - ``md5``: the grams of :func:`shingles` exactly
+      (:func:`_word_grams`), each hashed to the integer value of its
+      md5's first *md5_digits* hex digits — the same grams and hashes
+      a SQL twin computes.
 
     Rationale: Spark's array higher-order functions (transform /
     concat_ws-over-slice / array_distinct) evaluate INTERPRETED per
     element — measured ~0.4 ms/doc just to build shingle arrays, which
-    dominated minhash/simhash wall time.  Tokenizing and joining in
-    Python then hashing one flat numpy array is ~10× cheaper and keeps
-    the whole feature pipeline inside the same Arrow batch.
+    dominated minhash/simhash wall time.  Tokenizing and hashing in
+    Python keeps the whole feature pipeline inside one Arrow batch.
 
     Returns ``(flat_hashes: uint64 ndarray, lens: int64 ndarray)`` —
-    the concatenated per-text distinct hashes and each text's count.
+    the concatenated per-text hashes and each text's count.
     """
     import numpy as np
 
-    all_grams: list[np.ndarray] = []
     lens = np.zeros(len(texts), dtype=np.int64)
+    if base_hash == "md5":
+        shift = 64 - 4 * md5_digits
+        hashes: list[int] = []
+        for i, t in enumerate(texts):
+            grams = _word_grams(t, n)
+            lens[i] = len(grams)
+            hashes.extend(
+                int.from_bytes(md5(g.encode()).digest()[:8], "big") >> shift
+                for g in grams
+            )
+        return np.array(hashes, dtype=np.uint64), lens
+    all_grams: list[np.ndarray] = []
     for i, t in enumerate(texts):
         toks = t.split() if isinstance(t, str) else []
         if len(toks) >= n:
@@ -892,7 +774,6 @@ def _shingle_hashes_py(texts, n: int) -> "tuple":
         elif toks:
             grams = [" ".join(toks)]
         else:
-            lens[i] = 0
             continue
         h = np.unique(pd.util.hash_array(np.asarray(grams, dtype=object)))
         all_grams.append(h)
@@ -910,30 +791,31 @@ def minhash_signature_table_arrow(
     shingle_n: int = 5,
     num_hashes: int = 64,
     seed: int = 42,
+    base_hash: str = "siphash",
 ) -> DataFrame:
-    """MinHash signatures, Arrow path: the whole feature pipeline —
-    tokenize, shingle, hash, k permutation-mins — runs vectorized
-    inside ONE ``mapInPandas`` pass; the Spark plan is a trivial
-    ``lower(trim(text))`` projection.
+    """MinHash signatures ``(__id, mh_0..mh_{k-1})``: the whole feature
+    pipeline — tokenize, shingle, hash, k permutation-mins — runs
+    vectorized inside ONE ``mapInPandas`` pass; the Spark plan is a
+    trivial ``lower(trim(text))`` projection.
 
-    Structural wins over the explode+groupBy formulation
-    (:func:`minhash_signature_table`):
+    Each permutation is the universal hash ``(a·h + b) mod 2^31-1``
+    with LCG-derived ``(a, b)`` (:func:`_hash_params`) over a base gram
+    hash *h*: siphash truncated to 31 bits, or for ``base_hash="md5"``
+    the 28-bit md5 prefix a SQL twin replays bit for bit.  MinHash
+    guarantees hold for any uniform base hash.
 
-    - **No shuffle at all**: each document's signature is computed
-      where the document lives — signing is fully map-side.
+    - **No shuffle**: each document's signature is computed where the
+      document lives — signing is fully map-side.
     - **No codegen bomb**: ``k`` separate ``min()`` aggregates compile
       a huge Janino function (~9 s cold at k=32 — measured).
     - **No interpreted HOFs**: Spark's array lambdas evaluate per
       element outside codegen (~0.4 ms/doc for shingling alone —
       measured); the numpy path hashes one flat array per batch and
       takes segment minima with ``np.minimum.reduceat``.
-
-    Signature values differ from :func:`minhash_signature_table` (a
-    different 64-bit base hash), but MinHash guarantees hold for any
-    uniform hash; downstream Jaccard verification is exact either way.
     """
     import numpy as np
 
+    _check_base_hash(base_hash)
     params = _hash_params(num_hashes, seed)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
@@ -950,7 +832,9 @@ def minhash_signature_table_arrow(
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
-            flat, lens = _shingle_hashes_py(pdf["__t"].tolist(), shingle_n)
+            flat, lens = _shingle_hashes_py(
+                pdf["__t"].tolist(), shingle_n, base_hash, md5_digits=7
+            )
             # 31-bit base hash keeps a*h in int64 range
             flat = (flat & np.uint64(_MERSENNE_31)).astype(np.int64)
             keep = lens > 0
@@ -968,15 +852,26 @@ def minhash_signature_table_arrow(
 
 
 def simhash_table_arrow(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, bits: int = 64
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    bits: int = 64,
+    base_hash: str = "siphash",
 ) -> DataFrame:
-    """SimHash fingerprints, Arrow path (same design as
+    """SimHash fingerprints ``(__id, __fp)`` (same design as
     :func:`minhash_signature_table_arrow`): tokenize + shingle + hash +
-    64 per-bit majority votes all inside one vectorized ``mapInPandas``
-    pass over ``lower(trim(text))``.  Fully map-side, no shuffle, no
-    interpreted array lambdas, no 64-aggregate codegen unit."""
+    *bits* per-bit strict-majority votes all inside one vectorized
+    ``mapInPandas`` pass over ``lower(trim(text))``.  Fully map-side,
+    no shuffle, no interpreted array lambdas, no 64-aggregate codegen
+    unit.  ``base_hash="md5"`` votes over 60-bit md5-prefix feature
+    hashes (so *bits* ≤ 60, and ``1 << 59`` stays in BIGINT in every
+    engine) — the fingerprint a SQL twin replays bit for bit."""
     import numpy as np
 
+    _check_base_hash(base_hash)
+    if base_hash == "md5" and bits > 60:
+        raise ValueError(f"md5 SimHash features are 60 bits wide, got bits={bits}")
     prepped = df.select(
         F.col(id_col).alias("__id"), F.lower(F.trim(F.col(text_col))).alias("__t")
     )
@@ -987,7 +882,9 @@ def simhash_table_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            flat, lens = _shingle_hashes_py(pdf["__t"].tolist(), n)
+            flat, lens = _shingle_hashes_py(
+                pdf["__t"].tolist(), n, base_hash, md5_digits=15
+            )
             fps = np.zeros(len(pdf), dtype=np.uint64)
             keep = lens > 0
             if keep.any():
@@ -1004,10 +901,3 @@ def simhash_table_arrow(
             )
 
     return prepped.mapInPandas(sign, schema=f"__id {id_field}, __fp bigint")
-
-
-def md5_base_hash_60(s):
-    """60-bit feature hash from an md5 prefix (SimHash variant of
-    :func:`md5_base_hash`): wide enough for bit votes, narrow enough
-    that ``1 << 59`` stays in BIGINT in every engine."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")

@@ -81,9 +81,17 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 
 
 #: Rows to put at the very front of the next driver window (changed
-#: plans, suspect rows).  Empty: without an entry here the window is
-#: the never-verified rows, then the stalest green rows.
-_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = ()
+#: plans, suspect rows).  Without an entry here the window is the
+#: never-verified rows, then the stalest green rows.  Current entries:
+#: the oracled rows whose md5 MinHash/SimHash signing moved onto the
+#: Arrow signers (last hash-verified in rounds 8-12).
+_DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
+    "minhash_lsh_verified",
+    "lsh_recall_report",
+    "neardup_curation_pipeline",
+    "pretraining_data_pipeline",
+    "simhash_pairs_verified",
+)
 
 
 def _ordered_names(
@@ -130,12 +138,19 @@ def _ordered_names(
 #: rows-only check), each mapped to the driver-green row that certifies
 #: it, with the honest scope of that certification (ADVICE r4 #1):
 #:
-#: - ``minhash_lsh_pairs`` / ``simhash_pairs`` differ from their twins
-#:   ONLY in hash family (xxhash64/siphash production hashes vs md5,
-#:   which DuckDB can replay) — the twin certifies the full
-#:   shingle/band/verify pipeline end-to-end, and the banding stage's
-#:   recall/precision against exact ground truth is itself an
-#:   oracle-checked quantity since round 5 (``lsh_recall_report``).
+#: - ``minhash_lsh_pairs`` / ``simhash_pairs`` call the same
+#:   operators.dedup pipeline as their twins (``minhash_dedup_pairs`` /
+#:   ``simhash_dedup_pairs``).  The code paths differ ONLY in the
+#:   base-hash argument of the one signer: pandas siphash for
+#:   production speed vs md5, which DuckDB can replay (for MinHash the
+#:   family also picks the band key, xxhash64 vs the raw value string).
+#:   Shingle width, hash/band counts and thresholds are arguments.  The
+#:   twin certifies the shingle/sign/band/verify pipeline end-to-end,
+#:   and the banding stage's recall/precision against exact ground
+#:   truth is itself oracle-checked (``lsh_recall_report``).  What no
+#:   twin sees is the siphash tokenizer (``str.split``, not the Java
+#:   ``\s+`` split of ``shingles()``); tests/test_dedup.py covers it
+#:   on planted duplicates.
 #: - ``content_fingerprints``'s winnowing column runs a numpy
 #:   rolling-hash Arrow UDF (round 5: the interpreted-lambda expression
 #:   took 68 s at sf0.1; the vectorized path takes <1 s).  The md5 twin

@@ -4,8 +4,6 @@ text, similarity and as-of/multimodal/array query registrations
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -16,12 +14,7 @@ from cid_etl_spark.functions.strings import (
     normalize_code,
     subcategory_or_null,
 )
-from cid_etl_spark.functions.text import (
-    mean_token_length,
-    punct_ratio,
-    token_count,
-    tokens,
-)
+from cid_etl_spark.functions.text import mean_token_length, punct_ratio, token_count
 from cid_etl_spark.functions.text import LANG_MARKERS
 from cid_etl_spark.functions.vectors import cosine_similarity
 from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
@@ -709,8 +702,9 @@ def cosine_topk_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # I. Near-dup extensions without SQL oracles (driver: rows-only check).
-#    DuckDB lacks xxhash64, so signatures can't be replicated bit-for-bit;
-#    the algorithms are unit-tested in tests/test_dedup.py instead.
+#    They sign with pandas siphash, which DuckDB lacks; their md5 twins
+#    (minhash_lsh_verified, simhash_pairs_verified) run the same
+#    pipeline under an oracle, see ROWS_ONLY_VERIFIED_BY.
 # ---------------------------------------------------------------------------
 
 

@@ -2164,10 +2164,8 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-truth join, and the division.  One-row report."""
     from cid_etl_spark.operators.dedup import (
         lsh_candidate_pairs,
-        md5_base_hash,
-        minhash_signature,
+        minhash_signature_table_arrow,
         ngram_jaccard_pairs_exact,
-        shingles,
     )
 
     from cid_etl_spark.operators.aggregates import materialize_once
@@ -2177,24 +2175,17 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TWICE — by its own count and by the true-positive join — and left
     # lazy each consumer re-ran the full derivation (the inverted-index
     # self-join for truth; shingle → md5 MinHash → band self-join for
-    # cand, the most expensive interpreted chain in this query)
+    # cand)
     truth = materialize_once(
         ngram_jaccard_pairs_exact(
             d, "doc_id", "text", n=3, threshold=0.2, block_col=None
         ).select("id_a", "id_b")
     )
-    sh = d.select(
-        "doc_id", shingles("text", n=3).alias("__grams")
-    ).withColumn(
-        "__sig",
-        minhash_signature(
-            "__grams", num_hashes=16, seed=42, base_hash=md5_base_hash
-        ),
+    signed = minhash_signature_table_arrow(
+        d, "doc_id", "text", shingle_n=3, num_hashes=16, seed=42, base_hash="md5"
     )
     cand = materialize_once(
-        lsh_candidate_pairs(
-            sh, "doc_id", "__sig", num_bands=4, hash_buckets=False
-        )
+        lsh_candidate_pairs(signed, num_bands=4, base_hash="md5")
     )
     tp = cand.join(truth, ["id_a", "id_b"])
     nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))

@@ -4,33 +4,13 @@ and md5-verified similarity twins (Z)."""
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cid_etl_spark.functions.strings import (
-    extract_root_category,
-    format_subcat,
-    normalize_code,
-    subcategory_or_null,
-)
-from cid_etl_spark.functions.text import (
-    mean_token_length,
-    punct_ratio,
-    token_count,
-    tokens,
-)
-from cid_etl_spark.functions.text import LANG_MARKERS
-from cid_etl_spark.functions.vectors import cosine_similarity
-from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
-from cid_etl_spark.operators.similarity import embedding_neardup_pairs
+from cid_etl_spark.operators.aggregates import money
+from cid_etl_spark.operators.dedup import minhash_dedup_pairs, simhash_dedup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
@@ -844,65 +824,26 @@ def _minhash_verified_sql(num_hashes: int = 16, num_bands: int = 4, seed: int = 
 @_register("minhash_lsh_verified", _minhash_verified_sql())
 def minhash_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full MinHash+LSH pipeline under a hard oracle: word-3-gram
-    shingles → 16 universal-hash minima over an md5-prefix base hash
-    (operators.dedup.md5_base_hash — engine-replicable, unlike the
-    production path's xxhash64/siphash) → 4 raw-string band keys →
-    candidate pairs → exact-Jaccard verify ≥ 0.2.  DuckDB replays
-    every stage — shingling, the (a·h+b) mod 2³¹−1 permutations with
-    the same LCG-derived constants, banding, verification — so a
-    hash-match certifies the LSH machinery end-to-end, not just its
-    final filter.  The xxhash64-based minhash_lsh_pairs remains the
-    production-speed rows-only path."""
-    from cid_etl_spark.operators.dedup import (
-        jaccard_similarity,
-        lsh_candidate_pairs,
-        md5_base_hash,
-        minhash_signature,
-        shingles,
-    )
-
+    shingles → 16 universal-hash minima over the md5-prefix base hash
+    (engine-replicable, unlike the production path's siphash) → 4
+    raw-string band keys → candidate pairs → exact-Jaccard verify ≥
+    0.2.  It is operators.dedup.minhash_dedup_pairs with
+    ``base_hash="md5"``, so DuckDB replays every stage — shingling,
+    the (a·h+b) mod 2³¹−1 permutations with the same LCG-derived
+    constants, banding, verification — and a hash-match certifies the
+    LSH machinery end-to-end, not just its final filter.  The
+    siphash-based minhash_lsh_pairs remains the production-speed
+    rows-only path."""
     d = load_table(spark, sf_dir, "documents")
-    sh = d.select(
-        F.col("doc_id"), shingles("text", n=3).alias("__grams")
-    ).withColumn(
-        "__sig",
-        minhash_signature("__grams", num_hashes=16, seed=42, base_hash=md5_base_hash),
+    # verify at 0 and apply the oracle's threshold to the ROUNDED
+    # Jaccard, as the SQL twin does
+    pairs = minhash_dedup_pairs(
+        d, "doc_id", "text", shingle_n=3, num_hashes=16, num_bands=4,
+        threshold=0.0, seed=42, base_hash="md5",
     )
-    # persist, not localCheckpoint, for the ARRAY-heavy signature table
-    # (columnar cache round-trips ~1.7x faster than RDD row serde), but
-    # release it DETERMINISTICALLY before returning: the r3 driver bench
-    # regressed 2x+ on this family because the lazy cache pinned executor
-    # storage for callers that never clear caches between queries.  The
-    # verified pair list is tiny (bounded by true near-dup density), so
-    # we materialize it eagerly while the cache is live, then unpersist.
-    sh = sh.persist()
-    try:
-        cands = lsh_candidate_pairs(
-            sh, "doc_id", "__sig", num_bands=4, hash_buckets=False
-        )
-        g = sh.select(F.col("doc_id"), F.col("__grams"))
-        verified = (
-            cands.join(
-                g.select(F.col("doc_id").alias("id_a"), F.col("__grams").alias("__ga")),
-                "id_a",
-            )
-            .join(
-                g.select(F.col("doc_id").alias("id_b"), F.col("__grams").alias("__gb")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.round(jaccard_similarity(F.col("__ga"), F.col("__gb")), 4).alias(
-                    "jaccard"
-                ),
-            )
-            .filter(F.col("jaccard") >= 0.2)
-        )
-        out = verified.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
-    return out
+    return pairs.select(
+        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
+    ).filter(F.col("jaccard") >= 0.2)
 
 
 def _simhash_verified_sql(bits: int = 60, max_hamming: int = 3) -> str:
@@ -958,23 +899,14 @@ def _simhash_verified_sql(bits: int = 60, max_hamming: int = 3) -> str:
 def simhash_pairs_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SimHash pipeline under a hard oracle: word-3-gram features →
     60-bit md5-prefix hashes (engine-replicable; the production path's
-    xxhash64/siphash stays in simhash_pairs) → strict-majority bit
+    siphash stays in simhash_pairs) → strict-majority bit
     votes → pigeonhole chunk banding → Hamming ≤ 3 verify.  DuckDB
     replays fingerprinting, banding, and verification, so a hash-match
     certifies the whole near-dup path including its guaranteed-recall
     blocking."""
-    from cid_etl_spark.operators.dedup import (
-        md5_base_hash_60,
-        simhash_dedup_pairs,
-        simhash_table,
-    )
-
     d = load_table(spark, sf_dir, "documents")
-    signer = lambda df: simhash_table(  # noqa: E731
-        df, "doc_id", "text", n=3, bits=60, base_hash=md5_base_hash_60
-    )
     pairs = simhash_dedup_pairs(
-        d, "doc_id", "text", max_hamming=3, n=3, bits=60, signer=signer
+        d, "doc_id", "text", max_hamming=3, n=3, bits=60, base_hash="md5"
     )
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int"))
 

@@ -3,33 +3,10 @@ Streaming hard-oracle rows (SURVEY 2.10)."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cid_etl_spark.functions.strings import (
-    extract_root_category,
-    format_subcat,
-    normalize_code,
-    subcategory_or_null,
-)
-from cid_etl_spark.functions.text import (
-    mean_token_length,
-    punct_ratio,
-    token_count,
-    tokens,
-)
-from cid_etl_spark.functions.text import LANG_MARKERS
-from cid_etl_spark.functions.vectors import cosine_similarity
-from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
-from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 

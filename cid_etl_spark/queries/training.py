@@ -3,41 +3,20 @@ negatives, data lake maintenance (X)."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cid_etl_spark.functions.strings import (
-    extract_root_category,
-    format_subcat,
-    normalize_code,
-    subcategory_or_null,
-)
-from cid_etl_spark.functions.text import (
-    mean_token_length,
-    punct_ratio,
-    token_count,
-    tokens,
-)
-from cid_etl_spark.functions.text import LANG_MARKERS
 from cid_etl_spark.functions.vectors import cosine_similarity
 from cid_etl_spark.operators.aggregates import (
     bucketed_cumsum,
     bucketed_row_number,
     count_if,
-    decimal_sum,
     exact_ntile,
     materialize_once,
     money,
 )
-from cid_etl_spark.operators.dedup import (
-    minhash_dedup_pairs,
-    priority_dedup,
-    simhash_dedup_pairs,
-)
-from cid_etl_spark.operators.similarity import embedding_neardup_pairs
+from cid_etl_spark.operators.dedup import minhash_dedup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
@@ -1196,13 +1175,7 @@ def pretraining_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams once and probes a broadcast benchmark gram set map-side; the
     quota is a per-source window; packing reuses the language
     partitioning.  No stage funnels through the driver."""
-    from cid_etl_spark.operators.dedup import (
-        jaccard_similarity,
-        lsh_candidate_pairs,
-        md5_base_hash,
-        minhash_signature,
-        shingles,
-    )
+    from cid_etl_spark.operators.dedup import shingles
     from cid_etl_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1222,65 +1195,33 @@ def pretraining_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_exact = Window.partitionBy(F.md5(F.col("__t"))).orderBy("doc_id")
     # materialize the deduped corpus once (r14, guide §5): exact is
-    # consumed THREE times — the signature build, the contamination
-    # gram explode, and the clean anti-join — and left lazy each
-    # consumer re-ran the scan + the full-corpus md5 window shuffle
-    # (the single biggest recompute in the r13 plan; this query was the
-    # costliest untouched path, VERDICT r13 next-round #1)
+    # consumed FOUR times — the signature build, the candidate verify,
+    # the contamination gram explode, and the clean anti-join — and
+    # left lazy each consumer re-ran the scan + the full-corpus md5
+    # window shuffle (the single biggest recompute in the r13 plan; this
+    # query was the costliest untouched path, VERDICT r13 next-round #1)
     exact = materialize_once(
         quality.withColumn("__rn", F.row_number().over(w_exact))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # persist (lazy, columnar), NOT localCheckpoint: the shingle and
-    # signature ARRAY columns compress well in the in-memory columnar
-    # cache but cost ~1.7x wall when round-tripped through RDD row
-    # serialization (measured at sf0.1: 13.5s vs 7.9s steady-state for
-    # this query).  The cache is released deterministically below (the
-    # eager pair-list checkpoint is the last consumer), so residency is
-    # per-call even for callers that never clear caches.
-    sh = (
-        exact.select("doc_id", shingles(F.col("__t"), n=3).alias("__grams"))
-        .withColumn(
-            "__sig",
-            minhash_signature(
-                "__grams", num_hashes=16, seed=42, base_hash=md5_base_hash
-            ),
-        )
-        .persist()
-    )
     # hot-bucket guard ON (explicit cap): this is the scale capstone;
     # fixtures never trip 2000 and a firing is WARNING-logged, so the
-    # uncapped DuckDB twin stays attributably faithful
-    cands = lsh_candidate_pairs(
-        sh, "doc_id", "__sig", num_bands=4, hash_buckets=False,
-        max_bucket_size=2000,
-    )
-    g = sh.select("doc_id", "__grams")
+    # uncapped DuckDB twin stays attributably faithful.  The verify runs
+    # at 0 and the oracle's threshold applies to the ROUNDED Jaccard.
     pairs = (
-        cands.join(
-            g.select(F.col("doc_id").alias("id_a"), F.col("__grams").alias("__ga")),
-            "id_a",
+        minhash_dedup_pairs(
+            exact, "doc_id", "__t", shingle_n=3, num_hashes=16, num_bands=4,
+            threshold=0.0, seed=42, max_bucket_size=2000, base_hash="md5",
         )
-        .join(
-            g.select(F.col("doc_id").alias("id_b"), F.col("__grams").alias("__gb")),
-            "id_b",
-        )
-        .filter(
-            F.round(jaccard_similarity(F.col("__ga"), F.col("__gb")), 4) >= 0.2
-        )
+        .filter(F.round("jaccard", 4) >= 0.2)
         .select("id_a", "id_b")
         # materialize before CC: the iterative rounds consume the pair
         # list repeatedly, and without the barrier each round replays
-        # the band self-join + verify (the neardup_curation_pipeline
-        # round-2 bench regression was exactly this recompute)
+        # the verify join (the neardup_curation_pipeline round-2 bench
+        # regression was exactly this recompute)
         .localCheckpoint(eager=True)
     )
-    # the eager checkpoint above was the last consumer of the signature
-    # cache — release it now so the returned (still lazy) plan pins no
-    # executor storage for callers that never clear caches (r3 driver
-    # bench regression)
-    sh.unpersist()
     cc = connected_components(pairs, "id_a", "id_b")
     dropped = cc.filter(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias("doc_id")

@@ -3,15 +3,23 @@ SURVEY §4.2.1) and the near-dup family on planted duplicates."""
 
 from __future__ import annotations
 
+import hashlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from cid_etl_spark.operators.dedup import (
+    _hash_params,
+    _word_grams,
     exact_dedup,
     jaccard_similarity,
+    lsh_candidate_pairs,
     minhash_dedup_pairs,
+    minhash_signature_table_arrow,
     priority_dedup,
     shingles,
     simhash_dedup_pairs,
+    simhash_table_arrow,
 )
 
 BASE = (
@@ -93,36 +101,117 @@ def test_lsh_hot_bucket_guard_drops_degenerate_bucket(spark):
     """10k docs sharing band 0's bucket (a boilerplate family) must NOT
     produce the ~50M quadratic pair explosion: the guard drops the hot
     bucket, and the remaining (unique-per-doc) bands pair nothing."""
-    from cid_etl_spark.operators.dedup import lsh_candidate_pairs
-
     n = 10_000
+    # signature: band 0 slice identical for ALL docs; bands 1-3 unique
+    sig = [
+        F.lit(7).cast("long"), F.lit(7).cast("long"),
+        F.col("id"), -F.col("id"),
+        F.col("id") * 2, -F.col("id") * 2,
+        F.col("id") * 3, -F.col("id") * 3,
+    ]
     df = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        # signature: band 0 slice identical for ALL docs; bands 1-3 unique
-        F.array(
-            F.lit(7).cast("long"), F.lit(7).cast("long"),
-            F.col("id"), -F.col("id"),
-            F.col("id") * 2, -F.col("id") * 2,
-            F.col("id") * 3, -F.col("id") * 3,
-        ).alias("sig"),
+        F.col("id").alias("__id"), *[c.alias(f"mh_{i}") for i, c in enumerate(sig)]
     )
-    pairs = lsh_candidate_pairs(
-        df, "doc_id", "sig", num_bands=4, max_bucket_size=100
-    )
+    pairs = lsh_candidate_pairs(df, num_bands=4, max_bucket_size=100)
     assert pairs.count() == 0
 
 
 def test_lsh_guard_keeps_small_buckets_and_none_disables(spark):
-    from cid_etl_spark.operators.dedup import lsh_candidate_pairs
-
     # 30 docs all sharing every band: under the cap, all pairs emitted
     df = spark.range(30).select(
-        F.col("id").alias("doc_id"),
-        F.array(*[F.lit(v).cast("long") for v in (1, 2, 3, 4)]).alias("sig"),
+        F.col("id").alias("__id"),
+        *[F.lit(v).cast("long").alias(f"mh_{v - 1}") for v in (1, 2, 3, 4)],
     )
-    capped = lsh_candidate_pairs(df, "doc_id", "sig", num_bands=2, max_bucket_size=100)
-    uncapped = lsh_candidate_pairs(df, "doc_id", "sig", num_bands=2, max_bucket_size=None)
+    capped = lsh_candidate_pairs(df, num_bands=2, max_bucket_size=100)
+    uncapped = lsh_candidate_pairs(df, num_bands=2, max_bucket_size=None)
     assert capped.count() == 30 * 29 // 2 == uncapped.count()
     # cap below the bucket size: everything dropped, loudly (log), not an error
-    dropped = lsh_candidate_pairs(df, "doc_id", "sig", num_bands=2, max_bucket_size=10)
+    dropped = lsh_candidate_pairs(df, num_bands=2, max_bucket_size=10)
     assert dropped.count() == 0
+
+
+# Edge cases of Spark's shingles(): NULL (-> [""]), empty, blank, a tab
+# that trim() keeps (leading empty token), CRLF, double spaces, fewer
+# than n tokens, repeated grams, non-ASCII.
+GRAM_EDGE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\tlead tab and more words here",
+    "one two\r\nthree four five",
+    "double  spaced  words  in  here",
+    "two words",
+    "a b a b a b a b",
+    "Ünïcödé STRASSE straße ΣΊΣΥΦΟΣ 東京 タワー naïve café",
+    BASE,
+]
+
+
+def _edge_frame(spark):
+    return spark.createDataFrame(
+        list(enumerate(GRAM_EDGE_TEXTS)), "doc_id long, text string"
+    )
+
+
+def test_python_word_grams_match_spark_shingles(spark):
+    df = _edge_frame(spark)
+    for n in (1, 3, 5):
+        rows = df.select(
+            "doc_id",
+            F.lower(F.trim("text")).alias("t"),
+            shingles("text", n).alias("sh"),
+        ).collect()
+        for r in rows:
+            assert _word_grams(r["t"], n) == list(r["sh"]), (n, r["doc_id"])
+    assert _word_grams(None, 3) == [""]
+
+
+def _md5_prefix(g: str, digits: int) -> int:
+    return int(hashlib.md5(g.encode("utf-8")).hexdigest()[:digits], 16)
+
+
+def _spark_grams(spark, n):
+    return {
+        r["doc_id"]: list(r["sh"])
+        for r in _edge_frame(spark)
+        .select("doc_id", shingles("text", n).alias("sh"))
+        .collect()
+    }
+
+
+def test_md5_minhash_signer_matches_python_reference(spark):
+    k, n = 8, 3
+    params = _hash_params(k, 42)
+    m = (1 << 31) - 1
+    want = {
+        i: [min((a * _md5_prefix(g, 7) + b) % m for g in grams) for a, b in params]
+        for i, grams in _spark_grams(spark, n).items()
+    }
+    signed = minhash_signature_table_arrow(
+        _edge_frame(spark), "doc_id", "text", shingle_n=n, num_hashes=k,
+        base_hash="md5",
+    ).collect()
+    got = {r["__id"]: [r[f"mh_{j}"] for j in range(k)] for r in signed}
+    assert got == want
+
+
+def test_md5_simhash_signer_matches_python_reference(spark):
+    bits, n = 60, 3
+    want = {}
+    for i, grams in _spark_grams(spark, n).items():
+        hs = [_md5_prefix(g, 15) for g in grams]
+        want[i] = sum(
+            1 << j for j in range(bits) if 2 * sum((h >> j) & 1 for h in hs) > len(hs)
+        )
+    fps = simhash_table_arrow(
+        _edge_frame(spark), "doc_id", "text", n=n, bits=bits, base_hash="md5"
+    ).collect()
+    assert {r["__id"]: r["__fp"] for r in fps} == want
+
+
+def test_signers_reject_unknown_base_hash(spark):
+    df = _edge_frame(spark)
+    with pytest.raises(ValueError):
+        minhash_signature_table_arrow(df, "doc_id", "text", base_hash="xxhash64")
+    with pytest.raises(ValueError):
+        simhash_table_arrow(df, "doc_id", "text", bits=64, base_hash="md5")
