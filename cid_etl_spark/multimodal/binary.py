@@ -6,12 +6,13 @@ Arrow-batched ``mapInPandas`` UDF signatures, per-partition batch
 shapes, partitioning discipline — AND the decode itself for the
 formats this environment can reach:
 
-- **Images**: PIL when installed; otherwise a pure-stdlib path that
-  fully decodes 8-bit non-interlaced PNG (zlib inflate + per-scanline
-  unfilter → real pixels, real mean luma, real pHash) and parses
-  JPEG SOF / GIF headers for true dimensions.
-- **Audio**: soundfile when installed; otherwise stdlib ``wave`` for
-  RIFF/WAV (real sample rate, frame count, RMS).
+- **Images**: a pure-stdlib path that fully decodes 8-bit
+  non-interlaced PNG (zlib inflate + per-scanline unfilter → real
+  pixels, real mean luma, real pHash) and parses JPEG SOF / GIF
+  headers for true dimensions (JPEG/GIF luma is NULL; only PNG gets a
+  real pHash).
+- **Audio**: stdlib ``wave`` for RIFF/WAV (real sample rate, frame
+  count, RMS).
 - **Fallback**: payloads that are not decodable media (e.g. the
   deterministic sha256 fake payloads ``attach_fake_media`` builds for
   fixture tables) take the documented deterministic stub, keeping the
@@ -50,22 +51,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-try:  # optional imaging library — real decode when present
-    from PIL import Image as _PILImage
-
-    _HAS_PIL = True
-except ImportError:  # pragma: no cover - environment-dependent
-    _PILImage = None
-    _HAS_PIL = False
-
-try:  # optional audio library — real decode when present
-    import soundfile as _soundfile
-
-    _HAS_SOUNDFILE = True
-except ImportError:  # pragma: no cover - environment-dependent
-    _soundfile = None
-    _HAS_SOUNDFILE = False
 
 #: Canonical media-row schema: opaque payload + typed metadata.
 MEDIA_SCHEMA = StructType(
@@ -249,28 +234,17 @@ def _luma(pixels) -> float:
 
 
 def _decode_image_real(payload: bytes) -> tuple[int, int, int, str | None] | None:
-    """Real image decode, best codec available: PIL when installed,
-    else the stdlib PNG/JPEG/GIF paths.  Returns None when the payload
-    is not a recognized image (caller falls back to the stub)."""
+    """Real image decode through the stdlib PNG/JPEG/GIF paths.
+    Returns None when the payload is not a recognized image (caller
+    falls back to the stub)."""
     fmt = sniff_media_format(payload)
-    if _HAS_PIL and fmt in ("png", "jpeg", "gif"):
-        img = _PILImage.open(io.BytesIO(payload))
-        import numpy as np
-
-        arr = np.asarray(img.convert("RGB"), dtype=np.uint8)
-        return (
-            img.width,
-            img.height,
-            len(img.getbands()),
-            f"{_luma(arr):.4f}",
-        )
     if fmt == "png":
         w, h, _bd, _ct, _il, ch = _png_header(payload)
         px = _png_pixels(payload)
         return w, h, ch, (f"{_luma(px):.4f}" if px is not None else None)
     if fmt == "jpeg":
         w, h, ch = _jpeg_dims(payload)
-        return w, h, ch, None  # luma needs entropy decode → PIL path
+        return w, h, ch, None  # luma needs an entropy decoder
     if fmt == "gif":
         w, h, ch = _gif_dims(payload)
         return w, h, ch, None
@@ -278,19 +252,10 @@ def _decode_image_real(payload: bytes) -> tuple[int, int, int, str | None] | Non
 
 
 def _decode_audio_real(payload: bytes) -> tuple[int, int, int, str] | None:
-    """Real audio decode: soundfile when installed, stdlib ``wave``
-    for RIFF/WAV.  Returns None for unrecognized payloads."""
+    """Real audio decode through stdlib ``wave`` for RIFF/WAV.
+    Returns None for unrecognized payloads."""
     import numpy as np
 
-    if _HAS_SOUNDFILE:
-        try:
-            data, sr = _soundfile.read(io.BytesIO(payload), dtype="float64")
-        except Exception:
-            data = None
-        if data is not None:
-            n = int(data.shape[0])
-            rms = float(np.sqrt((data**2).mean())) if n else 0.0
-            return sr, n, (n * 1000) // sr, f"{rms:.4f}"
     if sniff_media_format(payload) != "wav":
         return None
     import wave
@@ -321,33 +286,25 @@ def _phash_real(payload: bytes) -> int | None:
     signed-int64 range: bit 63 can never be set, so the value survives
     the ``phash long`` Arrow/mapInPandas schema (an unsigned 64th bit
     made pandas promote to uint64 and ArrowInvalid-crash the stage).
-    Uses PIL pixels when installed, the stdlib PNG decoder otherwise;
-    None when pixels are unreachable."""
+    Pixels come from the stdlib PNG decoder; None for any other format
+    or when pixels are unreachable."""
     import numpy as np
 
-    px = None
-    fmt = sniff_media_format(payload)
-    if _HAS_PIL and fmt in ("png", "jpeg", "gif"):
-        img = _PILImage.open(io.BytesIO(payload)).convert("L").resize((32, 32))
-        px = np.asarray(img, dtype=np.float64)
-    elif fmt == "png":
-        rgb = _png_pixels(payload)
-        if rgb is None:
-            return None
-        ch = rgb.shape[2]
-        if ch >= 3:
-            g = (
-                0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-            )
-        else:
-            g = rgb[..., 0].astype(np.float64)
-        # block-mean resample to 32×32 via index mapping (any size in)
-        h, w = g.shape
-        yi = (np.arange(32) * h) // 32
-        xi = (np.arange(32) * w) // 32
-        px = g[np.ix_(yi, xi)]
-    if px is None:
+    if sniff_media_format(payload) != "png":
         return None
+    rgb = _png_pixels(payload)
+    if rgb is None:
+        return None
+    ch = rgb.shape[2]
+    if ch >= 3:
+        g = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
+    else:
+        g = rgb[..., 0].astype(np.float64)
+    # block-mean resample to 32×32 via index mapping (any size in)
+    h, w = g.shape
+    yi = (np.arange(32) * h) // 32
+    xi = (np.arange(32) * w) // 32
+    px = g[np.ix_(yi, xi)]
     n = 32
     k = np.arange(n)
     dct_m = np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
@@ -418,8 +375,8 @@ def encode_wav_square(sample_rate: int, n_frames: int, amplitude: int) -> bytes:
 
 def decode_one_image(payload: bytes) -> tuple[int, int, int, str | None]:
     """Decode dispatch for a single image payload: real codec for
-    recognized formats (PIL when installed, stdlib PNG/JPEG/GIF paths
-    otherwise), deterministic stub for anything else."""
+    recognized formats (the stdlib PNG/JPEG/GIF paths), deterministic
+    stub for anything else."""
     real = _decode_image_real(payload)
     return real if real is not None else _decode_image_stub(payload)
 
@@ -479,8 +436,7 @@ AUDIO_FEATURES_SCHEMA = StructType(
 def _decode_audio_stub(payload: bytes) -> tuple[int, int, int, str]:
     """STUB audio decoder for NON-media payloads — deterministic fake
     waveform stats derived from the payload bytes, keeping fixture
-    oracles byte-stable.  Recognized audio (WAV, or anything soundfile
-    reads when installed) never reaches this (see
+    oracles byte-stable.  Recognized audio (WAV) never reaches this (see
     :func:`decode_one_audio`)."""
     if payload is None or len(payload) < 2:
         # the stub indexes payload[0] and payload[1]; a 0/1-byte payload
@@ -540,7 +496,7 @@ def _phash_image_stub(payload: bytes) -> int:
 
 def phash_one_image(payload: bytes) -> int:
     """pHash dispatch: real 64-bit DCT hash when pixels are reachable
-    (PIL, or the stdlib PNG decoder), content-stable stub otherwise."""
+    (the stdlib PNG decoder), content-stable stub otherwise."""
     real = _phash_real(payload)
     return real if real is not None else _phash_image_stub(payload)
 

@@ -479,8 +479,8 @@ def _range_bucketed(
     # collect-and-embed of the edges is a SERIAL job per level at
     # plan-build time (A/B-measured ~2.5× slower than lazy on every
     # dependent query — the localCheckpoint-vs-lazy precedent from r5
-    # applies to collect too).  EXCEPT inside a materialize-mode
-    # run_batch (VERDICT r7 #1): there the batch context materializes
+    # applies to collect too).  EXCEPT inside a run_batch (VERDICT
+    # r7 #1): there the batch context materializes
     # the rollup ONCE to scratch parquet and both consumer branches —
     # and any other member with the identical rollup — scan the copy;
     # the serial build-time job overlaps other members' stages, so the

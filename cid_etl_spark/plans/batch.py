@@ -1,37 +1,38 @@
 """Multi-query batch execution with shared-fragment reuse (SURVEY §7,
 VERDICT r6 #3).
 
-``run_batch`` runs a list of registered queries while persisting the
-canonical fragments (:mod:`cid_etl_spark.plans.fragments`) that at
-least two of them consume, in dependency order, and unpersisting each
-fragment at its LAST consumer — the persist/unpersist discipline the
-registry enforces per-query, lifted to a batch.
+``run_batch`` runs a list of queries after writing the canonical
+fragments (:mod:`cid_etl_spark.plans.fragments`) that at least two of
+them consume ONCE to batch-scoped scratch parquet, in dependency
+order, and deletes that scratch when the batch ends.
 
 Mechanism: queries build their hot intermediates through the shared
-fragment helpers, so a persisted fragment's canonicalized subtree is
-substituted into every member plan by Spark's ``CacheManager`` — the
+fragment helpers; inside a batch a helper whose fragment was written
+returns a scan of the parquet copy instead of re-deriving it — the
 queries themselves are batch-agnostic and keep their standalone plans
-when nothing is cached.  Probe #7 (BASELINE.md) sized the approach:
+outside a batch.  Probe #7 (BASELINE.md) sized the approach:
 fragment-level reuse measured 1.36× on four consumers sharing one
 explode, while base-table caching measured 0.89× (never done here).
 
 Batch results are row-identical to per-query runs by construction
-(caching never changes values) and pinned by
+(materializing never changes values) and pinned by
 ``tests/test_batch.py::test_run_batch_matches_per_query_results``.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from cid_etl_spark.plans import fragments as _frag
+from cid_etl_spark.session import scratch_dir
 
 #: Fragment name → builder.  Order is topological (parents before
 #: children): a child fragment's own build then reads its parent's
-#: cache through the same substitution mechanism.
+#: materialized copy through the same substitution mechanism.
 FRAGMENTS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "token_stream": _frag.token_stream,
     "doc_term_counts": _frag.doc_term_counts,
@@ -95,7 +96,7 @@ QUERY_FRAGMENTS: dict[str, tuple[str, ...]] = {
     # round 12: skip-gram pairs ride the positional leads.  (The Markov
     # chain's transition counts BUILD through user_event_seq but then
     # localCheckpoint — the subtree is hidden behind a LogicalRDD, so
-    # cache substitution can never fire and the query is deliberately
+    # fragment substitution can never fire and the query is deliberately
     # NOT declared a fragment consumer; the checkpoint's one-scan win
     # over 8 re-scans is the documented trade.)
     "skipgram_cooccurrence_topk": ("doc_token_seq",),
@@ -182,10 +183,10 @@ def plan_fragments(
     names: list[str],
     query_fragments: dict[str, tuple[str, ...]] | None = None,
 ) -> dict[str, int]:
-    """Decide which fragments a batch of *names* should persist and
-    return ``{fragment: use_count}`` for those worth caching.  A
-    fragment is worth caching when it has ≥ 2 uses, where a use is a
-    direct consumer query in the batch or a cached child fragment
+    """Decide which fragments a batch of *names* should materialize and
+    return ``{fragment: use_count}`` for those worth sharing.  A
+    fragment is worth sharing when it has ≥ 2 uses, where a use is a
+    direct consumer query in the batch or a shared child fragment
     built from it (building the child reads the parent once).
     *query_fragments* defaults to the registry's declared map; batches
     with AD-HOC members pass the map extended by batch-time derivation
@@ -285,7 +286,8 @@ AUTO_BUCKET_MIN_BYTES_DEFAULT = 256 * 1024 * 1024
 def _table_bytes(spark: SparkSession, sf_dir: str, tbl: str) -> int:
     """Total bytes of a fixture table, through the Hadoop FileSystem
     resolved from the path's own URI (works for local dirs and
-    hdfs://-style roots alike — same resolution as _scratch_dir)."""
+    hdfs://-style roots alike — same resolution as the batch scratch
+    dir)."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(
         os.path.join(sf_dir, f"{tbl}.parquet")
@@ -420,9 +422,7 @@ def run_batch(
     sf_dir: str,
     names: "list[str] | dict[str, Callable[[SparkSession, str], DataFrame]]",
     action: Callable[[DataFrame], Any] | None = None,
-    mode: str = "materialize",
     max_concurrency: int = 4,
-    scratch_root: str | None = None,
     bucket_facts: "dict[str, str | tuple[str, int]] | str | None" = "auto",
 ) -> dict[str, Any]:
     """Run a batch of queries with shared fragments reused across
@@ -436,47 +436,38 @@ def run_batch(
     return value lands in the result dict (default: a ``noop``-format
     write — full materialization, no driver collect).
 
-    Two reuse mechanisms, both A/B-measured at sf0.1:
+    Reuse mechanism: fragments with ≥2 uses are written ONCE to
+    scratch parquet and every consumer's helper call returns a SCAN of
+    the materialized copy — keeping whole-stage codegen, column
+    pruning, and predicate pushdown into the shared intermediate.  The
+    standard warehouse "materialized intermediate" pattern; at 100 TB
+    the scratch dir is distributed storage and each consumer's scan is
+    pruned to the columns/predicates it needs.  (A ``persist()`` +
+    CacheManager variant measured 0.86× of sequential against 1.27×
+    serial / 2.53× concurrent for this path — BASELINE.md round 7 —
+    and was removed.)
 
-    - ``mode="materialize"`` (default): fragments with ≥2 uses are
-      written ONCE to scratch parquet and every consumer's helper call
-      returns a SCAN of the materialized copy — keeping whole-stage
-      codegen, column pruning, and predicate pushdown into the shared
-      intermediate.  This beat the row cache on every member (probe
-      #7's InMemoryTableScan-loses-to-codegen finding applies to
-      fragments too, not just bare scans).  The standard warehouse
-      "materialized intermediate" pattern; at 100 TB the scratch dir
-      is distributed storage and each consumer's scan is pruned to
-      the columns/predicates it needs.
-    - ``mode="cache"``: ``persist()`` + CacheManager plan substitution,
-      unpersisting each fragment at its last consumer.  Kept for
-      memory-resident batches; measured ~neutral at sf0.1.
+    Members additionally run CONCURRENTLY (*max_concurrency* threads,
+    order-preserving result dict): independent queries interleave
+    their stages, so single-task stages (1-row rollups, driver-side
+    heap merges) of one query fill cores another query leaves idle —
+    the multi-query-scheduler half of the batch story.  Set
+    ``max_concurrency=1`` for strictly serial execution.  Results are
+    row-identical to per-query runs (materializing never changes
+    values; queries are independent); pinned by tests/test_batch.py.
 
-    In materialize mode members additionally run CONCURRENTLY
-    (*max_concurrency* threads, order-preserving result dict):
-    independent queries interleave their stages, so single-task stages
-    (1-row rollups, driver-side heap merges) of one query fill cores
-    another query leaves idle — the multi-query-scheduler half of the
-    batch story.  Set ``max_concurrency=1`` for strictly serial
-    execution.  Cache mode is always serial: its unpersist-at-last-
-    consumer accounting needs the member order.  Results are
-    row-identical to per-query runs in every mode
-    (caching/materializing never changes values; queries are
-    independent); pinned by tests/test_batch.py.
-
-    SCRATCH CONTRACT (the 100 TB story): materialize mode writes the
-    shared fragments under *scratch_root* — explicitly passed, else
-    ``spark.conf`` key ``spark.cid_etl.batch.scratchRoot``, else a
-    local tempdir.  On a cluster, point it at storage every executor
-    can reach (HDFS/object-store URI or a shared filesystem mount);
-    the default tempdir is only correct where driver and executors
-    share a filesystem, i.e. local mode.  An explicit root's per-batch
-    subdirectory is created and deleted through the Hadoop
-    ``FileSystem`` resolved from the root URI — the same resolution
-    the fragment writes use — so remote roots work and are cleaned up
-    (ADVICE r8 #1).  Each batch creates a unique subdirectory under
-    the root and removes exactly that subdirectory when it finishes,
-    so concurrent batches sharing one root never collide.
+    SCRATCH CONTRACT (the 100 TB story): each batch writes its shared
+    fragments and bucketed facts under its own directory,
+    ``scratch_dir(spark, "batch", <uuid>)``.  The resolver
+    (:func:`cid_etl_spark.session.scratch_dir`) puts it under the
+    session's scratch root — storage every executor can reach
+    (HDFS/object-store URI or a shared mount) — or the local tempdir
+    under a ``local[...]`` master; any other master without the
+    setting fails before a fragment is written.  The directory is
+    created and, when the batch finishes, deleted through the Hadoop
+    ``FileSystem`` resolved from its own path — the same resolution
+    the fragment writes use — so remote roots work and are cleaned
+    up, and concurrent batches sharing one root never collide.
 
     BUCKETED FACTS (round 9, VERDICT r8 #5): *bucket_facts* maps a
     fixture table to the join key the batch's members repeatedly
@@ -492,8 +483,7 @@ def run_batch(
     fragment: a bare-scan fragment would match every query's scan
     during subtree derivation, so bucketed facts are declared by key
     and substituted at the loader, invisible to derivation.  Values
-    are identical by construction (same rows, different layout);
-    materialize mode only.
+    are identical by construction (same rows, different layout).
 
     The DEFAULT is ``bucket_facts="auto"`` (round 11, VERDICT r10 #5 —
     the r10 write-layout fix flipped the feature's sf0.1 ladders
@@ -513,60 +503,14 @@ def run_batch(
     member_names, fns, qf = _resolve_members(spark, sf_dir, names)
     if bucket_facts == "auto":
         # advised by default (VERDICT r10 #5): the size gate keeps it
-        # inert below AUTO_BUCKET_MIN_BYTES; cache mode never buckets
+        # inert below AUTO_BUCKET_MIN_BYTES
         bucket_facts = (
-            advise_bucket_facts(spark, sf_dir, member_names, fns)
-            if mode == "materialize"
-            else None
-        ) or None
-    if mode == "materialize":
-        return _run_materialized(
-            spark, sf_dir, member_names, fns, qf, action,
-            max_concurrency, scratch_root, bucket_facts,
+            advise_bucket_facts(spark, sf_dir, member_names, fns) or None
         )
-    if bucket_facts:
-        raise ValueError("bucket_facts requires mode='materialize'")
-    to_cache = plan_fragments(member_names, qf)
-    # remaining consumers per fragment: queries still to run + child
-    # fragments still to materialize
-    remaining: dict[str, int] = dict(to_cache)
-    built: dict[str, DataFrame] = {}
-    # materialize parents-first so each child build hits parent caches
-    for f in to_cache:
-        df = FRAGMENTS[f](spark, sf_dir)
-        df.persist()
-        df.count()
-        built[f] = df
-        for p in FRAGMENT_PARENTS.get(f, ()):
-            if p in remaining:
-                remaining[p] -= 1
-
-    def _release_done() -> None:
-        for f in [f for f, r in remaining.items() if r <= 0]:
-            built[f].unpersist()
-            del remaining[f]
-
-    _release_done()
-    # Members run under a minimal context (no scratch, derived rollups
-    # disabled) purely so per-member eager materialization
-    # (materialize_once, r13) stands down: cache mode's whole design is
-    # that reuse comes from the persisted fragment rows, and a member
-    # checkpoint would copy data the cache already pins (and leave a
-    # transient RDD pin the caller's leak contract would see).
-    ctx = _frag.BatchContext(spark, sf_dir, scratch="", derived_enabled=False)
-    results: dict[str, Any] = {}
-    try:
-        with _frag.batch_context(ctx):
-            for n in member_names:
-                results[n] = action(fns[n](spark, sf_dir))
-                for f in qf.get(n, ()):
-                    if f in remaining:
-                        remaining[f] -= 1
-                _release_done()
-    finally:
-        for f in list(remaining):
-            built[f].unpersist()
-    return results
+    return _run_materialized(
+        spark, sf_dir, member_names, fns, qf, action,
+        max_concurrency, bucket_facts,
+    )
 
 
 def _run_members(
@@ -600,46 +544,6 @@ def _run_members(
         return {n: futures[n].result() for n in names}
 
 
-def _scratch_dir(
-    spark: SparkSession, scratch_root: str | None
-) -> tuple[str, Callable[[], None]]:
-    """Resolve this batch's unique scratch directory and return
-    ``(path, cleanup)``.  Precedence: explicit *scratch_root* argument,
-    the session conf ``spark.cid_etl.batch.scratchRoot``, a local
-    tempdir.  An EXPLICIT root is created and deleted through the
-    Hadoop ``FileSystem`` API resolved from the root's own URI (ADVICE
-    r8 #1: ``os.makedirs``/``shutil.rmtree`` are local-filesystem-only,
-    so an ``hdfs://``/``s3a://`` root either crashed at makedirs or
-    leaked the remote fragment data forever) — the same resolution
-    Spark's own writers use, so mkdir, the fragment writes, and the
-    final delete all agree on which filesystem the root names.  The
-    tempdir default stays a plain local dir: it is only correct where
-    driver and executors share a filesystem, i.e. local mode."""
-    import shutil
-    import tempfile
-    import uuid
-
-    if scratch_root is None:
-        scratch_root = spark.conf.get("spark.cid_etl.batch.scratchRoot", None)
-    if scratch_root is None:
-        path = tempfile.mkdtemp(prefix="cid_etl_batch_")
-        return path, lambda: shutil.rmtree(path, ignore_errors=True)
-    path = os.path.join(scratch_root, f"cid_etl_batch_{uuid.uuid4().hex}")
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.mkdirs(jpath):
-        raise IOError(f"could not create batch scratch dir {path}")
-
-    def cleanup() -> None:
-        try:
-            fs.delete(jpath, True)
-        except Exception:
-            pass
-
-    return path, cleanup
-
-
 def _write_bucketed_facts(
     spark: SparkSession,
     sf_dir: str,
@@ -671,8 +575,6 @@ def _write_bucketed_facts(
     ``tables`` list was never assigned on a partial failure, leaking
     catalog entries that point at the deleted scratch dir for the rest
     of the session)."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from cid_etl_spark.sources.parquet import load_table
@@ -713,7 +615,6 @@ def _run_materialized(
     qf: dict[str, tuple[str, ...]],
     action: Callable[[DataFrame], Any],
     max_concurrency: int,
-    scratch_root: str | None = None,
     bucket_facts: "dict[str, str | tuple[str, int]] | None" = None,
 ) -> dict[str, Any]:
     """Materialize ≥2-use fragments to scratch parquet under a
@@ -725,7 +626,7 @@ def _run_materialized(
     construction (ADVICE r7 #1/#3: no process-global override dict,
     no check-then-set race, no leaked scratch plans)."""
     to_share = plan_fragments(names, qf)
-    scratch, cleanup = _scratch_dir(spark, scratch_root)
+    scratch = scratch_dir(spark, "batch", uuid.uuid4().hex)
     # Derived-rollup materialization only pays when OTHER members run
     # concurrently during the write (ADVICE r8 #4: a single-member
     # batch fell into the eager path the code's own A/B shows is
@@ -758,4 +659,10 @@ def _run_materialized(
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
             except Exception:
                 pass
-        cleanup()
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(scratch)
+        try:
+            jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
+                jpath, True
+            )
+        except Exception:
+            pass

@@ -1,11 +1,11 @@
 """Canonical shared plan fragments for multi-query batches (SURVEY §7,
 rounds 7-8).
 
-Spark's ``CacheManager`` substitutes any persisted DataFrame's
-CANONICALIZED logical subtree into later queries — so cross-query reuse
-needs no plan rewriting, only that the queries build their hot
-intermediates through ONE shared helper (identical construction ⇒
-identical canonical plan ⇒ substitution fires).  Probe #7
+Cross-query reuse needs no plan rewriting, only that the queries
+build their hot intermediates through ONE shared helper: inside a
+batch the helper returns a scan of the fragment's materialized copy,
+and batch-time derivation matches ad-hoc members by CANONICALIZED
+subtree (identical construction ⇒ identical canonical plan).  Probe #7
 (BASELINE.md table; the probe script is in commit 9bd0d2c) fixed the
 design point:
 
@@ -17,14 +17,14 @@ design point:
   every token query (measured 1.36× from sharing the explode alone
   across four consumers).
 
-Standalone behavior is unchanged by construction: when nothing is
-persisted, Catalyst prunes each consumer's unused fragment columns and
+Standalone behavior is unchanged by construction: outside a batch,
+Catalyst prunes each consumer's unused fragment columns and
 pushes its filters through the fragment's aggregate keys, so each
 query's solo plan keeps its pre-refactor shape (pinned by
-tests/test_plans.py).  ``cid_etl_spark.plans.batch.run_batch`` persists
-the fragments with ≥2 uses for exactly the lifetime of their consumers.
+tests/test_plans.py).  ``cid_etl_spark.plans.batch.run_batch`` writes
+the fragments with ≥2 uses to scratch parquet for the batch's lifetime.
 
-Batch context (round 8, ADVICE r7 #1/#3): materialize-mode overrides
+Batch context (round 8, ADVICE r7 #1/#3): the batch's overrides
 used to live in a process-global dict, which (a) leaked scratch-parquet
 plans into standalone queries built concurrently with a batch and (b)
 made the overlapping-batch guard a non-atomic check-then-set.  They now
@@ -180,13 +180,11 @@ def plan_only():
     (eager ``materialize_once`` checkpoints, sizing aggregates) — the
     caller only wants the analyzed/optimized tree.
 
-    Thread-local on purpose (ADVICE r13 #4): the r13 implementation
-    toggled the process-global ``SPARK_GRAFT_PLAN_ONLY`` env var, so a
-    query concurrently building on ANOTHER thread (e.g. a
-    materialize-mode batch's worker threads) silently skipped its
-    checkpoints during the window.  The env var remains as a
-    process-level override for whole-process plan audits
-    (``tools/plan_report.py`` sets it before anything builds)."""
+    Thread-local on purpose (ADVICE r13 #4): a process-global switch
+    made a query concurrently building on ANOTHER thread (e.g. a
+    batch's worker threads) silently skip its checkpoints during the
+    window.  ``tools/plan_report.py`` wraps its whole build loop in
+    this."""
     prev = getattr(_TLS, "plan_only", False)
     _TLS.plan_only = True
     try:
@@ -197,11 +195,8 @@ def plan_only():
 
 def plan_only_active() -> bool:
     """True when the current thread is building plans only (see
-    :func:`plan_only`), or the whole process is
-    (``SPARK_GRAFT_PLAN_ONLY`` env var — plan_report/PLANS.md)."""
-    return bool(getattr(_TLS, "plan_only", False)) or bool(
-        os.environ.get("SPARK_GRAFT_PLAN_ONLY")
-    )
+    :func:`plan_only`)."""
+    return bool(getattr(_TLS, "plan_only", False))
 
 
 def _canonical_key(df: DataFrame) -> str:

@@ -19,11 +19,8 @@ for them (the math itself is covered by unit tests in tests/).
 
 from __future__ import annotations
 
-import hashlib
 import json
-import os
 import re
-import tempfile
 from collections.abc import Callable
 from pathlib import Path
 
@@ -43,18 +40,6 @@ def _register(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-def scratch_dir(sf_dir: str, family: str) -> str:
-    """Scratch directory for a query that writes files, created if
-    missing: ``<tempdir>/cid_etl_<family>_<key>``.  ``key`` is an md5
-    prefix of the whole *sf_dir*, so two inputs that share a basename
-    (``a/sf0.01`` and ``b/sf0.01``) never share files, and the root
-    follows ``TMPDIR`` through :func:`tempfile.gettempdir`."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"cid_etl_{family}_{key}")
-    os.makedirs(path, exist_ok=True)
-    return path
 
 
 #: Where the driver's per-round results live: one
@@ -83,14 +68,28 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 #: Rows to put at the very front of the next driver window (changed
 #: plans, suspect rows).  Without an entry here the window is the
 #: never-verified rows, then the stalest green rows.  Current entries:
-#: the oracled rows whose md5 MinHash/SimHash signing moved onto the
-#: Arrow signers (last hash-verified in rounds 8-12).
+#: every row that writes files, now placed by the one scratch resolver
+#: (session.scratch_dir), plus the two run_batch rows.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    "minhash_lsh_verified",
-    "lsh_recall_report",
-    "neardup_curation_pipeline",
-    "pretraining_data_pipeline",
-    "simhash_pairs_verified",
+    "csv_sink_roundtrip",
+    "csv_dialect_latin1_scan",
+    "csv_plain_scan_fragment",
+    "cid_pipeline_golden",
+    "partitioned_lake_roundtrip",
+    "zorder_lake_roundtrip",
+    "binaryfile_ingest_roundtrip",
+    "media_real_png_decode",
+    "media_real_wav_decode",
+    "schema_evolution_roundtrip",
+    "compaction_roundtrip",
+    "quarantine_split_roundtrip",
+    "stream_hourly_events",
+    "stream_sessionized_users",
+    "stream_click_attribution",
+    "stream_user_totals_stateful",
+    "stream_dedup_admission",
+    "run_batch_fragments_verified",
+    "run_batch_stats_verified",
 )
 
 

@@ -12,7 +12,8 @@ from cid_etl_spark.operators.aggregates import money
 from cid_etl_spark.sources.parquet import load_table
 
 
-from cid_etl_spark.queries._registry import _register, scratch_dir
+from cid_etl_spark.queries._registry import _register
+from cid_etl_spark.session import scratch_dir
 
 # ---------------------------------------------------------------------------
 # R2-continuation: model-based quality filtering (north-star extension)
@@ -203,7 +204,7 @@ def zorder_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     ).withColumn("__hr", F.hour("ts").cast("bigint"))
-    path = os.path.join(scratch_dir(sf_dir, "zorder"), "events_z")
+    path = os.path.join(scratch_dir(spark, "zorder", sf_dir), "events_z")
     zorder_write(e, "user_id", "__hr", path, n_files=8)
     z = spark.read.parquet(path)
     return (
@@ -987,28 +988,6 @@ def jl_projection_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", *[proj(j) for j in range(4)])
 
 
-def _materialize_fixture_files(spark: SparkSession, df: DataFrame, write_partition) -> None:
-    """Fixture-file materialization for the binaryFile ingest rows.
-
-    Executor-side ``foreachPartition`` ONLY when driver and executors
-    share a filesystem (``local[*]`` master — this container): on a
-    real cluster the writes would land on executor-local disks and the
-    driver-side ``binaryFile`` load would silently miss them (r3
-    advisor).  Off local mode we fall back to a driver-side
-    ``toLocalIterator`` write.  NOTE the fallback's honest scope
-    (ADVICE r4 #4): unless the target dir is on shared storage, the
-    driver-side listing will find the files but executor-side reads
-    will then fail with FileNotFoundException — i.e. the fallback
-    converts the silent wrong-answer into a LOUD read failure, it is
-    not a working cluster path.  A production media lake ingests files
-    that already exist on shared/object storage, so neither branch
-    carries real scale."""
-    if spark.sparkContext.master.startswith("local"):
-        df.foreachPartition(write_partition)
-    else:  # pragma: no cover - needs a multi-node cluster
-        write_partition(df.toLocalIterator())
-
-
 _BINARYFILE_SQL = r"""
     SELECT doc_id,
            CAST(64 AS BIGINT) AS n_bytes,
@@ -1034,15 +1013,15 @@ def binaryfile_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     then feed the Arrow decode stages (decode_image_features,
     perceptual_hash_images) unchanged.
 
-    The fixture files are materialized FROM THE EXECUTORS
-    (``foreachPartition``) when driver and executors share a
-    filesystem (local mode — gated by _materialize_fixture_files;
-    elsewhere a driver-side fallback turns the silent executor-local
-    miss into a loud read failure — see that helper's docstring).
-    In production the media lake already lives on shared/object
-    storage and this fixture stage doesn't exist at all."""
+    The fixture files are written FROM THE EXECUTORS
+    (``foreachPartition``) into the session's scratch dir
+    (:func:`cid_etl_spark.session.scratch_dir`), which is driver-local
+    only under a ``local[...]`` master and must be a shared mount
+    anywhere else — the resolver refuses to guess.  In production the
+    media lake already lives on shared/object storage and this fixture
+    stage doesn't exist at all."""
     d = load_table(spark, sf_dir, "documents")
-    media_dir = scratch_dir(sf_dir, "binmedia")
+    media_dir = scratch_dir(spark, "binmedia", sf_dir)
 
     def _write_assets(rows):
         import hashlib as _hl
@@ -1058,8 +1037,8 @@ def binaryfile_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 _os.replace(tmp, p)
 
-    _materialize_fixture_files(
-        spark, d.filter(F.col("doc_id") % 7 == 0).select("doc_id"), _write_assets
+    d.filter(F.col("doc_id") % 7 == 0).select("doc_id").foreachPartition(
+        _write_assets
     )
     bin_df = (
         spark.read.format("binaryFile")
@@ -1098,13 +1077,12 @@ def media_real_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions and RGB all pure functions of the doc id —
     multimodal.binary.encode_png_solid), the reader ingests them
     through Spark's binaryFile source, and decode_image_features runs
-    the real codec path (PIL when installed; the pure-stdlib zlib
-    inflate + scanline unfilter otherwise) inside the Arrow
-    mapInPandas stage.  The oracle recomputes width/height/channels
+    the real codec path (the pure-stdlib zlib inflate + scanline
+    unfilter) inside the Arrow mapInPandas stage.  The oracle recomputes width/height/channels
     AND the Rec.601 mean luma from the id formulas — a hash match
     therefore proves actual pixel-level decode (IHDR parse, inflate,
     unfilter, luma average), not plumbing."""
-    media_dir = scratch_dir(sf_dir, "realpng")
+    media_dir = scratch_dir(spark, "realpng", sf_dir)
 
     def _write_pngs(rows):
         import os as _os
@@ -1126,8 +1104,8 @@ def media_real_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _os.replace(tmp, p)
 
     d = load_table(spark, sf_dir, "documents")
-    _materialize_fixture_files(
-        spark, d.filter(F.col("doc_id") % 11 == 0).select("doc_id"), _write_pngs
+    d.filter(F.col("doc_id") % 11 == 0).select("doc_id").foreachPartition(
+        _write_pngs
     )
 
     from cid_etl_spark.multimodal.binary import decode_image_features
@@ -1168,11 +1146,11 @@ def media_real_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     square waves whose sample rate, frame count, and amplitude are
     pure functions of the doc id (encode_wav_square) — ingested via
     binaryFile and decoded by extract_audio_features' real codec path
-    (soundfile when installed, stdlib ``wave`` otherwise).  Constant
-    |sample| makes the true RMS exactly amplitude/32768, so the oracle
-    recomputes every output column from first principles; a hash match
-    proves genuine RIFF header + PCM frame decode."""
-    media_dir = scratch_dir(sf_dir, "realwav")
+    (stdlib ``wave``).  Constant |sample| makes the true RMS exactly
+    amplitude/32768, so the oracle recomputes every output column from
+    first principles; a hash match proves genuine RIFF header + PCM
+    frame decode."""
+    media_dir = scratch_dir(spark, "realwav", sf_dir)
 
     def _write_wavs(rows):
         import os as _os
@@ -1193,8 +1171,8 @@ def media_real_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _os.replace(tmp, p)
 
     d = load_table(spark, sf_dir, "documents")
-    _materialize_fixture_files(
-        spark, d.filter(F.col("doc_id") % 13 == 0).select("doc_id"), _write_wavs
+    d.filter(F.col("doc_id") % 13 == 0).select("doc_id").foreachPartition(
+        _write_wavs
     )
 
     from cid_etl_spark.multimodal.binary import extract_audio_features
@@ -1648,7 +1626,7 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     d = load_table(spark, sf_dir, "documents")
-    base = scratch_dir(sf_dir, "evolve")
+    base = scratch_dir(spark, "evolve", sf_dir)
     v1 = d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang", "n_chars")
     v2 = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id",
@@ -1703,7 +1681,7 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     d = load_table(spark, sf_dir, "documents")
-    base = scratch_dir(sf_dir, "compact")
+    base = scratch_dir(spark, "compact", sf_dir)
     frag_dir = os.path.join(base, "fragmented")
     tidy_dir = os.path.join(base, "compacted")
     d.repartition(64).write.mode("overwrite").parquet(frag_dir)
@@ -2092,7 +2070,7 @@ def quarantine_split_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "valid",
         ).otherwise("quarantine"),
     )
-    base = scratch_dir(sf_dir, "quarantine")
+    base = scratch_dir(spark, "quarantine", sf_dir)
     judged.write.mode("overwrite").partitionBy("bucket").parquet(base)
     back = spark.read.parquet(base)
     return back.groupBy("bucket").agg(

@@ -137,9 +137,8 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row action over the node-grain degree table (edges are already
     # checkpointed, so this re-runs one cheap aggregate, not the
     # basket self-join).  Plan-only consumers (PLANS.md generation,
-    # batch planning) signal via plans.fragments.plan_only (or the
-    # process-level SPARK_GRAFT_PLAN_ONLY env var) to skip the sizing
-    # job — it executes Spark work at DataFrame-CONSTRUCTION time
+    # batch planning) signal via plans.fragments.plan_only to skip
+    # the sizing job — it executes Spark work at DataFrame-CONSTRUCTION time
     # (ADVICE r12 #2), which plan audits neither need nor want to pay;
     # they fall back to defaultParallelism, which only changes the
     # repartition width, never the result.

@@ -14,7 +14,8 @@ from cid_etl_spark.operators.dedup import minhash_dedup_pairs, simhash_dedup_pai
 from cid_etl_spark.sources.parquet import load_table
 
 
-from cid_etl_spark.queries._registry import _register, scratch_dir
+from cid_etl_spark.queries._registry import _register
+from cid_etl_spark.session import scratch_dir
 
 # ---------------------------------------------------------------------------
 # Z. Driver-visible source/sink round-trips + CID pipeline golden run
@@ -50,7 +51,7 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    out = os.path.join(scratch_dir(sf_dir, "csv_sink"), "nation_quoted.csv")
+    out = os.path.join(scratch_dir(spark, "csv_sink", sf_dir), "nation_quoted.csv")
     write_csv_single(nation, out, sep=";", quote_all=True, bom=True)
     raw = read_csv_robust(spark, out)
     renamed = raw.toDF("n_nationkey", "n_name", "n_regionkey")  # P2 fallback
@@ -96,7 +97,7 @@ def csv_dialect_latin1_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("key"),
         F.upper("n_name").alias("val"),
     )
-    base = scratch_dir(sf_dir, "csv_dialect")
+    base = scratch_dir(spark, "csv_dialect", sf_dir)
     comma_dir = os.path.join(base, "nation_comma")
     write_csv(comma_df, comma_dir, sep=",", quote_all=False, encoding="UTF-8")
 
@@ -147,7 +148,7 @@ def csv_plain_scan_fragment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name"), F.lit(", zone "), F.col("n_regionkey").cast("string")
         ).alias("detail"),
     )
-    base = scratch_dir(sf_dir, "csv_plain")
+    base = scratch_dir(spark, "csv_plain", sf_dir)
     out = os.path.join(base, "CID10_NACOES_plain.csv")
     write_csv_single(nation, out, sep=",", quote_all=False, bom=False)
     found = find_file_by_fragment(base, "nacoes")
@@ -356,7 +357,7 @@ def cid_pipeline_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cid_etl_spark.plans.cid_pipeline import run_etl_from_datasus_dir
 
-    fixture_dir = scratch_dir(sf_dir, "cid_golden")
+    fixture_dir = scratch_dir(spark, "cid_golden", sf_dir)
     for fname, (header, rows) in _CID_GOLDEN_FIXTURE.items():
         with open(
             os.path.join(fixture_dir, fname), "w", newline="", encoding="latin-1"

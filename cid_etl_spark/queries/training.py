@@ -20,7 +20,8 @@ from cid_etl_spark.operators.dedup import minhash_dedup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
-from cid_etl_spark.queries._registry import _register, scratch_dir
+from cid_etl_spark.queries._registry import _register
+from cid_etl_spark.session import scratch_dir
 from cid_etl_spark.queries.roundtrips import _minhash_verified_sql, minhash_lsh_verified
 
 # ---------------------------------------------------------------------------
@@ -1298,7 +1299,7 @@ def partitioned_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cid_etl_spark.sources.sinks import write_parquet_partitioned
 
     d = load_table(spark, sf_dir, "documents")
-    path = os.path.join(scratch_dir(sf_dir, "lake"), "documents_by_lang")
+    path = os.path.join(scratch_dir(spark, "lake", sf_dir), "documents_by_lang")
     write_parquet_partitioned(d, path, partition_by="lang")
     lake = spark.read.parquet(path)
     return (

@@ -13,11 +13,18 @@ degrades gracefully on ``local[N]``:
   not a constant the code depends on.
 - Arrow enabled so the few Pandas-UDF paths (multimodal decode,
   vector ops fallback) move columnar batches, never pickled rows.
+
+Every file the engine writes for itself (fixture files, stream
+staging/sinks/checkpoints, batch fragments) lives under one root,
+resolved by :func:`scratch_dir` from one setting,
+``spark.cid_etl.scratchRoot``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -72,3 +79,37 @@ def get_spark(app_name: str = "cid-etl-spark", master: str | None = None) -> Spa
     for k, v in DEFAULT_CONF.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+#: The one setting for where the engine's intermediate data goes.
+SCRATCH_ROOT_CONF = "spark.cid_etl.scratchRoot"
+
+
+def scratch_dir(spark: SparkSession, family: str, key: str) -> str:
+    """The scratch directory for *family* and *key*, created if
+    missing: ``<root>/cid_etl_<family>_<md5(key)[:8]>``.
+
+    ``<root>`` is the session conf ``spark.cid_etl.scratchRoot`` — a
+    directory or URI every executor can reach (shared mount,
+    ``hdfs://``, ``s3a://``).  Unset, a ``local[...]`` master uses
+    :func:`tempfile.gettempdir` (driver and executors share one
+    filesystem there); any other master raises, because a driver-local
+    directory is unreadable from the executors.  The directory is made
+    through the Hadoop ``FileSystem`` resolved from the path itself —
+    the same resolution Spark's readers and writers use — so callers
+    delete it through that filesystem too.  No Spark job runs."""
+    root = spark.conf.get(SCRATCH_ROOT_CONF, None)
+    if not root:
+        if not spark.sparkContext.master.startswith("local"):
+            raise RuntimeError(
+                f"no scratch root off local mode: set {SCRATCH_ROOT_CONF} "
+                "to storage every executor can reach (hdfs://..., "
+                "s3a://..., or a shared mount)"
+            )
+        root = tempfile.gettempdir()
+    digest = hashlib.md5(key.encode()).hexdigest()[:8]
+    path = os.path.join(root, f"cid_etl_{family}_{digest}")
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(jpath):
+        raise IOError(f"could not create scratch dir {path}")
+    return path

@@ -211,12 +211,9 @@ def stream_upsert_to_parquet(
         if not batch_df.columns:
             return
         (
-            batch_df.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-        )
-        (
             batch_df.write.mode("overwrite")
+            # scoped to THIS writer, as in stream_dedup_ingest
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(target_dir)
         )

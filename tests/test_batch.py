@@ -1,10 +1,12 @@
 """run_batch (SURVEY §7, round 7): shared-fragment batch execution
 must be invisible to results — row-identical to per-query runs — while
-actually substituting the cached fragments into member plans and
-releasing them by the end.
+actually substituting the materialized fragments into member plans and
+removing its scratch by the end.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +17,7 @@ from cid_etl_spark.plans.batch import (
     plan_fragments,
     run_batch,
 )
+from cid_etl_spark.session import SCRATCH_ROOT_CONF
 
 SF = "/root/testdata/sf0.001"
 
@@ -72,7 +75,7 @@ def test_run_batch_matches_per_query_results(spark):
     # under test is "run_batch leaves no NEW pins", not "standalone
     # plans never checkpoint"
     pinned_before = pinned_ids()
-    # default mode: parquet-materialized fragments + concurrent members
+    # parquet-materialized fragments + concurrent members
     got = run_batch(spark, SF, BATCH, action=rows)
     assert set(got) == set(want)
     for n in BATCH:
@@ -82,31 +85,24 @@ def test_run_batch_matches_per_query_results(spark):
     from cid_etl_spark.plans import fragments as fr
 
     assert fr.current_context() is None
-    # cache mode, strictly serial
-    got_c = run_batch(
-        spark, SF, BATCH, action=rows, mode="cache", max_concurrency=1
-    )
-    for n in BATCH:
-        assert got_c[n] == want[n], f"cache-batch result differs for {n}"
-    # the batch released its caches (nothing new pinned for the caller)
+    # the batch pinned nothing new for the caller
     assert pinned_ids() - pinned_before == set()
 
 
-def test_fragment_substitution_fires(spark, monkeypatch):
+def test_fragment_substitution_fires(spark):
     """Caching the fragment must change each consumer's EXECUTED plan
     (InMemoryTableScan appears) — this is what keeps QUERY_FRAGMENTS
     honest: if a refactor drifts a query off the canonical helper, the
     subtree no longer matches and this test fails for that query.
 
-    Built under SPARK_GRAFT_PLAN_ONLY: this is a plan-shape assertion,
-    and the r13 ``materialize_once`` checkpoints (skipped under the
-    flag) would otherwise replace the consumer's upstream subtree with
+    Built under ``plan_only()``: this is a plan-shape assertion, and
+    the r13 ``materialize_once`` checkpoints (skipped under it) would otherwise replace the consumer's upstream subtree with
     an opaque RDD scan — the cache IS still hit on the production
     path (the checkpoint's own job reads the InMemoryTableScan), the
     substitution just isn't visible in the post-checkpoint plan."""
+    from cid_etl_spark.plans.fragments import plan_only
     from cid_etl_spark.queries import spark_queries
 
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
     queries = spark_queries()
     for frag_name, builder in FRAGMENTS.items():
         consumers = [
@@ -117,12 +113,13 @@ def test_fragment_substitution_fires(spark, monkeypatch):
         try:
             frag.count()
             for n in consumers:
-                plan = (
-                    queries[n](spark, SF)
-                    ._jdf.queryExecution()
-                    .executedPlan()
-                    .toString()
-                )
+                with plan_only():
+                    plan = (
+                        queries[n](spark, SF)
+                        ._jdf.queryExecution()
+                        .executedPlan()
+                        .toString()
+                    )
                 assert "InMemoryTableScan" in plan, (
                     f"{n} does not reuse cached fragment {frag_name}"
                 )
@@ -197,13 +194,23 @@ def test_fragment_derivation_catches_divergent_query(spark):
     assert hits2 == {"doc_term_counts"}
 
 
+@contextmanager
+def _scratch_root(spark, root: str):
+    """Point the session's ``spark.cid_etl.scratchRoot`` at *root* for
+    the block."""
+    spark.conf.set(SCRATCH_ROOT_CONF, root)
+    try:
+        yield
+    finally:
+        spark.conf.unset(SCRATCH_ROOT_CONF)
+
+
 def test_run_batch_explicit_scratch_root(spark, tmp_path):
-    """The 100 TB scratch contract (VERDICT r7 #5): an explicit
-    *scratch_root* (or the ``spark.cid_etl.batch.scratchRoot`` conf)
-    receives a unique per-batch subdirectory for the materialized
-    fragments, and exactly that subdirectory is removed when the batch
-    finishes — so concurrent batches can share one cluster-visible
-    root without colliding."""
+    """The 100 TB scratch contract (VERDICT r7 #5): the
+    ``spark.cid_etl.scratchRoot`` conf receives a unique per-batch
+    subdirectory for the materialized fragments, and exactly that
+    subdirectory is removed when the batch finishes — so concurrent
+    batches can share one cluster-visible root without colliding."""
     import os
 
     from cid_etl_spark.queries import spark_queries
@@ -219,22 +226,14 @@ def test_run_batch_explicit_scratch_root(spark, tmp_path):
 
     sub = ["tfidf_top_terms", "bm25_search_documents"]
     want = {n: rows(queries[n](spark, SF)) for n in sub}
-    got = run_batch(spark, SF, sub, action=rows, scratch_root=root)
+    with _scratch_root(spark, root):
+        got = run_batch(spark, SF, sub, action=rows)
     for n in sub:
         assert got[n] == want[n]
     # the batch's own subdir is gone, the shared root and foreign
     # content survive
     assert os.path.exists(sentinel)
     assert os.listdir(root) == ["someone_elses_file"]
-    # conf-key fallback resolves the same way
-    spark.conf.set("spark.cid_etl.batch.scratchRoot", root)
-    try:
-        got2 = run_batch(spark, SF, sub, action=rows)
-        for n in sub:
-            assert got2[n] == want[n]
-        assert os.listdir(root) == ["someone_elses_file"]
-    finally:
-        spark.conf.unset("spark.cid_etl.batch.scratchRoot")
 
 
 def test_shared_scan_materializes_edge_rollups_once(spark, tmp_path):
@@ -362,7 +361,7 @@ def test_shared_scan_covers_two_level_rollups(spark, tmp_path):
 
 
 def test_run_batch_uri_scratch_root(spark, tmp_path):
-    """ADVICE r8 #1: an explicit scratch_root given as a URI must be
+    """ADVICE r8 #1: a scratch root given as a URI must be
     created and cleaned through the Hadoop FileSystem resolved from
     that URI — os.makedirs would have built a literal ``file:`` local
     directory and rmtree would never have removed the real one."""
@@ -380,7 +379,8 @@ def test_run_batch_uri_scratch_root(spark, tmp_path):
 
     sub = ["tfidf_top_terms", "bm25_search_documents"]
     want = {n: rows(queries[n](spark, SF)) for n in sub}
-    got = run_batch(spark, SF, sub, action=rows, scratch_root=root_uri)
+    with _scratch_root(spark, root_uri):
+        got = run_batch(spark, SF, sub, action=rows)
     for n in sub:
         assert got[n] == want[n]
     # no bogus local 'file:...' dir anywhere, and the per-batch subdir
@@ -464,7 +464,8 @@ def test_single_member_batch_skips_derived_rollups(spark, tmp_path):
     want = rows(queries[name](spark, SF))
     fr.BatchContext = Spy
     try:
-        got = run_batch(spark, SF, [name], action=rows, scratch_root=root)
+        with _scratch_root(spark, root):
+            got = run_batch(spark, SF, [name], action=rows)
     finally:
         fr.BatchContext = real_ctx
     assert got[name] == want
@@ -532,8 +533,7 @@ def test_bucketed_facts_colocate_members(spark, tmp_path):
     bucketed+sorted catalog table; member plans built under the batch
     context scan the copy, whose HashPartitioning(key) removes every
     member-side Exchange on the declared key.  Values must be
-    identical, the catalog must be clean afterwards, and the feature
-    is materialize-mode-only."""
+    identical and the catalog must be clean afterwards."""
     import os
 
     from cid_etl_spark.plans import fragments as fr
@@ -590,9 +590,6 @@ def test_bucketed_facts_colocate_members(spark, tmp_path):
     finally:
         for t in tables:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-    # cache mode refuses the declaration instead of ignoring it
-    with pytest.raises(ValueError):
-        run_batch(spark, SF, members, mode="cache", bucket_facts=facts)
 
 
 def test_token_stream_extension_prunes_to_old_plans(spark):

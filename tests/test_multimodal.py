@@ -99,8 +99,7 @@ def test_audio_decode_stub_rejects_empty_payload():
 
 
 # ---------------------------------------------------------------------------
-# REAL decode paths: stdlib PNG/JPEG/WAV codecs (no optional libs needed),
-# PIL parity when the library is present.
+# REAL decode paths: the stdlib PNG/JPEG/WAV codecs, the only decoders.
 # ---------------------------------------------------------------------------
 
 import io
@@ -252,26 +251,16 @@ def test_mixed_real_and_fake_payloads_in_one_table(spark):
     assert aud[4].sample_rate in (8000, 16000, 22050, 44100, 48000)
 
 
-def test_decode_branches_stdlib_and_pil(monkeypatch):
-    """BOTH decode branches asserted, never skipped (VERDICT r3 #8):
-    the stdlib PNG path is forced via monkeypatch so it is exercised
-    even where PIL exists; the PIL branch is additionally asserted for
-    parity whenever the library is importable."""
+def test_decode_branches_stdlib_and_pil():
+    """The stdlib PNG path is the one decode path (VERDICT r3 #8): real
+    dimensions and mean luma, whatever imaging libraries are
+    installed."""
     from cid_etl_spark.multimodal import binary as B
 
     png = _make_png(8, 3, (10, 10, 10))
-
-    # stdlib branch — always the asserted default in this container
-    monkeypatch.setattr(B, "_HAS_PIL", False)
     w, h, c, luma = B.decode_one_image(png)
     assert (w, h, c) == (8, 3, 3)
     assert abs(float(luma) - 10 / 255.0) < 1e-2
-    monkeypatch.undo()
-
-    if B._HAS_PIL:  # PIL branch must agree bit-for-dimension
-        w2, h2, c2, luma2 = B.decode_one_image(png)
-        assert (w2, h2) == (w, h)
-        assert abs(float(luma2) - float(luma)) < 1e-2
 
 
 def _make_noise_png(width=24, height=24, seed=7):

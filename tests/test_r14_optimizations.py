@@ -125,7 +125,7 @@ def test_approx_distinct_users_ignores_null_user_id(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# plan-only signal: thread-local, env override preserved
+# plan-only signal: thread-local
 # ---------------------------------------------------------------------------
 
 
@@ -147,13 +147,6 @@ def test_plan_only_is_thread_local():
     assert not plan_only_active()
     # ADVICE r13 #4: a concurrent thread must NOT inherit the signal
     assert seen["other"] is False
-
-
-def test_plan_only_env_var_still_overrides(monkeypatch):
-    from cid_etl_spark.plans.fragments import plan_only_active
-
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
-    assert plan_only_active()
 
 
 def test_materialize_once_skips_under_plan_only(spark):

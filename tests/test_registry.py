@@ -1,10 +1,12 @@
 """Registry machinery: the freshness ladder read from
 ``CORRECTNESS_rNN.json`` files, the order it induces, and the per-input
-scratch directories of queries that write files.  No Spark session.
+scratch directories of queries that write files (the only test here
+that needs the Spark session).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import tempfile
 from pathlib import Path
@@ -14,8 +16,8 @@ from cid_etl_spark.queries._registry import (
     _SPARK,
     _ordered_names,
     _verified_rounds,
-    scratch_dir,
 )
+from cid_etl_spark.session import scratch_dir
 
 
 def _write_round(root: Path, name: str, rows: dict) -> None:
@@ -52,12 +54,17 @@ def test_order_puts_priority_then_unverified_then_stalest():
     assert tail == [old, fresh]
 
 
-def test_scratch_dir_keys_on_the_whole_input_path(tmp_path, monkeypatch):
+def test_scratch_dir_keys_on_the_whole_input_path(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    a = scratch_dir("/srv/testdata/sf0.01", "csv_sink")
-    b = scratch_dir("perfbench/data/sf0.01", "csv_sink")
+    sf_dir = "/srv/testdata/sf0.01"
+    a = scratch_dir(spark, "csv_sink", sf_dir)
+    b = scratch_dir(spark, "csv_sink", "perfbench/data/sf0.01")
     assert a != b
-    assert scratch_dir("/srv/testdata/sf0.01", "csv_sink") == a
-    assert scratch_dir("/srv/testdata/sf0.01", "csv_plain") != a
+    assert scratch_dir(spark, "csv_sink", sf_dir) == a
+    assert scratch_dir(spark, "csv_plain", sf_dir) != a
     for d in (a, b):
         assert Path(d).is_dir() and Path(d).parent == tmp_path
+    # with the setting unset, the path is exactly the one the queries
+    # have always written to
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    assert a == f"{tempfile.gettempdir()}/cid_etl_csv_sink_{digest}"

@@ -29,7 +29,9 @@ def test_xml_roundtrip_preserves_rows_and_schema(spark, tmp_path):
 def test_stream_upsert_to_parquet_is_idempotent(spark, tmp_path):
     """Replaying the same batch (fresh checkpoint, same input) must
     leave the target byte-identical in content: dynamic partition
-    overwrite rewrites the touched day partitions in place."""
+    overwrite rewrites the touched day partitions in place.  The
+    dynamic mode is scoped to the sink's writer: the session's
+    ``partitionOverwriteMode`` is the same after the call."""
     from cid_etl_spark.sources.parquet import load_table
     from cid_etl_spark.streaming.events import stream_upsert_to_parquet
 
@@ -57,7 +59,10 @@ def test_stream_upsert_to_parquet_is_idempotent(spark, tmp_path):
             agg, target, partition_col="day", checkpoint_dir=checkpoint
         )
 
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     run(str(tmp_path / "ckpt1"))
+    assert spark.conf.get(mode_key) == mode_before
     first = {
         (str(r.day), r.event_type): (r.n, r.total_value)
         for r in spark.read.parquet(target).collect()

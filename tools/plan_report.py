@@ -18,18 +18,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
-# Plan SHAPE is the subject here — queries that run a bounded sizing
-# job at DataFrame-construction time (adamic_adar's pair-volume
-# aggregate, ADVICE r12 #2) skip it under this flag and fall back to
-# defaultParallelism for their adaptive widths.
-os.environ.setdefault("SPARK_GRAFT_PLAN_ONLY", "1")
-
 
 def main() -> None:
     from cid_etl_spark.plans.audit import (
         lowcard_partition_windows,
         single_partition_windows,
     )
+    from cid_etl_spark.plans.fragments import plan_only
     from cid_etl_spark.queries import oracle_queries, spark_queries
     from cid_etl_spark.session import get_spark
 
@@ -66,13 +61,19 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name in sorted(queries):
+        # Plan SHAPE is the subject here — queries that run a bounded
+        # sizing job or an eager checkpoint at DataFrame-construction
+        # time (adamic_adar's pair-volume aggregate, ADVICE r12 #2)
+        # skip it under plan_only and fall back to defaultParallelism
+        # for their adaptive widths.
         try:
-            plan = (
-                queries[name](spark, SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            with plan_only():
+                plan = (
+                    queries[name](spark, SF_DIR)
+                    ._jdf.queryExecution()
+                    .executedPlan()
+                    .toString()
+                )
         except Exception as ex:  # pragma: no cover - report, don't die
             lines.append(
                 f"| {name} | plan error: {str(ex)[:60]} | | | | | | | | | |"
