@@ -306,12 +306,14 @@ _UNKNOWN_GROUP_BUCKETS = 65536
 #: run 30-60 bytes.
 _ASSUMED_ROW_BYTES = 16
 
+#: adaptive_group_buckets ceiling: bounds the shuffle-key cardinality.
+_GROUP_BUCKETS_CAP = 1 << 20
+
 
 def adaptive_group_buckets(
     df: DataFrame,
     max_group_rows: int,
     floor: int,
-    cap: int = 1 << 20,
 ) -> int:
     """Bucket count for hash-bucketed grouped-map operators
     (``ewma_by_key``, the cogroup alignment), sized from the input's
@@ -329,16 +331,16 @@ def adaptive_group_buckets(
     hash buckets are uneven and one hot key's whole series shares a
     bucket.  *floor* keeps small inputs at the measured local sweet
     spot (the per-bucket Arrow/Python fixed cost dominates when frames
-    are tiny); *cap* bounds the shuffle-key cardinality.  The per-frame
-    ``max_group_rows`` guard in the consumers stays as the loud
-    backstop for estimate misses."""
+    are tiny); :data:`_GROUP_BUCKETS_CAP` bounds the shuffle-key
+    cardinality.  The per-frame ``max_group_rows`` guard in the
+    consumers stays as the loud backstop for estimate misses."""
     size = _plan_size_bytes(df)
     if size is None:
         return max(floor, _UNKNOWN_GROUP_BUCKETS)
     rows_est = size // _ASSUMED_ROW_BYTES + 1
     target = max(max_group_rows // 4, 1)
     n = -(-rows_est // target)
-    return max(floor, min(int(n), cap))
+    return max(floor, min(int(n), _GROUP_BUCKETS_CAP))
 
 
 def _null_safe_broadcast_join(
@@ -543,7 +545,6 @@ def bucketed_row_number(
     id_col: str = "row_id",
     bucket_value: Column | None = None,
     partition_by: tuple[str, ...] = (),
-    materialize_input: bool = False,
 ) -> DataFrame:
     """1-based ``row_number() OVER ([PARTITION BY *partition_by*]
     ORDER BY key, *tiebreaks)`` without the single-partition sort (or,
@@ -569,12 +570,7 @@ def bucketed_row_number(
     ``n_buckets=None`` (the default) resolves adaptively from the
     input's plan-size estimate (:func:`_adaptive_n_buckets`) — one
     flat level for small inputs, the 1024-bucket hybrid above
-    :data:`_ADAPTIVE_SIZE_THRESHOLD`; pass an int to pin it.
-    ``materialize_input=True`` checkpoints *df* once instead of
-    re-deriving it per consumer pass (see :func:`materialize_once`;
-    values are identical either way)."""
-    if materialize_input:
-        df = materialize_once(df)
+    :data:`_ADAPTIVE_SIZE_THRESHOLD`; pass an int to pin it."""
     if n_buckets is None:
         n_buckets = _adaptive_n_buckets(df)
     b = _range_bucketed(
@@ -630,10 +626,10 @@ def bucketed_cumsum(
     shuffle, plus cross-bucket offsets from a |groups|·*n_buckets*-row
     rollup (its window sorts ≤ *n_buckets* rows per group — bounded by
     a literal, not by data volume).  ``n_buckets=None`` resolves
-    adaptively from the input's plan-size estimate, and
-    ``materialize_input=True`` checkpoints *df* once instead of
-    re-deriving it per consumer pass, exactly as in
-    :func:`bucketed_row_number`."""
+    adaptively from the input's plan-size estimate, exactly as in
+    :func:`bucketed_row_number`, and ``materialize_input=True``
+    checkpoints *df* once instead of re-deriving it per consumer pass
+    (see :func:`materialize_once`; values are identical either way)."""
     if materialize_input:
         df = materialize_once(df)
     if n_buckets is None:

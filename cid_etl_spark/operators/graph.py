@@ -66,6 +66,23 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     ).select("__e.u", "__e.v")
 
 
+def _adjacency(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected adjacency ``(u, v)`` of *edges* that the
+    fixed-round operators consume every round: self-loops dropped,
+    duplicate edges collapsed, both directions emitted in one explode
+    pass (:func:`_symmetrize`), materialized once.  localCheckpoint,
+    not persist: the operators never get a safe point to unpersist a
+    lazily-consumed cache, and truncating the lineage keeps every
+    round's plan shallow (see :func:`triangle_count`)."""
+    return _symmetrize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct(),
+        "u",
+        "v",
+    ).localCheckpoint(eager=True)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -233,30 +250,22 @@ def pagerank(
     iterations: int = 10,
     src: str = "src",
     dst: str = "dst",
-    symmetric: bool = False,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list, as a chain
-    of lazy join+aggregate rounds — no RDDs, no driver-side state
-    beyond the loop counter.
+    """Fixed-iteration PageRank over a SYMMETRIC edge list (every edge
+    present in both directions), as a chain of lazy join+aggregate
+    rounds — no RDDs, no driver-side state beyond the loop counter.
 
-    Nodes are the union of endpoints; ranks start uniform at 1/N and
-    each round recomputes ``rank(v) = (1-d)/N + d * Σ rank(u)/deg(u)``
-    over v's in-edges.  A FIXED iteration count (not a convergence
-    test) keeps the result deterministic and engine-replicable — the
-    DuckDB oracle unrolls the same rounds symbolically.  Nodes with no
-    out-edges would leak rank mass; callers with dangling nodes should
-    symmetrize or pre-trim (the co-purchase graph is symmetric, so
-    every node has out-degree ≥ 1).
-
-    ``symmetric=True`` asserts every node appears as BOTH a source and
-    a destination (any symmetrized graph).  That buys two algebraic
-    simplifications with bit-identical results (r13, guide §2.4
-    "remove shuffles outright"): the node list is the distinct of
-    *src* alone (no union with dst), and the per-round left join that
-    re-attaches zero-contribution nodes is dropped entirely — on a
-    symmetric graph every node has an in-edge, so ``contribs`` already
-    carries every node and the join was an identity fill costing one
-    broadcast join per round (10 joins for the default rounds).
+    Ranks start uniform at 1/N and each round recomputes
+    ``rank(v) = (1-d)/N + d * Σ rank(u)/deg(u)`` over v's in-edges.  A
+    FIXED iteration count (not a convergence test) keeps the result
+    deterministic and engine-replicable — the DuckDB oracle unrolls the
+    same rounds symbolically.  Symmetry is the caller's contract and
+    buys two simplifications (r13, guide §2.4 "remove shuffles
+    outright"): every node appears as a source, so the node list is
+    the distinct of *src* alone; and every node has an in-edge and an
+    out-edge, so no rank mass leaks and no per-round join re-attaches
+    zero-contribution nodes.  A directed graph with dangling or
+    source-only nodes must be symmetrized or pre-trimmed first.
 
     Scale notes: each round is one shuffle (the groupBy on *dst*);
     the degree-annotated edge table is materialized ONCE — the degree
@@ -264,23 +273,22 @@ def pagerank(
     edges, not a separate groupBy+join rematerialization (r13: the old
     e0-checkpoint → deg-join → e-checkpoint chain wrote the fact-sized
     edge table twice; one pass measured ~2.5 s faster at sf0.1) — and
-    ranks are ``localCheckpoint``-ed every *checkpoint_every* rounds so
-    the lazy plan (and with it the scheduler's work per action) stays
-    shallow instead of growing linearly with the round count.  The
-    per-round join layout is left to AQE on purpose — at small scale
+    ranks are ``localCheckpoint``-ed every 5 rounds so the lazy plan
+    (and with it the scheduler's work per action) stays shallow
+    instead of growing linearly with the round count.  The per-round
+    join layout is left to AQE on purpose — at small scale
     ranks broadcast (zero edge shuffle per round), at cluster scale
     AQE falls back to a co-partitioned hash join.
 
     SKEW CAVEAT (VERDICT r13 #3) on the degree window: ``count(1) OVER
     (PARTITION BY src)`` ships every edge of a hot source to one task
-    with no partial aggregation.  On symmetric graphs (every caller
-    here) support-thresholded co-purchase degrees are bounded by
-    basket overlap — the hub-skew probe (BASELINE.md, 9bd0d2c) measures the
-    fixture's hottest src at a few hundred edges, orders below task
-    grain.  A hot-key DIRECTED graph (web crawl with a super-hub)
-    skews this window harder than the old groupBy+join shape only when
-    the degree table outgrows the broadcast threshold — below it the
-    groupBy+join never shuffled the edges at all.  Such callers should
+    with no partial aggregation.  Co-purchase degrees are bounded by
+    basket overlap — the hub-skew probe (BASELINE.md, 9bd0d2c)
+    measures the fixture's hottest src at a few hundred edges, orders
+    below task grain.  A graph with a super-hub (a symmetrized web
+    crawl) skews this window harder than the old groupBy+join shape
+    only when the degree table outgrows the broadcast threshold —
+    below it the groupBy+join never shuffled the edges at all.  Such callers should
     pre-aggregate degrees two-phase (salt, sum) and join, trading the
     single-pass materialization back for skew immunity.
     """
@@ -300,11 +308,6 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     nodes = e.select(F.col("src").alias("node")).distinct()
-    if not symmetric:
-        nodes = nodes.union(
-            e.select(F.col("dst").alias("node"))
-        ).distinct()
-        nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
@@ -315,19 +318,10 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("__c").alias("__in"))
         )
-        if symmetric:
-            ranks = contribs.select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.col("__in")).alias("rank"),
-            )
-        else:
-            ranks = nodes.join(contribs, "node", "left").select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-                ).alias("rank"),
-            )
+        ranks = contribs.select(
+            "node",
+            (F.lit(base) + F.lit(damping) * F.col("__in")).alias("rank"),
+        )
         if (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
@@ -411,12 +405,15 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
+#: label_propagation truncates the label lineage every this many rounds.
+_LPA_CHECKPOINT_EVERY = 2
+
+
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (LPA,
     Raghavan 2007) with a DETERMINISTIC tie-break, as fixed lazy
@@ -436,25 +433,15 @@ def label_propagation(
     identical winner — largest cnt, ties to smallest label; (node,
     label) rows are unique post-count so no further ties exist — with
     no sort and partial aggregation).  ``localCheckpoint`` every
-    *checkpoint_every* rounds truncates the growing lineage exactly as
-    the other iterative operators do.
+    :data:`_LPA_CHECKPOINT_EVERY` rounds truncates the growing lineage
+    exactly as the other iterative operators do.
 
     Input edges are treated as UNDIRECTED (symmetrized here in one
     explode pass — see :func:`_symmetrize`); disconnected input nodes
     never appear (edge-derived node set).  Returns
     ``(node, community)``.
     """
-    # localCheckpoint, not persist: adj is consumed every round, and a
-    # persist here would pin executor storage for the session (the
-    # operator never gets a safe point to unpersist a lazily-consumed
-    # cache) — same discipline as bfs_distances/triangle_count.
-    adj = _symmetrize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        "u",
-        "v",
-    ).localCheckpoint(eager=True)
+    adj = _adjacency(edges, src, dst)
     labels = adj.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -473,7 +460,7 @@ def label_propagation(
             .agg(best)
             .select("node", F.col("__best.label").alias("label"))
         )
-        if (r + 1) % checkpoint_every == 0 and r + 1 < rounds:
+        if (r + 1) % _LPA_CHECKPOINT_EVERY == 0 and r + 1 < rounds:
             labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("community"))
 
@@ -499,17 +486,7 @@ def bfs_distances(
     (no infinity sentinel to disagree about).  *sources* is a
     one-column DataFrame of seed nodes at distance 0.
     """
-    # localCheckpoint: adj is consumed every round — truncating its
-    # lineage keeps the final plan shallow (see triangle_count); the
-    # explode symmetrization derives the edge plan ONCE (r14, was a
-    # two-branch union re-running the derivation per direction)
-    adj = _symmetrize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        "u",
-        "v",
-    ).localCheckpoint(eager=True)
+    adj = _adjacency(edges, src, dst)
     dist = sources.select(
         F.col(sources.columns[0]).alias("node"), F.lit(0).cast("int").alias("dist")
     )
@@ -548,13 +525,7 @@ def kcore_peel(
     ``(node, core_degree)`` for nodes surviving all rounds, with their
     degree inside the surviving subgraph.
     """
-    adj = _symmetrize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        "u",
-        "v",
-    ).localCheckpoint(eager=True)
+    adj = _adjacency(edges, src, dst)
     for r in range(rounds):
         deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("__d"))
         keep = deg.filter(F.col("__d") >= k).select("u")

@@ -334,7 +334,7 @@ def exact_cosine_pairs_distributed(
     # distinct (gi, gj) — the row lands in each of its n_blocks groups
     # exactly once
 
-    def pair_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pair_block(key, pdf):
         gi, gj = int(key[0]), int(key[1])
         ids = pdf[id_col].to_numpy()
         mat = np.array(pdf[vec_col].tolist(), dtype="float64")

@@ -39,7 +39,8 @@ from cid_etl_spark.queries._registry import (  # noqa: F401
     spark_queries,
 )
 
-# Import order == registration order == the original module's layout.
+# Import order == registration order: the original module's layout,
+# then the co-purchase graph family gathered from four of them.
 from cid_etl_spark.queries import core as _core  # noqa: E402
 from cid_etl_spark.queries import stats as _stats  # noqa: E402
 from cid_etl_spark.queries import tpch as _tpch  # noqa: E402
@@ -51,12 +52,13 @@ from cid_etl_spark.queries import streaming_oracle as _streaming_oracle  # noqa:
 from cid_etl_spark.queries import round5 as _round5  # noqa: E402
 from cid_etl_spark.queries import round11 as _round11  # noqa: E402
 from cid_etl_spark.queries import round12 as _round12  # noqa: E402
+from cid_etl_spark.queries import graph as _graph  # noqa: E402
 
 # Re-export every module-level name so the package namespace is a
 # drop-in for the former flat module (tests and tools import query
 # functions, SQL constants and helpers directly).  setdefault: facade
-# names defined above win; earlier domain modules win over later ones,
-# matching the original top-to-bottom definition order.
+# names defined above win; the domain modules define disjoint names
+# (tests/test_registry.py), so no domain module shadows another.
 for _m in (
     _core,
     _stats,
@@ -69,6 +71,7 @@ for _m in (
     _round5,
     _round11,
     _round12,
+    _graph,
 ):
     for _k, _v in vars(_m).items():
         if not _k.startswith("__"):

@@ -68,28 +68,19 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 #: Rows to put at the very front of the next driver window (changed
 #: plans, suspect rows).  Without an entry here the window is the
 #: never-verified rows, then the stalest green rows.  Current entries:
-#: every row that writes files, now placed by the one scratch resolver
-#: (session.scratch_dir), plus the two run_batch rows.
+#: the co-purchase graph family (queries/graph.py), whose DuckDB twins
+#: were rewritten onto one shared basket/edge/adjacency prefix.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    "csv_sink_roundtrip",
-    "csv_dialect_latin1_scan",
-    "csv_plain_scan_fragment",
-    "cid_pipeline_golden",
-    "partitioned_lake_roundtrip",
-    "zorder_lake_roundtrip",
-    "binaryfile_ingest_roundtrip",
-    "media_real_png_decode",
-    "media_real_wav_decode",
-    "schema_evolution_roundtrip",
-    "compaction_roundtrip",
-    "quarantine_split_roundtrip",
-    "stream_hourly_events",
-    "stream_sessionized_users",
-    "stream_click_attribution",
-    "stream_user_totals_stateful",
-    "stream_dedup_admission",
-    "run_batch_fragments_verified",
-    "run_batch_stats_verified",
+    "copurchase_part_pairs",
+    "triangle_census_copurchase",
+    "lpa_communities_copurchase",
+    "bfs_distances_copurchase",
+    "kcore_copurchase",
+    "degree_assortativity_copurchase",
+    "pagerank_copurchase",
+    "adamic_adar_link_prediction",
+    "assoc_rules_copurchase",
+    "apriori_triples_copurchase",
 )
 
 

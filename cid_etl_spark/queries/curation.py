@@ -1,5 +1,6 @@
-"""Model-based quality filtering, graph suite, media codec rows and
-round-3 curation extensions."""
+"""Model-based quality filtering, media codec rows and round-3
+curation extensions (the co-purchase graph suite lives in
+:mod:`.graph`)."""
 
 from __future__ import annotations
 
@@ -523,54 +524,6 @@ def export_shards_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRIANGLE_SQL = r"""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), e AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a
-      JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ), deg AS (
-      SELECT node, CAST(count(*) AS BIGINT) AS d
-      FROM (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-      GROUP BY node
-    ), tri AS (
-      SELECT CAST(count(*) AS BIGINT) AS t
-      FROM e ab
-      JOIN e bc ON ab.v = bc.u
-      JOIN e ac ON ac.u = ab.u AND ac.v = bc.v
-    ), w AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-             CAST(sum(d * (d - 1)) AS BIGINT) // 2 AS n_wedges
-      FROM deg
-    )
-    SELECT w.n_nodes,
-           (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_edges,
-           w.n_wedges,
-           tri.t AS n_triangles,
-           round(3.0 * tri.t / w.n_wedges, 6) AS clustering
-    FROM w, tri
-    """
-
-
-@_register("triangle_census_copurchase", _TRIANGLE_SQL)
-def triangle_census_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact triangle census + global clustering coefficient of the
-    support-≥2 co-purchase graph (operators.graph.triangle_count).
-    The engine uses degree-oriented wedge joins — every edge points
-    from its lower-(degree, id) endpoint, capping out-degrees at O(√m)
-    so hub skew cannot blow the wedge join up to degree² rows (the
-    failure mode of naive closure counting on retail/web graphs); the
-    oracle counts the same triangles with the quadratic three-way
-    self-join.  Support ≥ 2 prunes single-co-occurrence noise edges
-    the same way phrase-mining pipelines do."""
-    from cid_etl_spark.operators.graph import triangle_count
-
-    edges = _copurchase_edges(spark, sf_dir, min_support=2)
-    return triangle_count(edges, "src", "dst")
-
-
 _KMV_SQL = r"""
     WITH h AS (
       SELECT DISTINCT event_type,
@@ -849,84 +802,6 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return emb.mapInArrow(norms, "vec_id long, dim int, l2_norm double")
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str, min_support: int = 2) -> DataFrame:
-    """Support-thresholded co-purchase edge list (u=src < v=dst), the
-    shared input of the graph-census queries: one basket-keyed
-    self-join (pair blowup bounded by basket², same plan as
-    copurchase_part_pairs) + a support filter pruning
-    single-co-occurrence noise."""
-    li = load_table(spark, sf_dir, "lineitem")
-    items = (
-        li.select("l_orderkey", "l_partkey").repartition("l_orderkey").distinct()
-    )
-    a, b = items.alias("a"), items.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("__support"))
-        .filter(F.col("__support") >= min_support)
-        .drop("__support")
-    )
-
-
-def _lpa_sql(rounds: int = 4, min_support: int = 2) -> str:
-    """Unrolled DuckDB twin of the fixed-round synchronous LPA — every
-    round is one join + vote count + QUALIFY argmax, mirroring
-    operators.graph.label_propagation exactly (same deterministic
-    count-desc/label-asc tie-break)."""
-    steps = []
-    prev = "l0"
-    for r in range(1, rounds + 1):
-        steps.append(f"""
-    v{r} AS (
-      SELECT a.v AS node, l.label, CAST(count(*) AS BIGINT) AS cnt
-      FROM adj a JOIN {prev} l ON a.u = l.node
-      GROUP BY a.v, l.label
-    ),
-    l{r} AS (
-      SELECT node, label FROM v{r}
-      QUALIFY row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label) = 1
-    )""")
-        prev = f"l{r}"
-    return f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e0 AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a
-      JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= {min_support}
-    ),
-    adj AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
-    l0 AS (SELECT DISTINCT u AS node, u AS label FROM adj),{",".join(steps)}
-    SELECT node, label AS community FROM {prev}
-    """
-
-
-@_register("lpa_communities_copurchase", _lpa_sql())
-def lpa_communities_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection on the support-≥2 co-purchase graph via
-    fixed-round synchronous label propagation
-    (operators.graph.label_propagation): every node adopts its
-    neighbors' majority label each round, ties to the smallest label —
-    a deterministic variant of LPA whose result is a pure function of
-    the graph, which is what lets DuckDB replay all four rounds
-    symbolically (the usual async/random-tie LPA is unverifiable by
-    construction).  Complements the census suite: connected components
-    give reachability, PageRank gives centrality, LPA gives mesoscale
-    structure — same per-round cost model as both (one keyed shuffle,
-    label table broadcast when it fits, lineage checkpoint-truncated)."""
-    from cid_etl_spark.operators.graph import label_propagation
-
-    edges = _copurchase_edges(spark, sf_dir, min_support=2)
-    return label_propagation(edges, "src", "dst", rounds=4)
 
 
 def _jl_projection_sql(out_dims: int = 4) -> str:
@@ -1372,62 +1247,6 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_sql(rounds: int = 4, min_support: int = 2) -> str:
-    """Unrolled DuckDB twin of fixed-round BFS relaxation."""
-    steps = []
-    prev = "d0"
-    for r in range(1, rounds + 1):
-        steps.append(f"""
-    d{r} AS (
-      SELECT node, CAST(min(dist) AS INTEGER) AS dist FROM (
-        SELECT a.v AS node, d.dist + 1 AS dist
-        FROM adj a JOIN {prev} d ON a.u = d.node
-        UNION ALL
-        SELECT node, dist FROM {prev}
-      ) GROUP BY node
-    )""")
-        prev = f"d{r}"
-    return f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e0 AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a
-      JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= {min_support}
-    ),
-    adj AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
-    d0 AS (SELECT min(u) AS node, CAST(0 AS INTEGER) AS dist FROM adj),{",".join(steps)}
-    SELECT node, dist FROM {prev}
-    """
-
-
-@_register("bfs_distances_copurchase", _bfs_sql())
-def bfs_distances_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unweighted shortest-path distances (4-hop horizon) from the
-    smallest part in the support-≥2 co-purchase graph
-    (operators.graph.bfs_distances) — 'what can a recommendation reach
-    in k hops'.  Fixed-round synchronous relaxation keeps the result a
-    pure function of the graph so the oracle unrolls every round; each
-    round is one keyed shuffle with map-side partial min, the same
-    cost model as CC/PageRank/LPA.  Nodes beyond the horizon are
-    absent rather than carrying an infinity sentinel."""
-    from cid_etl_spark.operators.graph import bfs_distances
-
-    # Materialize the basket self-join ONCE (r14, guide §2.4): the
-    # seed aggregate and the operator's adjacency checkpoint are two
-    # independent consumers — left lazy, each re-ran the derivation
-    # (and the r13 union-based symmetrize inside the operator made it
-    # three runs total).
-    edges = _copurchase_edges(spark, sf_dir, min_support=2).localCheckpoint(
-        eager=True
-    )
-    seed = (
-        edges.select(F.least("src", "dst").alias("n"))
-        .agg(F.min("n").alias("node"))
-    )
-    return bfs_distances(edges, seed, "src", "dst", rounds=4)
-
-
 _DEDUP_RATE_SQL = r"""
     WITH h AS (
       SELECT source,
@@ -1792,109 +1611,6 @@ def dp_noised_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_count",
         F.round(noise, 4).alias("laplace_noise"),
         F.round(F.col("true_count") + noise, 4).alias("released_count"),
-    )
-
-
-def _kcore_sql(k: int = 3, rounds: int = 4, min_support: int = 2) -> str:
-    """Unrolled DuckDB twin of fixed-round k-core peeling."""
-    steps = []
-    prev = "adj0"
-    for r in range(1, rounds + 1):
-        steps.append(f"""
-    keep{r} AS (
-      SELECT u FROM {prev} GROUP BY u HAVING count(*) >= {k}
-    ),
-    adj{r} AS (
-      SELECT a.u, a.v FROM {prev} a
-      JOIN keep{r} x ON a.u = x.u
-      JOIN keep{r} y ON a.v = y.u
-    )""")
-        prev = f"adj{r}"
-    return f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e0 AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a
-      JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= {min_support}
-    ),
-    adj0 AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),{",".join(steps)}
-    SELECT u AS node, CAST(count(*) AS BIGINT) AS core_degree
-    FROM {prev} GROUP BY u
-    """
-
-
-@_register("kcore_copurchase", _kcore_sql())
-def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-core of the support-≥2 co-purchase graph via fixed-round
-    peeling (operators.graph.kcore_peel): the dense backbone that
-    survives after fringe parts (degree < 3, recursively) peel away —
-    the spam/hub-discovery primitive that complements the census
-    suite (CC = reachability, PageRank = centrality, LPA = mesoscale,
-    triangles = local density, k-core = global density backbone).
-    Fixed rounds keep it a pure function of the graph; the oracle
-    replays every peel round."""
-    from cid_etl_spark.operators.graph import kcore_peel
-
-    edges = _copurchase_edges(spark, sf_dir, min_support=2)
-    return kcore_peel(edges, k=3, rounds=4)
-
-
-_ASSORTATIVITY_SQL = r"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e0 AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a
-      JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
-    adj AS (SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0),
-    deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY u)
-    SELECT CAST(count(*) AS BIGINT) AS n_directed_edges,
-           round(avg(du.d), 6) AS mean_src_degree,
-           round(corr(du.d, dv.d), 4) AS assortativity
-    FROM adj
-    JOIN deg du ON adj.u = du.node
-    JOIN deg dv ON adj.v = dv.node
-    """
-
-
-@_register("degree_assortativity_copurchase", _ASSORTATIVITY_SQL)
-def degree_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity (Pearson correlation of endpoint degrees
-    over the symmetrized edge list): one number that says whether hubs
-    attach to hubs (assortative, >0 — social graphs) or to the fringe
-    (disassortative, <0 — retail/web graphs), which decides whether
-    hub-skew mitigation (salting, degree orientation) is worth
-    wiring into downstream joins.  Degree table joins back onto the
-    edge list twice — both sides broadcast when they fit — and the
-    correlation is one partial-aggregable pass.
-
-    r14 (guide §2.4): the basket self-join is checkpointed once and
-    symmetrized in one explode pass — the r13 shape re-derived it FOUR
-    times in one job (two union branches × two adj consumers: the
-    degree build and the correlation join)."""
-    from cid_etl_spark.operators.graph import _symmetrize
-
-    edges = _copurchase_edges(spark, sf_dir, min_support=2).localCheckpoint(
-        eager=True
-    )
-    adj = _symmetrize(edges, "src", "dst").select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    )
-    deg = adj.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("d")
-    )
-    du = deg.select(F.col("node").alias("src"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("dst"), F.col("d").alias("dv"))
-    return (
-        adj.join(F.broadcast(du), "src")
-        .join(F.broadcast(dv), "dst")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_directed_edges"),
-            F.round(F.avg("du"), 6).alias("mean_src_degree"),
-            F.round(F.corr("du", "dv"), 4).alias("assortativity"),
-        )
     )
 
 

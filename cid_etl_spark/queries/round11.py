@@ -1,6 +1,7 @@
-"""Round-11 additions: graph link prediction, association rules,
-information-theoretic column profiling, classifier calibration, and
-per-group exponential smoothing with a recursive-CTE oracle.
+"""Round-11 additions: information-theoretic column profiling,
+classifier calibration, and per-group exponential smoothing with a
+recursive-CTE oracle (its co-purchase rows — link prediction,
+association rules, apriori — live in :mod:`.graph`).
 
 Reference scope: the reference repo (judson-fluap/cid-etl,
 etl_cid10.py) has none of these — they are north-star extensions for
@@ -24,292 +25,6 @@ from pyspark.sql.window import Window
 
 from cid_etl_spark.queries._registry import _register
 from cid_etl_spark.sources.parquet import load_table
-
-# ---------------------------------------------------------------------------
-# Adamic-Adar link prediction on the co-purchase graph
-# ---------------------------------------------------------------------------
-
-#: Common neighbors with degree above this never vote: a hub shared by
-#: everyone carries ~no signal (1/ln(deg) -> 0) yet costs deg^2 pairs —
-#: the standard AA degree cap bounds the per-node pair blowup so the
-#: worst task is CAP^2 pairs regardless of corpus size.
-_AA_DEGREE_CAP = 256
-_AA_TOP_K = 100
-#: Target pair-generations per task for the center-node self-join —
-#: the stage repartitions to sum(min(d,cap)^2) / this (round 12, from
-#: the sf1 guard violation: a denser graph needs width, not a cap).
-_AA_PAIRS_PER_TASK = 4_000_000
-
-_ADAMIC_ADAR_SQL = f"""
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e0 AS (
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM items a
-  JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= 2
-),
-adj AS (SELECT src AS node, dst AS nbr FROM e0
-        UNION ALL SELECT dst AS node, src AS nbr FROM e0),
-deg AS (SELECT node, count(*) AS degree FROM adj GROUP BY node),
-mid AS (
-  SELECT a.node, a.nbr,
-         CAST(round(1000000.0 / ln(d.degree)) AS BIGINT) AS w_micro
-  FROM adj a JOIN deg d ON a.node = d.node
-  WHERE d.degree BETWEEN 2 AND {_AA_DEGREE_CAP}
-),
-pairs AS (
-  SELECT a.nbr AS u, b.nbr AS v,
-         CAST(sum(a.w_micro) AS BIGINT) AS score_micro,
-         CAST(count(*) AS BIGINT) AS common_neighbors
-  FROM mid a JOIN mid b ON a.node = b.node AND a.nbr < b.nbr
-  GROUP BY 1, 2
-),
-nonedges AS (
-  SELECT p.* FROM pairs p
-  ANTI JOIN e0 e ON p.u = e.src AND p.v = e.dst
-)
-SELECT u, v, common_neighbors, score_micro,
-       round(score_micro / 1000000.0, 6) AS aa_score
-FROM nonedges
-ORDER BY score_micro DESC, u, v
-LIMIT {_AA_TOP_K}
-"""
-
-
-@_register("adamic_adar_link_prediction", _ADAMIC_ADAR_SQL)
-def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction on the support->=2 co-purchase graph: for every
-    NON-edge pair (u, v) sharing >=1 common neighbor, the Adamic-Adar
-    score sum(1/ln(deg(z))) over common neighbors z; top-100.
-
-    Completes the graph suite's feature-generation story (census /
-    centrality / communities / cores already exist): AA scores are the
-    classic similarity feature for recommending related items or
-    flagging near-duplicate entities that the edge sample missed.
-
-    Scale design: pairs are generated PER COMMON NEIGHBOR (one keyed
-    self-join of the adjacency list on the center node), so the blowup
-    is sum(deg(z)^2) — the degree cap (:data:`_AA_DEGREE_CAP`) bounds
-    the PER-NODE term (hubs contribute ~zero signal, 1/ln(deg) -> 0,
-    but quadratic pairs, so they never vote), and the r12 sf1 guard
-    run showed the cap alone is not enough: a DENSER graph (sf1:
-    20k nodes, avg degree 120, sum d^2 = 3.0e8) blows the per-task
-    volume with every node under the cap (longest task 37 s, 30 GB of
-    hash-agg spill at 32 partitions).  The pair stage is therefore
-    WIDTH-ADAPTIVE: one bounded 1-row aggregate measures the exact
-    pair volume sum(d^2) over voting nodes (2 <= d <= cap; hubs above
-    the cap are excluded by the between-filter, not clamped — they
-    contribute 0, not cap^2) and the self-join repartitions to
-    ceil(volume / _AA_PAIRS_PER_TASK) node partitions, so the longest
-    task carries ~constant work at ANY density (the same
-    measured-stats-then-size idiom as the LSH hot-bucket guard; the
-    extra action is one aggregate over the node-grain degree table).
-    Existing edges drop with one anti-join.  Integer-first: each
-    neighbor's weight is round(1e6/ln(deg)) in micro units, the score
-    an exact BIGINT sum — addition order can never flip the rounded
-    value or the top-k ordering, which DuckDB replays exactly."""
-    from cid_etl_spark.queries.curation import _copurchase_edges
-
-    # The edge list feeds THREE consumers (two adjacency directions +
-    # the final anti-join); localCheckpoint materializes the basket
-    # self-join once instead of re-executing it per branch (same
-    # fault-tolerance trade as operators/graph.py's module note).
-    edges = _copurchase_edges(spark, sf_dir, min_support=2).localCheckpoint(
-        eager=False
-    )
-    adj = edges.selectExpr("src AS node", "dst AS nbr").unionAll(
-        edges.selectExpr("dst AS node", "src AS nbr")
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-    mid = (
-        adj.join(deg, "node")
-        .filter(F.col("degree").between(2, _AA_DEGREE_CAP))
-        .select(
-            "node",
-            "nbr",
-            F.round(F.lit(1000000.0) / F.log(F.col("degree")))
-            .cast("long")
-            .alias("w_micro"),
-        )
-    )
-    # Size the pair-generation stage from the data (r12): the exact
-    # expansion volume is sum(d^2) over voting nodes — one bounded
-    # 1-row action over the node-grain degree table (edges are already
-    # checkpointed, so this re-runs one cheap aggregate, not the
-    # basket self-join).  Plan-only consumers (PLANS.md generation,
-    # batch planning) signal via plans.fragments.plan_only to skip
-    # the sizing job — it executes Spark work at DataFrame-CONSTRUCTION time
-    # (ADVICE r12 #2), which plan audits neither need nor want to pay;
-    # they fall back to defaultParallelism, which only changes the
-    # repartition width, never the result.
-    from cid_etl_spark.plans.fragments import plan_only_active
-
-    if plan_only_active():
-        pair_volume = 0
-    else:
-        pair_volume = (
-            deg.filter(F.col("degree").between(2, _AA_DEGREE_CAP))
-            .agg(F.sum(F.col("degree") * F.col("degree")).alias("v"))
-            .collect()[0]["v"]
-            or 0
-        )
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        -(-int(pair_volume) // _AA_PAIRS_PER_TASK),
-    )
-    mid = mid.repartition(n_parts, "node")
-    a, b = mid.alias("a"), mid.alias("b")
-    # The pair stream is distinct-heavy (common-neighbor pairs barely
-    # collapse), so the FINAL (u, v) aggregation and the anti-join must
-    # run at the same adaptive width — at the default 32 shuffle
-    # partitions the r12 sf1 guard measured a 29 s sort-agg task with
-    # 15 GB of spill on exactly this stage.  The explicit (u, v)
-    # repartition satisfies the aggregate's distribution AND is reused
-    # by the anti-join's pairs side, so widening costs no extra
-    # exchange downstream.
-    pairs = (
-        a.join(b, (F.col("a.node") == F.col("b.node")) & (F.col("a.nbr") < F.col("b.nbr")))
-        .select(
-            F.col("a.nbr").alias("u"),
-            F.col("b.nbr").alias("v"),
-            F.col("a.w_micro").alias("w_micro"),
-        )
-        .repartition(n_parts, "u", "v")
-        .groupBy("u", "v")
-        .agg(
-            F.sum("w_micro").alias("score_micro"),
-            F.count(F.lit(1)).alias("common_neighbors"),
-        )
-    )
-    nonedges = pairs.join(
-        edges,
-        (pairs["u"] == edges["src"]) & (pairs["v"] == edges["dst"]),
-        "left_anti",
-    )
-    return (
-        nonedges.select(
-            "u",
-            "v",
-            "common_neighbors",
-            "score_micro",
-            F.round(F.col("score_micro") / 1000000.0, 6).alias("aa_score"),
-        )
-        .orderBy(F.col("score_micro").desc(), "u", "v")
-        .limit(_AA_TOP_K)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Association rules (confidence + lift) from co-purchase pairs
-# ---------------------------------------------------------------------------
-
-_ASSOC_TOP_K = 100
-
-_ASSOC_RULES_SQL = f"""
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM items),
-supp AS (SELECT l_partkey, count(*) AS item_orders FROM items GROUP BY 1),
-pairs AS (
-  SELECT a.l_partkey AS antecedent, b.l_partkey AS consequent,
-         count(*) AS pair_orders
-  FROM items a
-  JOIN items b ON a.l_orderkey = b.l_orderkey
-              AND a.l_partkey <> b.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT p.antecedent, p.consequent,
-       CAST(p.pair_orders AS BIGINT) AS pair_orders,
-       CAST(sa.item_orders AS BIGINT) AS antecedent_orders,
-       CAST(sc.item_orders AS BIGINT) AS consequent_orders,
-       round(CAST(p.pair_orders AS DOUBLE) / sa.item_orders, 6) AS confidence,
-       round(CAST(p.pair_orders AS DOUBLE) * n.n_orders
-             / (CAST(sa.item_orders AS DOUBLE) * sc.item_orders), 6) AS lift
-FROM pairs p
-JOIN supp sa ON p.antecedent = sa.l_partkey
-JOIN supp sc ON p.consequent = sc.l_partkey
-CROSS JOIN n
-ORDER BY lift DESC, confidence DESC, p.antecedent, p.consequent
-LIMIT {_ASSOC_TOP_K}
-"""
-
-
-@_register("assoc_rules_copurchase", _ASSOC_RULES_SQL)
-def assoc_rules_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association-rule mining over order baskets: directional rules
-    u -> v with pair support >= 2, scored by confidence
-    (P(v|u) = pairs/supp(u)) and lift (confidence / P(v)); top-100 by
-    lift.  Extends ``copurchase_part_pairs`` (raw co-occurrence
-    counts) with the rule-mining semantics an item-recommendation or
-    data-mixture diagnostic actually consumes.
-
-    Scale: one basket-keyed self-join bounded by basket size squared
-    (the same plan family as the census suite), singleton supports
-    are one groupBy, and the support tables join back keyed on the
-    item (broadcast when dims fit).  All counts are exact integers;
-    confidence and lift are SINGLE divisions of exact integers, so
-    rounding is engine-stable and the (lift, confidence, u, v)
-    ordering is deterministic."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # Four consumers (pair self-join x2, supports, order count):
-    # materialize the per-order item set once.
-    items = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_orders_df = items.agg(
-        F.countDistinct("l_orderkey").alias("n_orders")
-    )
-    supp = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("item_orders"))
-    a, b = items.alias("a"), items.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("antecedent"),
-            F.col("b.l_partkey").alias("consequent"),
-        )
-        .agg(F.count(F.lit(1)).alias("pair_orders"))
-        .filter(F.col("pair_orders") >= 2)
-    )
-    sa = supp.selectExpr("l_partkey AS antecedent", "item_orders AS antecedent_orders")
-    sc = supp.selectExpr("l_partkey AS consequent", "item_orders AS consequent_orders")
-    return (
-        pairs.join(F.broadcast(sa), "antecedent")
-        .join(F.broadcast(sc), "consequent")
-        .crossJoin(F.broadcast(n_orders_df))
-        .select(
-            "antecedent",
-            "consequent",
-            "pair_orders",
-            "antecedent_orders",
-            "consequent_orders",
-            F.round(
-                F.col("pair_orders").cast("double") / F.col("antecedent_orders"), 6
-            ).alias("confidence"),
-            F.round(
-                F.col("pair_orders").cast("double")
-                * F.col("n_orders")
-                / (
-                    F.col("antecedent_orders").cast("double")
-                    * F.col("consequent_orders")
-                ),
-                6,
-            ).alias("lift"),
-        )
-        .orderBy(
-            F.col("lift").desc(),
-            F.col("confidence").desc(),
-            "antecedent",
-            "consequent",
-        )
-        .limit(_ASSOC_TOP_K)
-    )
-
 
 # ---------------------------------------------------------------------------
 # Mutual information between two categorical columns
@@ -1040,120 +755,6 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.coalesce(1.0 / F.col("_first_hit").cast("double"), F.lit(0.0)), 6
         ).alias("mrr"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Apriori frequent 3-itemsets (candidate generation + downward-closure prune)
-# ---------------------------------------------------------------------------
-
-_APRIORI_MIN_SUPPORT = 2
-_APRIORI_TOP_K = 50
-
-#: The ORACLE is the direct 3-way basket join — deliberately NOT a
-#: replay of the Apriori plan: by downward closure the pruned
-#: candidate path must produce exactly the set the brute-force
-#: enumeration produces, so the oracle independently checks the
-#: algorithm, not just the arithmetic.
-_APRIORI_SQL = f"""
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-SELECT a.l_partkey AS item_a, b.l_partkey AS item_b, c.l_partkey AS item_c,
-       CAST(count(*) AS BIGINT) AS support
-FROM items a
-JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-JOIN items c ON a.l_orderkey = c.l_orderkey AND b.l_partkey < c.l_partkey
-GROUP BY 1, 2, 3
-HAVING count(*) >= {_APRIORI_MIN_SUPPORT}
-ORDER BY support DESC, item_a, item_b, item_c
-LIMIT {_APRIORI_TOP_K}
-"""
-
-
-@_register("apriori_triples_copurchase", _APRIORI_SQL)
-def apriori_triples_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent 3-itemsets over order baskets via the Apriori level-3
-    step: candidates are generated from the FREQUENT PAIRS (join L2
-    with itself on the shared first item, b < c), pruned by downward
-    closure (the third face (b, c) must itself be a frequent pair),
-    and only the survivors are counted against the baskets.  Top-50
-    by support.
-
-    This is the canonical distributed mining pattern the pair rows
-    (copurchase/assoc_rules) build toward.  Counting is ORDER-KEYED
-    (round-12 rewrite): the original plan counted candidates via an
-    item-keyed join (cand ⋈ items ON item_a), whose output is
-    sum over candidates of freq(item_a) — the r12 sf1 guard measured
-    it at a 54-72 s longest task (|L2| = 1.2M pairs at 10× density
-    makes |C3| × item frequency explode) while the order-keyed
-    instance enumeration is sum(C(basket, 3)) = 16M rows there, with
-    the per-TASK bound |orders/task| × C(max_basket, 3) — a data-model
-    constant (max basket 17), not a density-dependent volume.  The
-    Apriori structure stays, applied where it pays: baskets are first
-    trimmed to items appearing in some frequent pair (the L1 prune),
-    and downward closure prunes INSTANCES through three face
-    semi-joins against L2 before anything shuffles to the count — a
-    triple survives only if (a,b), (a,c), (b,c) are all frequent,
-    exactly the membership C3 would test, without the item-keyed
-    blowup.  (On a wide-basket corpus where C(basket,3) itself
-    explodes, the classic hash-tree broadcast of C3 replaces the
-    enumeration; at that point |C3| is the smaller side by
-    construction.)  The oracle is deliberately the brute-force 3-way
-    enumeration, NOT a replay: downward closure guarantees set
-    equality, so DuckDB independently checks the ALGORITHM.  All
-    values are exact integers."""
-    from cid_etl_spark.queries.curation import _copurchase_edges
-
-    li = load_table(spark, sf_dir, "lineitem")
-    items = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # L2 = frequent pairs (support >= 2), a < b — the same definition
-    # as the co-purchase edge list.
-    l2 = _copurchase_edges(spark, sf_dir, min_support=_APRIORI_MIN_SUPPORT
-                           ).localCheckpoint(eager=False)
-    # L1 prune: only items that appear in some frequent pair can be in
-    # a frequent triple — trims every basket before enumeration.
-    l1 = (
-        l2.selectExpr("src AS item")
-        .unionAll(l2.selectExpr("dst AS item"))
-        .distinct()
-    )
-    itf = items.join(
-        l1, items["l_partkey"] == l1["item"], "left_semi"
-    )
-    i1 = itf.selectExpr("l_orderkey AS o", "l_partkey AS a")
-    i2 = itf.selectExpr("l_orderkey AS o", "l_partkey AS b")
-    i3 = itf.selectExpr("l_orderkey AS o", "l_partkey AS c")
-    # Order-local pair instances, face-pruned to frequent pairs before
-    # the third item joins in (downward closure, instance side).
-    pairs_o = (
-        i1.join(i2, "o")
-        .filter(F.col("a") < F.col("b"))
-        .join(l2.selectExpr("src AS a", "dst AS b"), ["a", "b"], "left_semi")
-    )
-    trip_o = (
-        pairs_o.join(i3, "o")
-        .filter(F.col("c") > F.col("b"))
-        .join(l2.selectExpr("src AS b", "dst AS c"), ["b", "c"], "left_semi")
-        .join(l2.selectExpr("src AS a", "dst AS c"), ["a", "c"], "left_semi")
-    )
-    support = (
-        trip_o.groupBy("a", "b", "c")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= _APRIORI_MIN_SUPPORT)
-    )
-    return (
-        support.select(
-            F.col("a").alias("item_a"),
-            F.col("b").alias("item_b"),
-            F.col("c").alias("item_c"),
-            F.col("support").cast("long").alias("support"),
-        )
-        .orderBy(F.col("support").desc(), "item_a", "item_b", "item_c")
-        .limit(_APRIORI_TOP_K)
     )
 
 

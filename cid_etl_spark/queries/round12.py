@@ -1134,7 +1134,7 @@ def mcnemar_heuristic_vs_classifier(spark: SparkSession, sf_dir: str) -> DataFra
 # Decision-stump split finder (best gini split per feature)
 # ---------------------------------------------------------------------------
 
-_GINI_SQL = """
+_GINI_SPLIT_SQL = """
 WITH f AS (
   SELECT CAST(round(l_quantity) AS BIGINT) AS qty,
          CAST(round(l_discount * 100) AS BIGINT) AS disc,
@@ -1180,7 +1180,7 @@ ORDER BY feature
 """
 
 
-@_register("gini_best_split_lineitem", _GINI_SQL)
+@_register("gini_best_split_lineitem", _GINI_SPLIT_SQL)
 def gini_best_split_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decision-stump learner: the best gini-impurity split threshold
     per numeric feature (quantity, discount) against the return-flag

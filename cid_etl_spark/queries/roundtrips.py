@@ -912,81 +912,6 @@ def simhash_pairs_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", F.col("hamming").cast("int"))
 
 
-def _pagerank_sql(damping: float = 0.85, iterations: int = 10) -> str:
-    """DuckDB twin of the fixed-iteration PageRank: the recurrence is
-    unrolled symbolically (pr0..prK as chained CTEs — recursive CTEs
-    forbid aggregation in the recursive term), with the identical
-    ``(1-d)/N + d * Σ rank/deg`` arithmetic per round."""
-    rounds = []
-    for k in range(1, iterations + 1):
-        rounds.append(
-            f"""pr{k} AS (
-      SELECT nd.node,
-             (1 - {damping}) / (SELECT c FROM n)
-               + {damping} * coalesce(s.v, 0.0) AS rank
-      FROM nodes nd LEFT JOIN (
-          SELECT e.dst AS node, sum(p.rank / deg.d) AS v
-          FROM e0 e
-          JOIN pr{k - 1} p ON e.src = p.node
-          JOIN deg ON deg.src = e.src
-          GROUP BY e.dst
-      ) s USING (node)
-    )"""
-        )
-    chain = ",\n    ".join(rounds)
-    return f"""
-    WITH e0 AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-      JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-    ),
-    deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS d FROM e0 GROUP BY src),
-    nodes AS (SELECT DISTINCT src AS node FROM e0),
-    n AS (SELECT count(*) AS c FROM nodes),
-    pr0 AS (SELECT node, 1.0 / (SELECT c FROM n) AS rank FROM nodes),
-    {chain}
-    SELECT node AS l_partkey, round(rank, 6) AS pagerank
-    FROM pr{iterations}
-    """
-
-
-@_register("pagerank_copurchase", _pagerank_sql())
-def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the part co-purchase graph (parts linked when they
-    share an order) — the iterative-algorithm family beyond connected
-    components: operators.graph.pagerank runs 10 fixed join+aggregate
-    rounds, one shuffle per round, degrees and edges materialized once.
-    The co-purchase graph is symmetric (both directions of every pair
-    are emitted), so no dangling-mass handling is needed and
-    ``symmetric=True`` applies: the node set is the distinct sources
-    (exactly the oracle's ``SELECT DISTINCT src``) and the per-round
-    zero-fill left join is dropped — identical ranks, ten fewer joins
-    (r13; verified value-identical at sf0.1 and re-oracled).  The
-    DuckDB twin unrolls the same 10 rounds symbolically; ranks are
-    rounded to 6 digits on both sides after the final round only."""
-    from cid_etl_spark.operators.graph import pagerank
-
-    li = load_table(spark, sf_dir, "lineitem")
-    basket = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = basket.alias("a"), basket.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .distinct()
-    )
-    ranks = pagerank(edges, damping=0.85, iterations=10, symmetric=True)
-    return ranks.select(
-        F.col("node").alias("l_partkey"), F.round("rank", 6).alias("pagerank")
-    )
-
-
 @_register(
     "tpch_q7_nation_volume",
     """

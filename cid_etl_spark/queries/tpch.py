@@ -644,57 +644,6 @@ def argmax_suite_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "copurchase_part_pairs",
-    """
-    WITH items AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
-    SELECT a.l_partkey AS part_a,
-           b.l_partkey AS part_b,
-           CAST(count(*) AS BIGINT) AS n_orders
-    FROM items a
-    JOIN items b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    ORDER BY n_orders DESC, part_a, part_b
-    LIMIT 50
-    """,
-)
-def copurchase_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence: parts bought together, ranked.
-    The self-join is keyed on the ORDER (basket), so pair explosion is
-    bounded by basket size squared — never corpus squared; the distinct
-    collapses repeat lines first so a 100-line order of one part costs
-    one row.  One shuffle lands both join sides AND feeds the pair
-    count; the top-50 edge is a TakeOrderedAndProject heap with full
-    tiebreak.  The same plan at 100 TB is the co-occurrence step of
-    recommendation and phrase-mining pipelines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # partition by the basket key alone: hash(orderkey) clusters the
-    # (orderkey, partkey) distinct AND both self-join sides, so the
-    # whole pairing pipeline reuses one exchange
-    items = (
-        li.select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-    )
-    a = items.alias("a")
-    b = items.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b")
-    )
-    return (
-        pairs.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-        .orderBy(F.desc("n_orders"), "part_a", "part_b")
-        .limit(50)
-    )
-
-
-@_register(
     "headdup_keep_longest",
     r"""
     WITH keyed AS (

@@ -68,3 +68,39 @@ def test_star_cc_contracts_long_chain_in_logarithmic_rounds(spark):
     out = connected_components_star(df, max_iter=12).collect()
     assert len(out) == n
     assert {r.cluster_id for r in out} == {0}
+
+
+def test_pagerank_matches_power_iteration(spark):
+    """The fixed-round operator equals a dense power iteration with the
+    same damping and round count on a small symmetric graph (uneven
+    degrees, a triangle, a pendant chain and a separate component)."""
+    import numpy as np
+
+    from cid_etl_spark.operators.graph import pagerank
+    from cid_etl_spark.queries.graph import PAGERANK_DAMPING, PAGERANK_ITERATIONS
+
+    undirected = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6), (2, 7), (8, 9)]
+    edges = undirected + [(v, u) for u, v in undirected]
+    nodes = sorted({u for u, _ in edges})
+    idx = {n: i for i, n in enumerate(nodes)}
+    n = len(nodes)
+    out_deg = np.zeros(n)
+    for u, _ in edges:
+        out_deg[idx[u]] += 1
+    m = np.zeros((n, n))  # m[v, u] = 1/deg(u) for every edge u -> v
+    for u, v in edges:
+        m[idx[v], idx[u]] += 1.0 / out_deg[idx[u]]
+    want = np.full(n, 1.0 / n)
+    for _ in range(PAGERANK_ITERATIONS):
+        want = (1.0 - PAGERANK_DAMPING) / n + PAGERANK_DAMPING * (m @ want)
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r.node: r.rank
+        for r in pagerank(
+            df, damping=PAGERANK_DAMPING, iterations=PAGERANK_ITERATIONS
+        ).collect()
+    }
+    assert sorted(got) == nodes
+    for node in nodes:
+        assert abs(got[node] - want[idx[node]]) <= 1e-12, node

@@ -1,11 +1,13 @@
 """Registry machinery: the freshness ladder read from
-``CORRECTNESS_rNN.json`` files, the order it induces, and the per-input
-scratch directories of queries that write files (the only test here
-that needs the Spark session).
+``CORRECTNESS_rNN.json`` files, the order it induces, the package
+facade's name space, and the per-input scratch directories of queries
+that write files (the only test here that needs the Spark session).
 """
 
 from __future__ import annotations
 
+import ast
+import collections
 import hashlib
 import json
 import tempfile
@@ -52,6 +54,33 @@ def test_order_puts_priority_then_unverified_then_stalest():
     assert order[1:4] == new
     tail = [n for n in order if n in (old, fresh)]
     assert tail == [old, fresh]
+
+
+def test_query_modules_define_disjoint_names():
+    """The package facade re-exports every module-level name of every
+    query module, first module wins; a name defined in two modules
+    would silently export only one of them."""
+    where = collections.defaultdict(list)
+    for path in sorted(
+        (Path(__file__).resolve().parents[1] / "cid_etl_spark" / "queries")
+        .glob("*.py")
+    ):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [
+                    n.id for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name)
+                ]
+            else:
+                continue
+            for name in names:
+                if path.name not in where[name]:
+                    where[name].append(path.name)
+    shared = {n: files for n, files in where.items() if len(files) > 1}
+    assert not shared, shared
 
 
 def test_scratch_dir_keys_on_the_whole_input_path(spark, tmp_path, monkeypatch):

@@ -1,4 +1,5 @@
-"""Semantic unit tests for the round-11 queries (queries/round11.py):
+"""Semantic unit tests for the round-11 queries (queries/round11.py,
+and its co-purchase rows in queries/graph.py):
 brute-force cross-checks and closed-form properties, independent of
 the DuckDB oracle (tests/test_oracle_parity.py covers the oracle
 hash-match at sf0.001; these pin the MATH)."""
@@ -39,7 +40,7 @@ def test_adamic_adar_matches_bruteforce(spark, duck):
     the same support->=2 graph: same integer micro scores, same
     deterministic ordering, no existing edge leaking through the
     anti-join."""
-    from cid_etl_spark.queries.round11 import (
+    from cid_etl_spark.queries.graph import (
         _AA_DEGREE_CAP,
         _AA_TOP_K,
         adamic_adar_link_prediction,
@@ -81,7 +82,7 @@ def test_adamic_adar_matches_bruteforce(spark, duck):
 def test_assoc_rules_confidence_lift_bruteforce(spark, duck):
     """Directional rules: confidence = pairs/supp(antecedent), lift
     symmetric, pair support bounded by both singleton supports."""
-    from cid_etl_spark.queries.round11 import assoc_rules_copurchase
+    from cid_etl_spark.queries.graph import assoc_rules_copurchase
 
     baskets = _baskets(duck)
     n_orders = len(baskets)
@@ -307,9 +308,9 @@ def test_apriori_triples_downward_closure_and_bruteforce(spark, duck):
     """The Apriori path must equal brute-force triple enumeration
     (downward closure makes the pruning lossless), and every reported
     triple's three faces must be frequent pairs."""
-    from cid_etl_spark.queries.round11 import (
-        _APRIORI_MIN_SUPPORT,
+    from cid_etl_spark.queries.graph import (
         _APRIORI_TOP_K,
+        MIN_SUPPORT,
         apriori_triples_copurchase,
     )
 
@@ -323,7 +324,7 @@ def test_apriori_triples_downward_closure_and_bruteforce(spark, duck):
                     triple[(s[i], s[j], s[k])] += 1
     expected = sorted(
         ((a, b, c, n) for (a, b, c), n in triple.items()
-         if n >= _APRIORI_MIN_SUPPORT),
+         if n >= MIN_SUPPORT),
         key=lambda r: (-r[3], r[0], r[1], r[2]),
     )[:_APRIORI_TOP_K]
 

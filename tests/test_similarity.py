@@ -323,3 +323,23 @@ def test_pq_lloyd_refinement_reduces_quantization_error(spark):
     b0, sd = pq_sampled_codebooks(emb, lloyd_iters=0)
     b3, _ = pq_sampled_codebooks(emb, lloyd_iters=3)
     assert qerr(b3, sd) <= qerr(b0, sd)
+
+
+def test_exact_pairs_distributed_builds_without_type_hint_warning(spark):
+    """The grouped-map function carries no partial type hints, so
+    ``applyInPandas`` takes its grouped-map eval type without trying
+    (and failing) to infer one from annotations — no UserWarning."""
+    import warnings
+
+    from cid_etl_spark.operators.similarity import exact_cosine_pairs_distributed
+
+    df = _vecs(spark, [(1, [1.0, 0.0]), (2, [1.0, 0.0])])
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pairs = exact_cosine_pairs_distributed(df, threshold=0.5, n_blocks=2)
+    noisy = [
+        str(w.message) for w in caught
+        if issubclass(w.category, UserWarning) and "type hints" in str(w.message)
+    ]
+    assert not noisy, noisy
+    assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(1, 2)]
