@@ -3,7 +3,7 @@
 Two tiers, as a real 100 TB pipeline would run them:
 
 - **Brute-force cosine top-k** — the exact baseline: broadcast the
-  (small) query set against the corpus, one codegen'd pass per corpus
+  (small) query set against the corpus, one pass per corpus
   partition, per-query top-k via window.  Cost O(|Q|·N); right answer,
   embarrassingly parallel, no corpus shuffle.
 - **LSH-bucketed ANN** — random-hyperplane signatures bucket the corpus
@@ -24,7 +24,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cid_etl_spark.functions.vectors import cosine_similarity, dot
+from cid_etl_spark.functions.vectors import (
+    array_sql,
+    col_sql,
+    cosine_similarity,
+    dot_sql,
+)
 
 
 def cosine_topk_bruteforce(
@@ -49,7 +54,7 @@ def cosine_topk_bruteforce(
     ).select(
         F.col(query_id_col),
         F.col(id_col),
-        cosine_similarity(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
+        cosine_similarity(vec_col, query_vec_col).alias("cosine"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.desc("cosine"), F.asc(id_col)
@@ -80,18 +85,18 @@ def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
 
 
 def random_hyperplane_signature(
-    vec: Column | str, dim: int, bits: int = 8, seed: int = 42
+    vec: str, dim: int, bits: int = 8, seed: int = 42
 ) -> Column:
     """Sign-of-projection LSH signature as an INT (one bit per
-    hyperplane).  Same-bucket vectors are likely similar in angle."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    sig = F.lit(0)
+    hyperplane) of the array column named *vec*.  Same-bucket vectors
+    are likely similar in angle.  One SQL expression, each hyperplane
+    an inline double-array literal."""
+    v = col_sql(vec)
+    sig = "0"
     for b in range(bits):
-        plane = F.array(*[F.lit(x) for x in _hyperplane(dim, b, seed)])
-        sig = sig.bitwiseOR(
-            F.when(dot(v, plane) >= 0, F.lit(1 << b)).otherwise(F.lit(0))
-        )
-    return sig
+        plane = array_sql(_hyperplane(dim, b, seed))
+        sig = f"({sig} | CASE WHEN {dot_sql(v, plane)} >= 0 THEN {1 << b} ELSE 0 END)"
+    return F.expr(sig)
 
 
 def cosine_topk_lsh(
@@ -149,14 +154,14 @@ def cosine_topk_lsh(
         queries.withColumn(
             "__sig", random_hyperplane_signature(query_vec_col, dim, bits, seed)
         )
-        .withColumn("__m", F.explode(F.array(*[F.lit(m) for m in masks])))
+        .withColumn("__m", F.expr(f"explode({array_sql(masks)})"))
         .select(
             query_id_col,
             query_vec_col,
             F.col("__sig").bitwiseXOR(F.col("__m")).alias("__bucket"),
         )
     )
-    cos = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
+    cos = cosine_similarity(vec_col, query_vec_col)
     if round_digits is not None:
         cos = F.round(cos, round_digits)
     joined = signed_corpus.join(
@@ -205,7 +210,7 @@ def embedding_neardup_pairs(
         .select(
             F.col("l.__id").alias("id_a"),
             F.col("r.__id").alias("id_b"),
-            cosine_similarity(F.col("l.__vec"), F.col("r.__vec")).alias("cosine"),
+            cosine_similarity("l.__vec", "r.__vec").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -510,7 +515,7 @@ def cosine_topk_ivf(
             "__cell"
         ),
     )
-    cos = cosine_similarity(F.col(vec_col), F.col(query_vec_col))
+    cos = cosine_similarity(vec_col, query_vec_col)
     if round_digits is not None:
         cos = F.round(cos, round_digits)
     joined = assigned.join(F.broadcast(probed), "__cell").select(

@@ -68,19 +68,23 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 #: Rows to put at the very front of the next driver window (changed
 #: plans, suspect rows).  Without an entry here the window is the
 #: never-verified rows, then the stalest green rows.  Current entries:
-#: the co-purchase graph family (queries/graph.py), whose DuckDB twins
-#: were rewritten onto one shared basket/edge/adjacency prefix.
+#: the oracled rows built on the SQL-text vector/LSH/JL expressions
+#: (functions/vectors.py), the integer-first calibration table, and
+#: the md5-MinHash rows whose DuckDB twins now band-join.
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    "copurchase_part_pairs",
-    "triangle_census_copurchase",
-    "lpa_communities_copurchase",
-    "bfs_distances_copurchase",
-    "kcore_copurchase",
-    "degree_assortativity_copurchase",
-    "pagerank_copurchase",
-    "adamic_adar_link_prediction",
-    "assoc_rules_copurchase",
-    "apriori_triples_copurchase",
+    "cosine_topk_bruteforce",
+    "cosine_topk_lsh_probeall",
+    "cosine_topk_ivf_fullprobe",
+    "jl_projection_embeddings",
+    "embedding_split_contamination",
+    "knn_label_vote_embeddings",
+    "hard_negative_mining",
+    "kmeans_cluster_assign",
+    "calibration_ece_classifier",
+    "minhash_lsh_verified",
+    "lsh_recall_report",
+    "neardup_curation_pipeline",
+    "pretraining_data_pipeline",
 )
 
 

@@ -692,7 +692,7 @@ def cosine_topk_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = emb.crossJoin(F.broadcast(q)).select(
         "query_id",
         "vec_id",
-        F.round(cosine_similarity(F.col("embedding"), F.col("qv")), 4).alias("cosine"),
+        F.round(cosine_similarity("embedding", "qv"), 4).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return joined.withColumn("__rn", F.row_number().over(w)).filter(

@@ -830,17 +830,20 @@ def jl_projection_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-to-run, needs no fitted model or driver state, and the oracle
     replays every dot product exactly (PCA by contrast is
     eigen-solver- and sign-ambiguous — unverifiable bit-for-bit).
-    Map-only Column expressions: at 100 TB this is the shuffle-free
-    pre-step that shrinks embeddings before LSH/IVF indexing or
-    near-dup blocking, trading dimensionality for distance distortion
-    bounded by the JL lemma.  Weights are uniform in [-1, 1] (signed
-    md5 mix).  Because w(i, j) is data-INDEPENDENT, the matrix is
-    hashed once on the driver and inlined as literal arrays — the
+    Map-only array expressions, one SQL text per coordinate: at 100 TB
+    this is the shuffle-free pre-step that shrinks embeddings before
+    LSH/IVF indexing or near-dup blocking, trading dimensionality for
+    distance distortion bounded by the JL lemma.  Weights are uniform
+    in [-1, 1] (signed md5 mix).  Because w(i, j) is data-INDEPENDENT,
+    the matrix is hashed once on the driver and inlined as literal
+    arrays — the
     executors run multiply-add only; hashing per element inside the
     lambda would pay the interpreted md5 path per value (~16 µs/term,
     measured for the verification-only suites) for values that never
     change."""
     import hashlib
+
+    from cid_etl_spark.functions.vectors import array_sql, col_sql, dot_sql
 
     emb = load_table(spark, sf_dir, "embeddings")
     max_dim = 256
@@ -850,15 +853,10 @@ def jl_projection_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (hv % 2001 - 1000) / 1000.0
 
     def proj(j: int):
-        weights = F.array(*[F.lit(w(i, j)) for i in range(1, max_dim + 1)])
-        terms = F.zip_with(
-            F.col("embedding"),
-            F.slice(weights, 1, F.size("embedding")),
-            lambda x, wt: x.cast("double") * wt,
-        )
-        return F.round(
-            F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x), 4
-        ).alias(f"p{j}")
+        weights = array_sql(w(i, j) for i in range(1, max_dim + 1))
+        vec = col_sql("embedding")
+        coord = dot_sql(vec, f"slice({weights}, 1, size({vec}))")
+        return F.expr(f"round({coord}, 4)").alias(f"p{j}")
 
     return emb.select("vec_id", *[proj(j) for j in range(4)])
 

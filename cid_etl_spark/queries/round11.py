@@ -115,6 +115,18 @@ _ECE_BINS = 10
 _ECE_LABEL_THRESHOLD = 0.7
 
 
+def _micro_sql(num: str, den: str, div: str) -> str:
+    """``num / den / 10⁶`` to 6 dp, rounded half-up in BIGINT before
+    the one double division — both engines then return the same
+    double.  *num* and *den* are non-negative BIGINT SQL expressions
+    in millionths; *div* is the integer-division operator (Spark
+    ``DIV``, DuckDB ``//``).  Rounding the double quotient instead
+    (``round(x, 6)``) splits the engines on exact 7th-digit ties:
+    Spark rounds the shortest decimal string half-up, DuckDB rounds
+    ``x * 1e6`` in binary."""
+    return f"CAST((2 * ({num}) + ({den})) {div} (2 * ({den})) AS DOUBLE) / 1000000.0"
+
+
 def _ece_sql() -> str:
     from cid_etl_spark.functions.text import STOPWORDS
 
@@ -171,16 +183,23 @@ scored AS (
          CASE WHEN h.quality >= {_ECE_LABEL_THRESHOLD} THEN 1 ELSE 0 END AS label
   FROM pred p JOIN heur h USING (doc_id)
 ),
-bins AS (
+sums AS (
   SELECT bin,
          CAST(count(*) AS BIGINT) AS n_docs,
-         round(avg(conf), 6) AS mean_conf,
-         round(avg(CAST(label AS DOUBLE)), 6) AS frac_pos,
-         round(abs(avg(conf) - avg(CAST(label AS DOUBLE))), 6) AS abs_gap
+         CAST(sum(CAST(round(conf * 1000000) AS BIGINT)) AS BIGINT) AS conf_u,
+         CAST(sum(CAST(label AS BIGINT)) AS BIGINT) AS n_pos
   FROM scored GROUP BY bin
+),
+bins AS (
+  SELECT bin, n_docs, conf_u, n_pos,
+         abs(conf_u - 1000000 * n_pos) AS gap_u
+  FROM sums
 )
-SELECT bin, n_docs, mean_conf, frac_pos, abs_gap,
-       round(sum(n_docs * abs_gap) OVER () / sum(n_docs) OVER (), 6) AS ece
+SELECT bin, n_docs,
+       {_micro_sql("conf_u", "n_docs", "//")} AS mean_conf,
+       {_micro_sql("1000000 * n_pos", "n_docs", "//")} AS frac_pos,
+       {_micro_sql("gap_u", "n_docs", "//")} AS abs_gap,
+       {_micro_sql("sum(gap_u) OVER ()", "sum(n_docs) OVER ()", "//")} AS ece
 FROM bins
 ORDER BY bin
 """
@@ -205,8 +224,10 @@ def calibration_ece_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 10 rows.  Shuffle volume is the bin table, not the corpus.
     Confidence is derived from the exact integer margin
     (operators.classifier), the label from the exact discrete
-    heuristic, so bin assignment is engine-stable; in-bin averages
-    follow the standing 6-dp double precedent."""
+    heuristic, so bin assignment is engine-stable; each bin sums its
+    confidences in exact millionths and its positives as BIGINTs, and
+    every 6-dp output is rounded from those integers (:func:`_micro_sql`),
+    so the two engines agree on every digit."""
     from cid_etl_spark.functions.text import quality_score
     from cid_etl_spark.operators.classifier import quality_classifier
 
@@ -226,23 +247,17 @@ def calibration_ece_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bins = both.groupBy("bin").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("conf"), 6).alias("mean_conf"),
-        F.round(F.avg(F.col("label").cast("double")), 6).alias("frac_pos"),
-        F.round(
-            F.abs(F.avg("conf") - F.avg(F.col("label").cast("double"))), 6
-        ).alias("abs_gap"),
-    )
-    w = Window.partitionBy()
+        F.sum(F.round(F.col("conf") * 1000000).cast("long")).alias("conf_u"),
+        F.sum(F.col("label").cast("long")).alias("n_pos"),
+    ).withColumn("gap_u", F.abs(F.col("conf_u") - 1000000 * F.col("n_pos")))
     return bins.select(
         "bin",
         "n_docs",
-        "mean_conf",
-        "frac_pos",
-        "abs_gap",
-        F.round(
-            F.sum(F.col("n_docs") * F.col("abs_gap")).over(w)
-            / F.sum("n_docs").over(w),
-            6,
+        F.expr(_micro_sql("conf_u", "n_docs", "DIV")).alias("mean_conf"),
+        F.expr(_micro_sql("1000000 * n_pos", "n_docs", "DIV")).alias("frac_pos"),
+        F.expr(_micro_sql("gap_u", "n_docs", "DIV")).alias("abs_gap"),
+        F.expr(
+            _micro_sql("sum(gap_u) OVER ()", "sum(n_docs) OVER ()", "DIV")
         ).alias("ece"),
     ).orderBy("bin")
 

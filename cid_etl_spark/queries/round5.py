@@ -282,7 +282,7 @@ def knn_label_vote_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             "label",
-            F.round(cosine_similarity(F.col("embedding"), F.col("qv")), 4)
+            F.round(cosine_similarity("embedding", "qv"), 4)
             .alias("cosine"),
         )
     )
@@ -2073,28 +2073,11 @@ def interarrival_burstiness_users(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _lsh_recall_sql(num_hashes: int = 16, num_bands: int = 4, seed: int = 42) -> str:
-    """DuckDB twin of the LSH recall report: the banded-candidate CTEs
-    are the same construction as _minhash_verified_sql (same md5-prefix
-    base hash, same LCG permutation literals, raw band-key strings);
+    """DuckDB twin of the LSH recall report: the banded candidates are
+    the shared md5-MinHash CTEs of the minhash_lsh_verified twin;
     ground truth is the UNBLOCKED exact-Jaccard pair set."""
-    from cid_etl_spark.operators.dedup import _hash_params
+    from cid_etl_spark.queries.roundtrips import _minhash_candidate_ctes
 
-    m = (1 << 31) - 1
-    params = _hash_params(num_hashes, seed)
-    mins = ",\n               ".join(
-        f"list_min(list_transform(hv, h -> ({a} * h + {b}) % {m})) AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    rows_per_band = num_hashes // num_bands
-    bands = ",\n               ".join(
-        "("
-        + " || ',' || ".join(
-            f"m{b * rows_per_band + r}::VARCHAR" for r in range(rows_per_band)
-        )
-        + f") AS b{b}"
-        for b in range(num_bands)
-    )
-    band_match = " OR ".join(f"a.b{b} = b.b{b}" for b in range(num_bands))
     return rf"""
     WITH sh AS (
       SELECT doc_id,
@@ -2104,27 +2087,7 @@ def _lsh_recall_sql(num_hashes: int = 16, num_bands: int = 4, seed: int = 42) ->
              )) AS grams
       FROM documents
     ),
-    hv AS (
-      SELECT doc_id,
-             list_transform(grams,
-                            g -> ('0x' || substr(md5(g), 1, 7))::BIGINT) AS hv
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id,
-               {mins}
-      FROM hv
-    ),
-    banded AS (
-      SELECT doc_id,
-               {bands}
-      FROM sig
-    ),
-    cand AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.doc_id < b.doc_id AND ({band_match})
-    ),
+    {_minhash_candidate_ctes(num_hashes, num_bands, seed)},
     truth AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM sh a JOIN sh b ON a.doc_id < b.doc_id

@@ -759,12 +759,17 @@ def winnowing_fingerprints_verified(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _minhash_verified_sql(num_hashes: int = 16, num_bands: int = 4, seed: int = 42) -> str:
-    """DuckDB twin of the md5-based MinHash pipeline: identical shingle
-    tokenization (proven by the ngram_jaccard oracle), identical
-    28-bit md5 base hash, the same LCG-derived universal-hash params
-    inlined as literals, band keys as raw value strings, and the same
-    exact-Jaccard verification."""
+def _minhash_candidate_ctes(
+    num_hashes: int = 16, num_bands: int = 4, seed: int = 42
+) -> str:
+    """The md5-MinHash LSH candidate CTEs shared by the DuckDB twins,
+    over a CTE ``sh(doc_id, grams)``: the 28-bit md5-prefix base hash
+    (``hv``), the same LCG-derived universal-hash params inlined as
+    literals (``sig``), one row per band with its raw value-string key
+    (``band_keys(doc_id, band_no, band_key)``), and ``cand(id_a, id_b)``
+    — the DISTINCT pairs sharing at least one band key, found by an
+    equi-join on (band_no, band_key).  An OR of band equalities in the
+    join condition instead forces DuckDB to compare all doc pairs."""
     from cid_etl_spark.operators.dedup import _hash_params
 
     m = (1 << 31) - 1
@@ -774,15 +779,63 @@ def _minhash_verified_sql(num_hashes: int = 16, num_bands: int = 4, seed: int = 
         for i, (a, b) in enumerate(params)
     )
     rows_per_band = num_hashes // num_bands
-    bands = ",\n               ".join(
+    band_keys = ", ".join(
         "("
         + " || ',' || ".join(
             f"m{b * rows_per_band + r}::VARCHAR" for r in range(rows_per_band)
         )
-        + f") AS b{b}"
+        + ")"
         for b in range(num_bands)
     )
-    band_match = " OR ".join(f"a.b{b} = b.b{b}" for b in range(num_bands))
+    return f"""
+    hv AS (
+      SELECT doc_id,
+             list_transform(grams,
+                            g -> ('0x' || substr(md5(g), 1, 7))::BIGINT) AS hv
+      FROM sh
+    ),
+    sig AS (
+      SELECT doc_id,
+               {mins}
+      FROM hv
+    ),
+    band_keys AS (
+      SELECT doc_id,
+             unnest(range({num_bands})) AS band_no,
+             unnest([{band_keys}]) AS band_key
+      FROM sig
+    ),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM band_keys a
+      JOIN band_keys b
+        ON a.band_no = b.band_no AND a.band_key = b.band_key
+      WHERE a.doc_id < b.doc_id
+    )"""
+
+
+#: The exact-Jaccard verification of ``cand`` against ``sh``: the
+#: pairs whose 4-dp rounded Jaccard is >= 0.2, as
+#: ``verified(id_a, id_b, jaccard)``.
+_VERIFIED_PAIRS_CTE = """
+    verified AS (
+      SELECT c.id_a, c.id_b,
+             round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+                   / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
+                   4) AS jaccard
+      FROM cand c
+      JOIN sh a ON a.doc_id = c.id_a
+      JOIN sh b ON b.doc_id = c.id_b
+      WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+                  / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
+                  4) >= 0.2
+    )"""
+
+
+def _minhash_verified_sql() -> str:
+    """DuckDB twin of the md5-based MinHash pipeline: identical shingle
+    tokenization (proven by the ngram_jaccard oracle), the shared
+    band-key candidate CTEs, and the same exact-Jaccard verification."""
     return rf"""
     WITH sh AS (
       SELECT doc_id,
@@ -792,33 +845,9 @@ def _minhash_verified_sql(num_hashes: int = 16, num_bands: int = 4, seed: int = 
              )) AS grams
       FROM documents
     ),
-    hv AS (
-      SELECT doc_id, grams,
-             list_transform(grams,
-                            g -> ('0x' || substr(md5(g), 1, 7))::BIGINT) AS hv
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id, grams,
-               {mins}
-      FROM hv
-    ),
-    banded AS (
-      SELECT doc_id, grams,
-               {bands}
-      FROM sig
-    )
-    SELECT a.doc_id AS id_a,
-           b.doc_id AS id_b,
-           round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                 / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
-                 4) AS jaccard
-    FROM banded a
-    JOIN banded b
-      ON a.doc_id < b.doc_id AND ({band_match})
-    WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
-                4) >= 0.2
+    {_minhash_candidate_ctes()},
+    {_VERIFIED_PAIRS_CTE}
+    SELECT id_a, id_b, jaccard FROM verified
     """
 
 

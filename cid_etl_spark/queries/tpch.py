@@ -241,7 +241,8 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def higher_order_funcs_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher-order array functions as first-class, codegen-side ops:
+    """Higher-order array functions as first-class JVM-side ops
+    (evaluated interpreted — they are ``CodegenFallback`` in Spark 4.1):
     transform/aggregate (fold), filter, zip_with, exists, forall — the
     lambda family that keeps array math OUT of Python UDFs.  Both
     engines fold left-to-right over the same array order, and float32

@@ -143,7 +143,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor_id",
             F.col("vec_id").alias("negative_id"),
             F.col("label").alias("negative_label"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qv")), 4).alias(
+            F.round(cosine_similarity("embedding", "qv"), 4).alias(
                 "cosine"
             ),
         )
@@ -553,7 +553,7 @@ def kmeans_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         j = vecs.crossJoin(F.broadcast(cents)).select(
             "vec_id",
             "cid",
-            F.round(cosine_similarity(F.col("v"), F.col("cv")), 6).alias("cos6"),
+            F.round(cosine_similarity("v", "cv"), 6).alias("cos6"),
         )
         w = Window.partitionBy("vec_id").orderBy(F.desc("cos6"), F.asc("cid"))
         return (
@@ -1044,21 +1044,11 @@ def _pretraining_pipeline_sql() -> str:
     quality gate, exact dedup, md5-MinHash-LSH near-dup + recursive-CTE
     clustering, shingle-overlap decontamination, per-source quota,
     512-token packing — replayed in one SQL chain."""
-    from cid_etl_spark.operators.dedup import _hash_params
+    from cid_etl_spark.queries.roundtrips import (
+        _VERIFIED_PAIRS_CTE,
+        _minhash_candidate_ctes,
+    )
 
-    m = (1 << 31) - 1
-    params = _hash_params(16, 42)
-    mins = ",\n               ".join(
-        f"list_min(list_transform(hv, h -> ({a} * h + {b}) % {m})) AS m{i}"
-        for i, (a, b) in enumerate(params)
-    )
-    bands = ",\n               ".join(
-        "("
-        + " || ',' || ".join(f"m{b * 4 + r}::VARCHAR" for r in range(4))
-        + f") AS b{b}"
-        for b in range(4)
-    )
-    band_match = " OR ".join(f"a.b{b} = b.b{b}" for b in range(4))
     gram_expr = (
         r"list_distinct(list_transform("
         r"range(1, greatest(len(string_split_regex(t, '\s+')) - 2, 1) + 1),"
@@ -1085,30 +1075,10 @@ def _pretraining_pipeline_sql() -> str:
         QUALIFY row_number() OVER (PARTITION BY md5(t) ORDER BY doc_id) = 1
     ), sh AS (
         SELECT doc_id, {gram_expr} AS grams FROM exact
-    ), hv AS (
-        SELECT doc_id, grams,
-               list_transform(grams,
-                              g -> ('0x' || substr(md5(g), 1, 7))::BIGINT) AS hv
-        FROM sh
-    ), sig AS (
-        SELECT doc_id, grams,
-               {mins}
-        FROM hv
-    ), banded AS (
-        SELECT doc_id, grams,
-               {bands}
-        FROM sig
-    ), pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM banded a
-        JOIN banded b ON a.doc_id < b.doc_id AND ({band_match})
-        WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                    / (len(a.grams) + len(b.grams)
-                       - len(list_intersect(a.grams, b.grams))), 4) >= 0.2
-    ), edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
+    ), {_minhash_candidate_ctes()}, {_VERIFIED_PAIRS_CTE}, edges AS (
+        SELECT id_a AS a, id_b AS b FROM verified
         UNION ALL
-        SELECT id_b AS a, id_a AS b FROM pairs
+        SELECT id_b AS a, id_a AS b FROM verified
     ), cc(node, label) AS (
         SELECT DISTINCT a, a FROM edges
         UNION

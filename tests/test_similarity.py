@@ -7,11 +7,13 @@ import math
 
 from pyspark.sql import functions as F
 
-from cid_etl_spark.functions.vectors import cosine_similarity
+from cid_etl_spark.functions.vectors import cosine_similarity, dot
 from cid_etl_spark.operators.similarity import (
+    _hyperplane,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
     embedding_neardup_pairs,
+    random_hyperplane_signature,
 )
 from cid_etl_spark.sources.parquet import load_table
 
@@ -31,6 +33,91 @@ def test_cosine_expression(spark):
     assert abs(out[0] - 1.0) < 1e-9
     assert abs(out[1]) < 1e-9
     assert abs(out[2] - 1 / math.sqrt(2)) < 1e-9
+
+
+# The Column-API construction the SQL-text helpers replaced: one Py4J
+# call per literal and lambda node.  Kept as the plan oracle.
+def _column_api_dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _column_api_l2_norm(a):
+    return F.sqrt(
+        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+    )
+
+
+def _column_api_cosine(a, b):
+    na, nb = _column_api_l2_norm(a), _column_api_l2_norm(b)
+    return F.when((na > 0) & (nb > 0), _column_api_dot(a, b) / (na * nb)).otherwise(
+        F.lit(0.0)
+    )
+
+
+def _column_api_signature(v, dim, bits, seed):
+    sig = F.lit(0)
+    for b in range(bits):
+        plane = F.array(*[F.lit(x) for x in _hyperplane(dim, b, seed)])
+        sig = sig.bitwiseOR(
+            F.when(_column_api_dot(v, plane) >= 0, F.lit(1 << b)).otherwise(F.lit(0))
+        )
+    return sig
+
+
+def test_vector_sql_has_column_api_semantics(spark):
+    """The SQL-text helpers build the same analyzed plan as the Column
+    API, for plain and qualified (``l.__vec``) column names."""
+    df = spark.createDataFrame(
+        [([1.0, -2.0, 0.5, 3.0], [0.25, 1.0, -1.0, 2.0])],
+        "__vec array<float>, q array<float>",
+    ).alias("l")
+    pairs = [
+        (dot("l.__vec", "q"), _column_api_dot(F.col("l.__vec"), F.col("q"))),
+        (
+            cosine_similarity("l.__vec", "l.q"),
+            _column_api_cosine(F.col("l.__vec"), F.col("l.q")),
+        ),
+        (
+            random_hyperplane_signature("l.__vec", dim=4, bits=5, seed=7),
+            _column_api_signature(F.col("l.__vec"), dim=4, bits=5, seed=7),
+        ),
+    ]
+    for new, old in pairs:
+        got, want = df.select(new.alias("out")), df.select(old.alias("out"))
+        assert got.sameSemantics(want)
+        assert got.collect() == want.collect()
+
+
+def test_jl_projection_matches_column_api_rows(spark):
+    """The JL projection's one-SQL-text coordinates return the rows of
+    the Column-API construction (weight array + zip_with + aggregate)."""
+    import hashlib
+
+    from cid_etl_spark.queries.curation import jl_projection_embeddings
+
+    def w(i, j):
+        return (int(hashlib.md5(f"{i}_{j}".encode()).hexdigest()[:7], 16) % 2001 - 1000) / 1000.0
+
+    def proj(j):
+        weights = F.array(*[F.lit(w(i, j)) for i in range(1, 257)])
+        terms = F.zip_with(
+            F.col("embedding"),
+            F.slice(weights, 1, F.size("embedding")),
+            lambda x, wt: x.cast("double") * wt,
+        )
+        return F.round(F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x), 4).alias(
+            f"p{j}"
+        )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    want = sorted(emb.select("vec_id", *[proj(j) for j in range(4)]).collect())
+    got = sorted(jl_projection_embeddings(spark, SF_DIR).collect())
+    assert len(got) > 0
+    assert got == want
 
 
 def test_bruteforce_topk_finds_self(spark):
