@@ -284,21 +284,29 @@ def _gram_hashes_exploded(texts, n: int) -> "tuple":
     hash (``pandas.util.hash_array`` siphash) instead of a string.
     NULL text contributes no rows.
 
+    The whole batch is hashed in ONE ``hash_array`` call over every
+    gram, and deduplicated per text by one sort on (owner, hash) plus an
+    adjacent-difference mask — so each text's hashes come out ascending,
+    exactly as a per-text ``np.unique`` would give them.
+
     Returns ``(flat: uint64 ndarray, lens: int64 ndarray)``.
     """
     import numpy as np
 
-    all_grams: list = []
-    lens = np.zeros(len(texts), dtype=np.int64)
+    grams: list = []
+    counts = np.zeros(len(texts), dtype=np.int64)
     for i, t in enumerate(texts):
-        if not isinstance(t, str):
-            continue
-        grams = _word_grams(t.lower().strip(" "), n)
-        h = np.unique(pd.util.hash_array(np.asarray(grams, dtype=object)))
-        all_grams.append(h)
-        lens[i] = len(h)
-    flat = np.concatenate(all_grams) if all_grams else np.empty(0, dtype=np.uint64)
-    return flat, lens
+        if isinstance(t, str):
+            g = _word_grams(t.lower().strip(" "), n)
+            grams += g
+            counts[i] = len(g)
+    owner = np.repeat(np.arange(len(texts)), counts)
+    h = pd.util.hash_array(np.asarray(grams, dtype=object))
+    order = np.lexsort((h, owner))
+    h, owner = h[order], owner[order]
+    keep = np.ones(len(h), dtype=bool)
+    keep[1:] = (h[1:] != h[:-1]) | (owner[1:] != owner[:-1])
+    return h[keep], np.bincount(owner[keep], minlength=len(texts))
 
 
 def shingle_index_arrow(

@@ -12,14 +12,17 @@ with itself; each round it adopts the minimum label among itself and
 its neighbors; at fixpoint every node carries the minimum node id of
 its component.  Rounds needed = graph diameter — near-dup components
 are small and dense (dups of the same source), so this converges in a
-handful of rounds.  Each round is one shuffle (edge-label join +
-min-aggregate); lineage is truncated every round with
-``localCheckpoint`` so the plan does not grow exponentially.  For
-adversarial long-chain graphs at 100 TB, switch to the large-star /
-small-star algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) — same join-aggregate primitive,
-O(log² n) rounds; the propagation loop below is the right trade for
-dup-cluster topology.
+handful of rounds.  Each round is ONE Spark action: the closed
+adjacency (every node's neighbors plus itself) joined to the current
+labels and min-aggregated per node, written by its eager
+``localCheckpoint`` — which also truncates lineage, so the plan does
+not grow — with the count of decreased labels observed
+(``DataFrame.observe``) inside that same job instead of counted by a
+second one.  For adversarial long-chain graphs at 100 TB, switch to
+the large-star / small-star algorithm (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14) — same join-aggregate
+primitive, O(log² n) rounds; the propagation loop below is the right
+trade for dup-cluster topology.
 
 Fault-tolerance note (applies to every ``localCheckpoint`` in this
 module): localCheckpoint truncates lineage WITHOUT replication — the
@@ -39,9 +42,11 @@ to shared storage and swap ``localCheckpoint(...)`` for
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from cid_etl_spark.functions.vectors import col_sql
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -94,57 +99,59 @@ def connected_components(
     ``cluster_id`` is the minimum node id in the node's component —
     deterministic, join-able back onto the corpus to pick survivors
     (e.g. keep ``doc_id == cluster_id``).  Only nodes that appear in at
-    least one edge are returned; singletons are trivially their own
-    cluster and need no shuffle.
+    least one edge are returned (a self-loop is enough); singletons are
+    trivially their own cluster and need no shuffle.  A NULL endpoint
+    links nothing: its edge keeps the other node as a singleton, and
+    the output carries one ``(NULL, NULL)`` row.
 
-    Each iteration: symmetric edge join against current labels, min
-    per node, compare-and-converge.  The convergence check is one
-    cheap count on the changed set (labels only ever decrease, so
-    "no label decreased" == fixpoint).
+    Jobs: one for the closed adjacency, then one per round, the round's
+    eager ``localCheckpoint``.  The adjacency holds ``(u, v)``,
+    ``(v, u)``, ``(u, u)`` and ``(v, v)`` for every edge, so a node's
+    neighborhood minimum already includes its own label and a round is
+    one join plus one aggregate.  The same aggregate reads the node's
+    previous label off its self row, and ``observe`` counts the labels
+    that decreased while the checkpoint job runs: labels only ever
+    decrease, so a round that decreased none is the fixpoint.  Round 1
+    needs no join at all — every node is still its own label.  Every
+    expression is SQL text, one Py4J call each: on the sf0.01 near-dup
+    graph the whole operator is built with ~130-250 Py4J commands, not
+    the ~900 of the same plan written with the Column API.
     """
-    # Materialize the (possibly expensive) pair plan ONCE, already
-    # symmetrized and deduped — every round joins against it.  One
-    # checkpoint instead of the r13 two (pairs eagerly, then the
-    # symmetric union lazily): the explode emits both directions in the
-    # same pass, so the pair derivation runs once and the edge table is
-    # written once, not twice (guide §2.4/§5).
-    sym = (
-        _symmetrize(edges, src, dst)
-        .select(F.col("u").alias("a"), F.col("v").alias("b"))
+    u, v = col_sql(src), col_sql(dst)
+    closed = ", ".join(
+        f"struct({x} AS a, {y} AS b)" for x, y in ((u, v), (v, u), (u, u), (v, v))
+    )
+    # Materialize the (possibly expensive) pair plan ONCE, closed and
+    # deduped, in one explode pass over it (see _symmetrize).  A row with
+    # exactly one NULL endpoint is dropped: the self rows keep its other
+    # node, and (NULL, NULL) keeps the NULL node.
+    adj = (
+        edges.selectExpr(f"inline(array({closed}))")
+        .where("isnull(a) = isnull(b)")
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-
+    # every node starts as its own label (one self row per node), so
+    # round 1 reads each neighbor's id as its label: no join
+    labels = adj.selectExpr("a AS node", "b AS label").where("node <=> label")
+    nbr = adj.selectExpr("a", "b", "b AS label")
     for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # One shuffle job per round: the decreased? flag rides along in
-        # the checkpoint so convergence costs a local scan, not a join.
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["a"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-                (F.coalesce("nbr_label", "label") < F.col("label")).alias("__dec"),
+        obs = Observation()
+        labels = (
+            nbr.groupBy("a")
+            .agg(
+                F.expr("min(label) AS label"),
+                F.expr("min(CASE WHEN a = b THEN label END) AS old"),
             )
+            .observe(obs, F.expr("count(CASE WHEN label < old THEN 1 END) AS decreased"))
+            .selectExpr("a AS node", "label")
             .localCheckpoint(eager=True)
         )
-        changed = new_labels.filter(F.col("__dec")).count()
-        labels = new_labels.drop("__dec")
-        if changed == 0:
+        if obs.get["decreased"] == 0:
             break
-    return labels.select("node", F.col("label").alias("cluster_id"))
+        nbr = adj.join(labels, F.expr("b <=> node")).selectExpr("a", "b", "label")
+    return labels.selectExpr("node", "label AS cluster_id")
+
 
 def connected_components_star(
     edges: DataFrame,
@@ -179,18 +186,6 @@ def connected_components_star(
     :func:`connected_components`; tests pin the two against each other
     on random graphs and pin the round count on long chains.
     """
-    def checksum(df: DataFrame):
-        # decimal sum: exact and overflow-free under ANSI mode (a raw
-        # BIGINT sum of xxhash64 values overflows immediately)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).collect()[0]
-        return row.n, row.h
-
     # ONE materialization of the (possibly expensive) pair plan: the
     # r13 shape checkpointed the raw pair list eagerly AND the distinct
     # of it eagerly — writing the edge table twice back to back
@@ -226,15 +221,27 @@ def connected_components_star(
         small_self = mins_le.filter(F.col("a") != F.col("__mn")).select(
             "a", F.col("__mn").alias("b")
         )
-        nxt = (
+        # the fixpoint signature (row count, decimal hash sum: exact and
+        # overflow-free under ANSI mode, where a raw BIGINT sum of
+        # xxhash64 values overflows at once) is observed inside the
+        # checkpoint job, not collected by a second one
+        obs = Observation()
+        cur = (
             large.union(small_nbrs)
             .union(small_self)
             .filter(F.col("a") != F.col("b"))
             .distinct()
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
+                    F.lit(0).cast("decimal(38,0)"),
+                ).alias("h"),
+            )
             .localCheckpoint(eager=True)
         )
-        sig = checksum(nxt)
-        cur = nxt
+        sig = (obs.get["n"], obs.get["h"])
         if sig == prev_sig:
             break
         prev_sig = sig

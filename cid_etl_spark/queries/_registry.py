@@ -68,23 +68,19 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 #: Rows to put at the very front of the next driver window (changed
 #: plans, suspect rows).  Without an entry here the window is the
 #: never-verified rows, then the stalest green rows.  Current entries:
-#: the oracled rows built on the SQL-text vector/LSH/JL expressions
-#: (functions/vectors.py), the integer-first calibration table, and
-#: the md5-MinHash rows whose DuckDB twins now band-join.
+#: the connected-components rows (one Spark action per round, the
+#: convergence count observed in it) and the rows built on the Arrow
+#: shingle index (operators.dedup.shingle_index_arrow, whose gram
+#: hashing is one batched call per Arrow batch).
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    "cosine_topk_bruteforce",
-    "cosine_topk_lsh_probeall",
-    "cosine_topk_ivf_fullprobe",
-    "jl_projection_embeddings",
-    "embedding_split_contamination",
-    "knn_label_vote_embeddings",
-    "hard_negative_mining",
-    "kmeans_cluster_assign",
-    "calibration_ece_classifier",
-    "minhash_lsh_verified",
-    "lsh_recall_report",
+    "dedup_clusters_documents",
+    "dedup_clusters_star",
     "neardup_curation_pipeline",
     "pretraining_data_pipeline",
+    "ngram_jaccard_pairs",
+    "ngram_containment_pairs",
+    "decontaminate_documents",
+    "lsh_recall_report",
 )
 
 

@@ -44,6 +44,10 @@ DEFAULT_CONF: dict[str, str] = {
     # timestamps in fixtures are timezone-naive; keep session TZ fixed so
     # date_trunc/window results are reproducible anywhere
     "spark.sql.session.timeZone": "UTC",
+    # the events fixture stores NANOS timestamps, which Spark 4 refuses
+    # unless read as raw int64 (sources.parquet.load_table converts them
+    # exactly); set up front so no load flips the conf mid-session
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # ContextCleaner's periodic FORCED full GC stays at the 30min
     # default: a short interval (tried: 1min) fires stop-the-world
     # collections in the middle of whatever query is running — measured

@@ -151,7 +151,9 @@ def load_table(
 
     ``events.ts`` is a nanosecond parquet timestamp, which Spark 4
     rejects by default (PARQUET_TYPE_ILLEGAL); we read it as raw int64
-    nanos (legacy conf) and convert with exact integer division — ns
+    nanos (legacy conf — in ``session.DEFAULT_CONF``, and set here only
+    for a session that does not already read it as ``true``) and
+    convert with exact integer division — ns
     values ≈1.7e18 exceed double's 2^53 mantissa, so float math would
     corrupt timestamps.
 
@@ -176,7 +178,8 @@ def load_table(
     path = os.path.join(sf_dir, f"{name}.parquet")
     if spread is None:
         spread = name in _SPREAD_TABLES
-    if name == "events":
+    if name == "events" and spark.conf.get(_NANOS_AS_LONG, "false") != "true":
+        # a session not built by get_spark (DEFAULT_CONF sets it)
         spark.conf.set(_NANOS_AS_LONG, "true")
     df, splits = _scan(spark, path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":

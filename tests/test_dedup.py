@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cid_etl_spark.operators.dedup import (
+    _gram_hashes_exploded,
     _hash_params,
     _word_grams,
     exact_dedup,
@@ -164,6 +165,40 @@ def test_python_word_grams_match_spark_shingles(spark):
         for r in rows:
             assert _word_grams(r["t"], n) == list(r["sh"]), (n, r["doc_id"])
     assert _word_grams(None, 3) == [""]
+
+
+def test_batched_gram_hashes_match_per_text_loop():
+    """The one-call batch kernel equals the per-text loop it replaced:
+    hash each text's grams, ``np.unique`` them, concatenate."""
+    import numpy as np
+    import pandas as pd
+
+    def per_text(texts, n):
+        parts, lens = [], np.zeros(len(texts), dtype=np.int64)
+        for i, t in enumerate(texts):
+            if not isinstance(t, str):
+                continue
+            grams = _word_grams(t.lower().strip(" "), n)
+            h = np.unique(pd.util.hash_array(np.asarray(grams, dtype=object)))
+            parts.append(h)
+            lens[i] = len(h)
+        flat = np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64)
+        return flat, lens
+
+    batches = [
+        GRAM_EDGE_TEXTS,
+        GRAM_EDGE_TEXTS[::-1] + GRAM_EDGE_TEXTS,
+        [None, None],
+        [],
+        ["  lead and trail  ", "x"],
+    ]
+    for texts in batches:
+        for n in (1, 3, 5):
+            flat, lens = _gram_hashes_exploded(texts, n)
+            want_flat, want_lens = per_text(texts, n)
+            assert flat.dtype == np.uint64 and lens.dtype == np.int64
+            assert np.array_equal(flat, want_flat), (n, texts)
+            assert np.array_equal(lens, want_lens), (n, texts)
 
 
 def _md5_prefix(g: str, digits: int) -> int:

@@ -33,6 +33,82 @@ def test_self_loop_singleton(spark):
     assert got == {5: 5}
 
 
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {n: find(n) for n in parent}
+
+
+def test_matches_union_find_on_random_graphs(spark):
+    import random
+
+    rng = random.Random(11)
+    for n_nodes, n_edges in ((40, 30), (80, 120)):
+        base = [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
+        edges = (
+            base
+            + base[: n_edges // 4]  # duplicate edges
+            + [(v, u) for u, v in base[n_edges // 4 : n_edges // 2]]  # reversed
+            + [(u, u) for u, _ in base[: n_edges // 8]]  # self-loops
+        )
+        rng.shuffle(edges)
+        assert _cc(spark, edges) == _union_find(edges)
+
+
+def test_empty_edges_return_no_rows(spark):
+    out = connected_components(spark.createDataFrame([], "src long, dst long"))
+    assert out.columns == ["node", "cluster_id"]
+    assert dict(out.dtypes) == {"node": "bigint", "cluster_id": "bigint"}
+    assert out.collect() == []
+
+
+def test_null_endpoints_link_nothing(spark):
+    # pinned from the join-per-round implementation: a NULL endpoint
+    # keeps its edge's other node as a singleton and adds one
+    # (NULL, NULL) row
+    edges = [(1, 2), (2, None), (None, 3), (3, 4), (None, None), (5, 5), (6, None)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = sorted(
+        (tuple(r) for r in connected_components(df).collect()),
+        key=lambda t: (t[0] is None, t[0]),
+    )
+    assert got == [(1, 1), (2, 1), (3, 3), (4, 3), (5, 5), (6, 6), (None, None)]
+
+
+def test_one_checkpoint_job_per_round_and_no_other_action(spark, monkeypatch):
+    """The 9-node chain reaches its fixpoint in 8 rounds and confirms it
+    in a 9th: 1 adjacency checkpoint + 9 round checkpoints, and no
+    count or collect — convergence is observed inside each round's
+    checkpoint job."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(1, 9)], "src long, dst long")
+    calls = {"localCheckpoint": 0, "count": 0, "collect": 0}
+    cls = type(df)
+    for name in calls:
+        orig = getattr(cls, name)
+
+        def counted(self, *args, _orig=orig, _name=name, **kwargs):
+            calls[_name] += 1
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, counted)
+    out = connected_components(df)
+    assert calls == {"localCheckpoint": 1 + (8 + 1), "count": 0, "collect": 0}
+    monkeypatch.undo()
+    assert {r.cluster_id for r in out.collect()} == {1}
+
+
 def test_star_cc_matches_propagation_on_random_graphs(spark):
     import random
 

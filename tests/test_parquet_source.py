@@ -65,3 +65,18 @@ def test_events_ts_type_is_stable_across_loads(spark):
     assert first.startswith("timestamp")
     assert dict(second.dtypes)["ts"] == first
     assert second.filter("ts IS NULL").count() == 0
+
+
+def test_events_load_does_not_invalidate_other_files(spark, monkeypatch):
+    """The session reads NANOS timestamps as int64 from the start
+    (``session.DEFAULT_CONF``), so loading ``events`` changes no conf
+    and the footprint of a file loaded before it stays valid."""
+    monkeypatch.setattr(parquet, "_FOOTPRINTS", {})
+    assert spark.conf.get(parquet._NANOS_AS_LONG) == "true"
+    jobs = [
+        _jobs_in_group(spark, f"parquet-order-{i}", lambda t=t: load_table(spark, SF_SMOKE, t))
+        for i, t in enumerate(("lineitem", "events", "lineitem"))
+    ]
+    assert jobs == [1, 1, 0]
+    assert spark.conf.get(parquet._NANOS_AS_LONG) == "true"
+    assert dict(load_table(spark, SF_SMOKE, "events").dtypes)["ts"].startswith("timestamp")
