@@ -59,18 +59,3 @@ def format_subcat(c: Column | str) -> Column:
     fourth_nonblank = (F.length(s) >= 4) & (~F.substring(s, 4, 1).rlike(r"^\s$"))
     dotted = F.concat(F.substring(s, 1, 3), F.lit("."), s.substr(F.lit(4), F.length(s)))
     return F.when(fourth_nonblank, dotted).otherwise(F.substring(s, 1, 3))
-
-
-def between_str(c: Column | str, start: Column | str, end: Column | str) -> Column:
-    """F11 — lexicographic string between (etl_cid10.py:268-269).
-
-    ICD codes are fixed-width ``L##`` so string order == code order
-    (SURVEY §4.2.4): keep operands as strings, never cast.
-    """
-    return _col(c).between(_col(start), _col(end))
-
-
-def coalesce_prefer(first: Column | str, second: Column | str) -> Column:
-    """F9/J8 — two-source preference without pandas ``_x``/``_y``
-    suffix machinery (etl_cid10.py:59-67,342-348)."""
-    return F.coalesce(_col(first), _col(second))

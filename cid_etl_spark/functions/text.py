@@ -45,17 +45,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     return F.regexp_count(_c(text), F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]")).cast("int")
 
 
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Distinct character n-grams of lowercased text."""
-    t = F.lower(F.trim(_c(text)))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t) - n + 1, F.lit(1))),
-            lambda i: t.substr(i, F.lit(n)),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Quality scoring
 # ---------------------------------------------------------------------------

@@ -57,12 +57,6 @@ def quality_counts(df: DataFrame, *null_cols: str) -> dict[str, int]:
     return out
 
 
-def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:
-    """O1-adjacent — global top-k: Spark plans TakeOrderedAndProject
-    (per-partition heap + driver merge), never a full sort."""
-    return df.orderBy(*order).limit(k)
-
-
 def salted_agg(
     df: DataFrame,
     keys: list[str],

@@ -43,22 +43,28 @@ def priority_dedup(
     df: DataFrame,
     keys: str | Sequence[str],
     order: Sequence[Column],
+    k: int = 1,
 ) -> DataFrame:
-    """A3 — keep exactly one row per key, the first under *order*
-    (reference: stable sort by ``fonte`` DESC + ``drop_duplicates``,
-    etl_cid10.py:183-184,360-361).
+    """A3 — keep the first *k* rows per key under *order* (k=1: exactly
+    one survivor; reference: stable sort by ``fonte`` DESC +
+    ``drop_duplicates``, etl_cid10.py:183-184,360-361).  With k > 1 it
+    is the per-key top-k every ranked query uses (nearest neighbors
+    per query vector, hard negatives per anchor).
 
     The window form is the only shuffle-safe equivalent of pandas'
     stable sort-then-drop (SURVEY §4.2.1): Spark's
     ``orderBy().dropDuplicates()`` does NOT guarantee the survivor.
     Callers must make *order* total (add a unique tiebreaker) for a
-    deterministic survivor.
+    deterministic survivor.  NULL keys form one group of their own.
+    The ``__rn <= k`` filter lets Spark plan a partial/final
+    ``WindowGroupLimit``, so each partition ships at most k rows per
+    key to the window.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        .filter(F.col("__rn") <= k)
         .drop("__rn")
     )
 
@@ -480,87 +486,6 @@ def ngram_containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment", "len_ratio")
     )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.2,
-    block_col: str | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs via PPJoin-style prefix filtering
-    (Xiao et al., "Efficient Similarity Joins for Near Duplicate
-    Detection", WWW'08) — the exact-similarity-join scale path.
-
-    Same contract as :func:`ngram_jaccard_pairs_exact` (``(id_a, id_b,
-    jaccard)`` with ``round(jaccard, 4) >= threshold``), different cost
-    model.  The inverted-index variant pays |df|² join rows for a
-    shingle of document frequency |df| — quadratic in the hottest
-    shingle ("the", " th" appear in nearly every document), which is
-    exactly the skew that kills a web-scale corpus.  Prefix filtering
-    instead orders each document's shingles rarest-first (global
-    document frequency ascending, shingle as tie-break — any total
-    order is correct) and indexes only the first
-    ``floor((1 - t)·|A|) + 1`` of them: two sets with Jaccard ≥ t MUST
-    share at least one prefix shingle, so joining on prefix shingles
-    alone loses no pairs, and prefix shingles are by construction the
-    RARE ones.  Candidates then pass a size filter
-    (``t·|A| ≤ |B| ≤ |A|/t``) and an exact ``array_intersect`` verify.
-
-    Shuffle profile: one groupBy for document frequencies, one window
-    per document to rank shingles, the candidate join on rare shingles,
-    and a verify join back to the shingle arrays — every stage
-    partition-parallel with map-side combine, no stage quadratic in a
-    hot key.
-    """
-    blk = [F.col(block_col).alias("__blk")] if block_col else []
-    bkeys = ["__blk"] if block_col else []
-    sized = df.select(
-        F.col(id_col).alias("__id"), *blk, shingles(text_col, n).alias("__grams")
-    ).withColumn("__n", F.size("__grams"))
-    ex = sized.select("__id", *bkeys, "__n", F.explode("__grams").alias("__g"))
-    dftab = ex.groupBy(*bkeys, "__g").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("__id").orderBy("__df", "__g")
-    # prefix length floor((1-t)*n)+1 == n - ceil(t*n) + 1; the 1e-9
-    # guards against fp under-rounding, which would drop true pairs
-    prefix_len = (
-        F.floor(F.lit(1.0 - threshold) * F.col("__n") + F.lit(1e-9)).cast("int") + 1
-    )
-    pref = (
-        ex.join(dftab, bkeys + ["__g"])
-        .withColumn("__pos", F.row_number().over(w))
-        .filter(F.col("__pos") <= prefix_len)
-        .select(*bkeys, "__g", "__id", "__n")
-    )
-    a = pref.select(
-        *bkeys, "__g", F.col("__id").alias("id_a"), F.col("__n").alias("__na")
-    )
-    b = pref.select(
-        *bkeys, "__g", F.col("__id").alias("id_b"), F.col("__n").alias("__nb")
-    )
-    cand = (
-        a.join(b, bkeys + ["__g"])
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("__nb") >= F.lit(threshold) * F.col("__na") - F.lit(1e-9))
-            & (F.col("__na") >= F.lit(threshold) * F.col("__nb") - F.lit(1e-9))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ga = sized.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
-    gb = sized.select(F.col("__id").alias("id_b"), F.col("__grams").alias("__gb"))
-    verified = (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard", F.round(jaccard_similarity(F.col("__ga"), F.col("__gb")), 4)
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("id_a", "id_b", "jaccard")
 
 
 def minhash_dedup_pairs(

@@ -183,19 +183,26 @@ def connected_components_star(
 
     Returns ``(node, cluster_id)`` with ``cluster_id`` = component
     minimum, identical contract (and output) to
-    :func:`connected_components`; tests pin the two against each other
-    on random graphs and pin the round count on long chains.
+    :func:`connected_components`: a node whose only edges are
+    self-loops or have a NULL other end is its own cluster, and a NULL
+    endpoint gives one ``(NULL, NULL)`` row.  The star rounds see only
+    the edges between two distinct non-NULL nodes; every endpoint they
+    did not label joins the output in the final aggregate, which reads
+    the first checkpoint and costs no extra action.  Tests pin the two
+    operators against each other on random graphs and pin the round
+    count on long chains.
     """
     # ONE materialization of the (possibly expensive) pair plan: the
     # r13 shape checkpointed the raw pair list eagerly AND the distinct
     # of it eagerly — writing the edge table twice back to back
     # (guide §2.4/§5); the distinct folds into the same first job.
-    cur = (
+    pairs = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
+    # a != b is NULL, so not true, when an endpoint is NULL
+    cur = pairs.filter(F.col("a") != F.col("b"))
     prev_sig = None
     for _ in range(max_iter):
         # cur is always checkpointed here, so the two union branches
@@ -248,7 +255,19 @@ def connected_components_star(
 
     roots = cur.select(F.col("b").alias("node"), F.col("b").alias("cluster_id"))
     members = cur.select(F.col("a").alias("node"), F.col("b").alias("cluster_id"))
-    return members.union(roots).distinct()
+    # every endpoint as its own candidate label: a labeled node's
+    # cluster id is at most the node itself, so min() keeps it; an
+    # unlabeled node keeps itself; the NULL group gives (NULL, NULL)
+    endpoints = pairs.selectExpr(
+        "inline(array(struct(a AS node, a AS cluster_id), "
+        "struct(b AS node, b AS cluster_id)))"
+    )
+    return (
+        members.union(roots)
+        .union(endpoints)
+        .groupBy("node")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )
 
 
 def pagerank(

@@ -177,15 +177,6 @@ def interval_overlap_join_bucketed(
     return lrep.join(rrep, pred, "inner").drop("__bl", "__br")
 
 
-def coalesce_columns(df: DataFrame, target: str, preferred: str, fallback: str) -> DataFrame:
-    """J8 — two-source column preference: ``target = coalesce(preferred,
-    fallback)``, dropping the inputs (replaces pandas suffix+fillna,
-    etl_cid10.py:59-67,342-348)."""
-    return df.withColumn(target, F.coalesce(F.col(preferred), F.col(fallback))).drop(
-        *[c for c in (preferred, fallback) if c != target]
-    )
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -14,15 +14,19 @@ Two tiers, as a real 100 TB pipeline would run them:
 
 Hyperplanes are derived deterministically from a seed (hash-based, no
 RNG state), so results are reproducible and testable.
+
+Every operator reads the fixtures' column layout: a corpus of
+``(vec_id, embedding)`` rows and a query set of ``(query_id,
+query_vec)`` rows.  Values no caller varies are module constants.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from cid_etl_spark.functions.vectors import (
     array_sql,
@@ -30,16 +34,73 @@ from cid_etl_spark.functions.vectors import (
     cosine_similarity,
     dot_sql,
 )
+from cid_etl_spark.operators.dedup import priority_dedup
+
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+LABEL_COL = "label"
+QUERY_ID_COL = "query_id"
+QUERY_VEC_COL = "query_vec"
+#: Seed of the LSH hyperplanes and of the IVF k-means initialisation.
+SEED = 42
+#: Blocks of :func:`exact_cosine_pairs_distributed`: shuffle volume is
+#: N x N_BLOCKS rows, a group holds 2N / N_BLOCKS vectors.
+N_BLOCKS = 8
+#: Decimal places the SemDeDup operators round the cosine to before
+#: the threshold, as the SQL twins do.
+ROUND_DIGITS = 4
+#: IVF quantizer training: sample rows and Lloyd iterations.
+IVF_MAX_TRAIN = 100_000
+IVF_MAX_ITER = 10
+#: PQ fixed-point scale, codebook size bound and query-set bound.
+PQ_SCALE = 1_000_000
+PQ_MAX_CODES = 4096
+PQ_MAX_QUERIES = 1024
+
+
+def _cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosine of every row of *a* against every row of *b* (float64),
+    0.0 where either norm is zero — the arithmetic of
+    ``functions.vectors.cosine_similarity`` and of the SQL twins."""
+    denom = np.outer(np.linalg.norm(a, axis=1), np.linalg.norm(b, axis=1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, (a @ b.T) / denom, 0.0)
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """*m* with every row scaled to unit L2 norm (zero rows stay zero)."""
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    return m / np.where(norms == 0, 1.0, norms)
+
+
+def _scored_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    on: str | None,
+    k: int,
+    round_digits: int | None,
+) -> DataFrame:
+    """``(query_id, vec_id, cosine)``: *corpus* joined to the broadcast
+    *queries* (``on=None``: a cross join), the k most similar rows per
+    query, ties to the smaller id.  *round_digits* rounds the cosine
+    BEFORE ranking, so float ulps cannot flip the order between
+    engines."""
+    cos = cosine_similarity(VEC_COL, QUERY_VEC_COL)
+    if round_digits is not None:
+        cos = F.round(cos, round_digits)
+    q = F.broadcast(queries)
+    joined = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    scored = joined.select(F.col(QUERY_ID_COL), F.col(ID_COL), cos.alias("cosine"))
+    return priority_dedup(
+        scored, QUERY_ID_COL, [F.desc("cosine"), F.asc(ID_COL)], k
+    )
 
 
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
+    round_digits: int | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity.
 
@@ -49,20 +110,8 @@ def cosine_topk_bruteforce(
     shuffle is the per-query top-k window over |Q|·N candidate rows,
     which AQE coalesces.  For large |Q|, chunk the query set.
     """
-    joined = corpus.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_similarity(vec_col, query_vec_col).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _scored_topk(
+        corpus, queries.select(QUERY_ID_COL, QUERY_VEC_COL), None, k, round_digits
     )
 
 
@@ -84,9 +133,7 @@ def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
     return out
 
 
-def random_hyperplane_signature(
-    vec: str, dim: int, bits: int = 8, seed: int = 42
-) -> Column:
+def random_hyperplane_signature(vec: str, dim: int, bits: int = 8) -> Column:
     """Sign-of-projection LSH signature as an INT (one bit per
     hyperplane) of the array column named *vec*.  Same-bucket vectors
     are likely similar in angle.  One SQL expression, each hyperplane
@@ -94,7 +141,7 @@ def random_hyperplane_signature(
     v = col_sql(vec)
     sig = "0"
     for b in range(bits):
-        plane = array_sql(_hyperplane(dim, b, seed))
+        plane = array_sql(_hyperplane(dim, b, SEED))
         sig = f"({sig} | CASE WHEN {dot_sql(v, plane)} >= 0 THEN {1 << b} ELSE 0 END)"
     return F.expr(sig)
 
@@ -105,11 +152,6 @@ def cosine_topk_lsh(
     dim: int,
     k: int = 5,
     bits: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     multiprobe: int = 0,
     round_digits: int | None = None,
     signed_corpus: DataFrame | None = None,
@@ -141,43 +183,27 @@ def cosine_topk_lsh(
     # *signed_corpus* lets callers inject a pre-signed corpus — the
     # canonical plans.fragments.signed_embeddings fragment, shared
     # across the probe and full-probe queries in a batch.  It must
-    # carry ``__bucket`` from the SAME (dim, bits, seed) signature;
-    # query-side signing below always recomputes from the parameters.
+    # carry ``__bucket`` from the SAME (dim, bits) signature; query-side
+    # signing below always recomputes from the parameters.
     if signed_corpus is None:
         signed_corpus = corpus.withColumn(
-            "__bucket", random_hyperplane_signature(vec_col, dim, bits, seed)
+            "__bucket", random_hyperplane_signature(VEC_COL, dim, bits)
         )
     # probe masks: all signature perturbations within hamming<=h,
     # enumerated once at the driver (sum C(bits,i) ints, tiny at <=16 bits)
     masks = [m for m in range(1 << bits) if bin(m).count("1") <= multiprobe]
     signed_queries = (
         queries.withColumn(
-            "__sig", random_hyperplane_signature(query_vec_col, dim, bits, seed)
+            "__sig", random_hyperplane_signature(QUERY_VEC_COL, dim, bits)
         )
         .withColumn("__m", F.expr(f"explode({array_sql(masks)})"))
         .select(
-            query_id_col,
-            query_vec_col,
+            QUERY_ID_COL,
+            QUERY_VEC_COL,
             F.col("__sig").bitwiseXOR(F.col("__m")).alias("__bucket"),
         )
     )
-    cos = cosine_similarity(vec_col, query_vec_col)
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    joined = signed_corpus.join(
-        F.broadcast(signed_queries.select(query_id_col, query_vec_col, "__bucket")),
-        "__bucket",
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cos.alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _scored_topk(signed_corpus, signed_queries, "__bucket", k, round_digits)
 
 
 def embedding_neardup_pairs(
@@ -185,9 +211,6 @@ def embedding_neardup_pairs(
     dim: int,
     threshold: float = 0.95,
     bits: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH blocking.
 
@@ -196,9 +219,9 @@ def embedding_neardup_pairs(
     cosine filter.  Returns ``(id_a, id_b, cosine)`` with id_a < id_b.
     """
     signed = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        random_hyperplane_signature(vec_col, dim, bits, seed).alias("__bucket"),
+        F.col(ID_COL).alias("__id"),
+        F.col(VEC_COL).alias("__vec"),
+        random_hyperplane_signature(VEC_COL, dim, bits).alias("__bucket"),
     )
     l, r = signed.alias("l"), signed.alias("r")
     return (
@@ -246,8 +269,6 @@ def exact_cosine_pairs_blocked(
     simplest possible oracle for the unit tests to cross-check both
     against.
     """
-    import numpy as np
-
     spark = df.sparkSession
     pdf = df.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()
@@ -287,70 +308,64 @@ def exact_cosine_pairs_distributed(
     df: DataFrame,
     threshold: float = 0.45,
     round_digits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 8,
 ) -> DataFrame:
     """Exact all-pairs cosine with NO driver collect: the fully
     distributed form of :func:`exact_cosine_pairs_blocked` (same
     output, bit-for-bit).
 
-    Vectors are hash-assigned to *n_blocks* blocks; every unordered
-    block pair ``(i, j), i <= j`` becomes one shuffle group, and each
-    row replicates to the *n_blocks* groups it participates in (one
+    Vectors are hash-assigned to :data:`N_BLOCKS` blocks; every
+    unordered block pair ``(i, j), i <= j`` becomes one shuffle group,
+    and each row replicates to the N_BLOCKS groups it participates in (one
     ``explode`` — no self-join of the full table).  Inside a group an
     Arrow batch holds just the two blocks, numpy matmuls them, and the
     upper triangle (``id_a < id_b``) survives the threshold.
 
-    Scale accounting: shuffle volume is ``N x n_blocks`` rows and peak
-    executor state is ``2N / n_blocks`` vectors, so *n_blocks* trades
-    shuffle for memory — at 1M x 256-dim float64, ``n_blocks=32``
-    bounds a group under ~130 MB.  The O(N²) multiply itself is the
-    price of EXACTNESS and spreads over ``n_blocks·(n_blocks+1)/2``
+    Scale accounting: shuffle volume is ``N x N_BLOCKS`` rows and peak
+    executor state is ``2N / N_BLOCKS`` vectors, so N_BLOCKS trades
+    shuffle for memory — at 1M x 256-dim float64, 32 blocks bound a
+    group under ~130 MB.  The O(N²) multiply itself is the
+    price of EXACTNESS and spreads over ``N_BLOCKS·(N_BLOCKS+1)/2``
     independent tasks; the sub-quadratic path for corpus scale remains
     :func:`semantic_dedup` / LSH blocking.  Arithmetic mirrors the SQL
     oracle exactly: float64 ``dot/(na·nb)``, rounded before the
     threshold, zero when either norm is zero.
     """
-    import numpy as np
-
-    id_field = df.schema[id_col].dataType.simpleString()
+    id_field = df.schema[ID_COL].dataType.simpleString()
     out_schema = f"id_a {id_field}, id_b {id_field}, cosine double"
 
     base = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("__b"),
+        F.col(ID_COL),
+        F.col(VEC_COL),
+        F.pmod(F.xxhash64(F.col(ID_COL)), F.lit(N_BLOCKS)).cast("int").alias("__b"),
     )
     # one row per (row, partner block): group key is the unordered pair
     replicated = base.select(
-        id_col,
-        vec_col,
+        ID_COL,
+        VEC_COL,
         "__b",
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("__o"),
+        F.explode(F.sequence(F.lit(0), F.lit(N_BLOCKS - 1))).alias("__o"),
     ).select(
-        id_col,
-        vec_col,
+        ID_COL,
+        VEC_COL,
         "__b",
         F.least("__b", "__o").alias("__gi"),
         F.greatest("__b", "__o").alias("__gj"),
     )
     # no dedup needed: for a row in block b, each partner o maps to a
-    # distinct (gi, gj) — the row lands in each of its n_blocks groups
+    # distinct (gi, gj) — the row lands in each of its N_BLOCKS groups
     # exactly once
 
     def pair_block(key, pdf):
         gi, gj = int(key[0]), int(key[1])
-        ids = pdf[id_col].to_numpy()
-        mat = np.array(pdf[vec_col].tolist(), dtype="float64")
-        norms = np.linalg.norm(mat, axis=1)
+        ids = pdf[ID_COL].to_numpy()
+        mat = np.array(pdf[VEC_COL].tolist(), dtype="float64")
         if gi == gj:  # diagonal group: within-block upper triangle
-            a_ids, a_mat, a_norms = ids, mat, norms
-            b_ids, b_mat, b_norms = ids, mat, norms
+            a_ids, a_mat = ids, mat
+            b_ids, b_mat = ids, mat
         else:
             left = pdf["__b"].to_numpy() == gi
-            a_ids, a_mat, a_norms = ids[left], mat[left], norms[left]
-            b_ids, b_mat, b_norms = ids[~left], mat[~left], norms[~left]
+            a_ids, a_mat = ids[left], mat[left]
+            b_ids, b_mat = ids[~left], mat[~left]
         if len(a_ids) == 0 or len(b_ids) == 0:
             return pd.DataFrame(
                 {
@@ -359,10 +374,7 @@ def exact_cosine_pairs_distributed(
                     "cosine": np.array([], dtype="float64"),
                 }
             )
-        denom = np.outer(a_norms, b_norms)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom > 0, (a_mat @ b_mat.T) / denom, 0.0)
-        cos = np.round(cos, round_digits)
+        cos = np.round(_cosine_matrix(a_mat, b_mat), round_digits)
         keep = (cos >= threshold) & (a_ids[:, None] < b_ids[None, :])
         ai, bi = np.nonzero(keep)
         out = pd.DataFrame(
@@ -396,12 +408,7 @@ def exact_cosine_pairs_distributed(
 
 
 def ivf_assign_cells(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    max_train: int = 100_000,
-    max_iter: int = 10,
+    corpus: DataFrame, n_cells: int = 16
 ) -> tuple[DataFrame, list[list[float]]]:
     """IVF coarse quantizer: spherical k-means centroids trained
     DRIVER-SIDE on a bounded sample, corpus assigned to its nearest
@@ -409,26 +416,20 @@ def ivf_assign_cells(
 
     Returns ``(corpus + __cell column, centroids)``.  Training is
     deliberately NOT distributed: like FAISS, the quantizer fits on a
-    bounded sample (*max_train* rows → numpy Lloyd iterations, fully
-    deterministic via seed) because a handful of centroids never needs
-    more data, and a distributed k-means pays tens of scheduler stages
-    to compute what numpy finishes in milliseconds.  The distributed
+    bounded sample (:data:`IVF_MAX_TRAIN` rows → numpy Lloyd iterations,
+    fully deterministic via :data:`SEED`) because a handful of centroids
+    never needs more data, and a distributed k-means pays tens of
+    scheduler stages to compute what numpy finishes in milliseconds.  The distributed
     part is the assignment: one expression pass over the full corpus,
     no shuffle.  Persist the assigned corpus partitioned by ``__cell``
     so repeated query batches only read the probed cells — that
     partition pruning is the entire point of IVF.
     """
-    import numpy as np
-
-    sample = np.array(
-        corpus.select(F.col(vec_col).alias("v")).limit(max_train).toPandas()["v"].tolist(),
-        dtype="float64",
-    )
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    sample = sample / np.where(norms == 0, 1.0, norms)
-    rng = np.random.RandomState(seed)
+    rows = corpus.select(F.col(VEC_COL).alias("v")).limit(IVF_MAX_TRAIN)
+    sample = _unit_rows(np.array(rows.toPandas()["v"].tolist(), dtype="float64"))
+    rng = np.random.RandomState(SEED)
     cents = sample[rng.choice(len(sample), size=min(n_cells, len(sample)), replace=False)]
-    for _ in range(max_iter):
+    for _ in range(IVF_MAX_ITER):
         # cosine assignment == argmax dot on normalized vectors
         assign = (sample @ cents.T).argmax(axis=1)
         new = np.stack(
@@ -437,15 +438,14 @@ def ivf_assign_cells(
                 for c in range(len(cents))
             ]
         )
-        norms = np.linalg.norm(new, axis=1, keepdims=True)
-        new = new / np.where(norms == 0, 1.0, norms)
+        new = _unit_rows(new)
         if np.allclose(new, cents, atol=1e-9):
             break
         cents = new
     centroids = [list(map(float, c)) for c in cents]
 
     assigned = corpus.withColumn(
-        "__cell", F.element_at(_nearest_cells_udf(centroids, 1)(F.col(vec_col)), 1)
+        "__cell", F.element_at(_nearest_cells_udf(centroids, 1)(F.col(VEC_COL)), 1)
     )
     return assigned, centroids
 
@@ -460,8 +460,6 @@ def _nearest_cells_udf(centroids: list[list[float]], nprobe: int):
     effectively free.  Input vectors need not be normalized: rows are
     L2-normalized inside the batch, centroids are normalized already.
     """
-    import numpy as np
-
     from pyspark.sql.functions import pandas_udf
 
     cents = np.asarray(centroids, dtype="float64").T  # dim × n_cells
@@ -469,10 +467,7 @@ def _nearest_cells_udf(centroids: list[list[float]], nprobe: int):
 
     @pandas_udf("array<int>")
     def nearest(batch: pd.Series) -> pd.Series:
-        m = np.array(batch.tolist(), dtype="float64")
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        m = m / np.where(norms == 0, 1.0, norms)
-        scores = m @ cents
+        scores = _unit_rows(np.array(batch.tolist(), dtype="float64")) @ cents
         # stable argsort on -score ties break toward the smaller cell id
         order = np.argsort(-scores, axis=1, kind="stable")[:, :p]
         return pd.Series(list(order.astype("int32")))
@@ -486,11 +481,6 @@ def cosine_topk_ivf(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     round_digits: int | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: queries probe their *nprobe* nearest
@@ -505,40 +495,21 @@ def cosine_topk_ivf(
     window (set it when an oracle ranks on rounded values, so float
     ulps can't flip the order between engines).
     """
-    assigned, centroids = ivf_assign_cells(
-        corpus, n_cells=n_cells, seed=seed, vec_col=vec_col
-    )
+    assigned, centroids = ivf_assign_cells(corpus, n_cells=n_cells)
     probed = queries.select(
-        query_id_col,
-        query_vec_col,
-        F.explode(_nearest_cells_udf(centroids, nprobe)(F.col(query_vec_col))).alias(
+        QUERY_ID_COL,
+        QUERY_VEC_COL,
+        F.explode(_nearest_cells_udf(centroids, nprobe)(F.col(QUERY_VEC_COL))).alias(
             "__cell"
         ),
     )
-    cos = cosine_similarity(vec_col, query_vec_col)
-    if round_digits is not None:
-        cos = F.round(cos, round_digits)
-    joined = assigned.join(F.broadcast(probed), "__cell").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cos.alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _scored_topk(assigned, probed, "__cell", k, round_digits)
 
 
 def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.45,
     n_cells: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster with the IVF
     coarse quantizer, then inside each cluster drop every row that has
@@ -558,39 +529,24 @@ def semantic_dedup(
     variant is judged by "every drop is justified" plus recall against
     the exact rule.
     """
-    import numpy as np
-
-    assigned, _ = ivf_assign_cells(
-        corpus, n_cells=n_cells, seed=seed, vec_col=vec_col
-    )
-    id_field = corpus.schema[id_col].dataType.simpleString()
+    assigned, _ = ivf_assign_cells(corpus, n_cells=n_cells)
+    id_field = corpus.schema[ID_COL].dataType.simpleString()
 
     def keep_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        m = np.array(pdf[vec_col].tolist(), dtype="float64")
-        norms = np.linalg.norm(m, axis=1)
-        denom = np.outer(norms, norms)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom > 0, (m @ m.T) / denom, 0.0)
-        cos = np.round(cos, round_digits)
-        n = len(pdf)
+        pdf = pdf.sort_values(ID_COL).reset_index(drop=True)
+        m = np.array(pdf[VEC_COL].tolist(), dtype="float64")
+        cos = np.round(_cosine_matrix(m, m), ROUND_DIGITS)
         lower = np.tril(cos >= threshold, k=-1)  # [i, j<i] similar pairs
         dropped = lower.any(axis=1)
-        return pdf.loc[~dropped, [id_col]]
+        return pdf.loc[~dropped, [ID_COL]]
 
     kept = assigned.groupBy("__cell").applyInPandas(
-        keep_cell, schema=f"{id_col} {id_field}"
+        keep_cell, schema=f"{ID_COL} {id_field}"
     )
-    return corpus.join(kept, id_col, "left_semi")
+    return corpus.join(kept, ID_COL, "left_semi")
 
 
-def semantic_dedup_exact(
-    corpus: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
+def semantic_dedup_exact(corpus: DataFrame, threshold: float = 0.45) -> DataFrame:
     """Exact global variant of :func:`semantic_dedup` (drop a row iff
     ANY lower-id row anywhere has cosine ≥ threshold), built on the
     fully distributed exact pair list (no driver collect anywhere on
@@ -598,16 +554,13 @@ def semantic_dedup_exact(
     variant is judged against, and SQL-expressible so it carries the
     DuckDB oracle."""
     pairs = exact_cosine_pairs_distributed(
-        corpus, threshold=threshold, round_digits=round_digits,
-        id_col=id_col, vec_col=vec_col,
+        corpus, threshold=threshold, round_digits=ROUND_DIGITS
     )
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return corpus.join(dropped, id_col, "left_anti")
+    dropped = pairs.select(F.col("id_b").alias(ID_COL)).distinct()
+    return corpus.join(dropped, ID_COL, "left_anti")
 
 
-def label_centroid_outliers(
-    df, vec_col: str = "embedding", label_col: str = "label", id_col: str = "vec_id"
-):
+def label_centroid_outliers(df: DataFrame) -> DataFrame:
     """Per-group centroid + outlier sweep as a grouped-map Pandas UDF
     (``groupBy().applyInPandas``) — SURVEY §2.9's batch grouped-map
     surface: each label's vectors arrive as ONE Arrow batch, numpy
@@ -626,19 +579,17 @@ def label_centroid_outliers(
     half-to-EVEN and would diverge on exact .00005 boundaries.
     Ties on the rounded max distance resolve to the smallest id.
     """
-    import numpy as np
-    import pandas as pd
 
     def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        ids = pdf[id_col].to_numpy()
+        m = np.stack(pdf[VEC_COL].to_numpy()).astype(np.float64)
+        ids = pdf[ID_COL].to_numpy()
         c = m.mean(axis=0)
         d = np.sqrt(((m - c) ** 2).sum(axis=1))
         rd = np.floor(d * 1e4 + 0.5) / 1e4
         top = ids[rd == rd.max()].min()
         return pd.DataFrame(
             {
-                label_col: [pdf[label_col].iloc[0]],
+                LABEL_COL: [pdf[LABEL_COL].iloc[0]],
                 "n": [len(ids)],
                 "avg_dist": [float(np.floor(d.mean() * 1e4 + 0.5) / 1e4)],
                 "max_dist": [float(rd.max())],
@@ -647,10 +598,10 @@ def label_centroid_outliers(
         )
 
     out_schema = (
-        f"{label_col} int, n bigint, avg_dist double, max_dist double, "
+        f"{LABEL_COL} int, n bigint, avg_dist double, max_dist double, "
         "top_outlier bigint"
     )
-    return df.groupBy(label_col).applyInPandas(summarize, schema=out_schema)
+    return df.groupBy(LABEL_COL).applyInPandas(summarize, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -661,17 +612,13 @@ def label_centroid_outliers(
 
 def pq_sampled_codebooks(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_subspaces: int = 8,
     id_modulus: int = 33,
-    scale: int = 1_000_000,
     lloyd_iters: int = 0,
-    max_codes: int = 4096,
 ):
     """Train PQ codebooks: one codeword table per subspace, as int64.
 
-    Vectors are fixed-point scaled first — ``floor(x·scale + 0.5)``
+    Vectors are fixed-point scaled first — ``floor(x·PQ_SCALE + 0.5)``
     (half-up; numpy's round is half-to-EVEN and DuckDB/Spark round is
     half-away-from-zero, but floor(+0.5) is identical everywhere) — so
     every later distance/assignment/score is INTEGER-exact and an SQL
@@ -684,29 +631,27 @@ def pq_sampled_codebooks(
     each round) for lower quantization error; production uses that,
     the oracle row keeps 0.  Like the IVF coarse quantizer
     (``ivf_assign_cells``), training is deliberately driver-side on a
-    BOUNDED sample (≤ *max_codes* codewords; a codebook never needs
+    BOUNDED sample (≤ :data:`PQ_MAX_CODES` codewords; a codebook never needs
     more data) — the distributed work is encode + scan, not training.
 
     Returns ``(codebooks, sub_dim)`` where codebooks is int64 ndarray
     of shape ``(n_codes, n_subspaces, sub_dim)``, codeword c being the
     sampled row with the c-th smallest id.
     """
-    import numpy as np
-
     pdf = (
-        corpus.filter((F.col(id_col) % id_modulus) == 0)
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(max_codes)
+        corpus.filter((F.col(ID_COL) % id_modulus) == 0)
+        .select(ID_COL, VEC_COL)
+        .orderBy(ID_COL)
+        .limit(PQ_MAX_CODES)
         .toPandas()
     )
     if pdf.empty:
         raise ValueError(
-            f"PQ codebook sample is empty: no rows with {id_col} % "
+            f"PQ codebook sample is empty: no rows with {ID_COL} % "
             f"{id_modulus} == 0 — lower id_modulus or check the corpus"
         )
-    vecs = np.array(pdf[vec_col].tolist(), dtype="float64")
-    iv = np.floor(vecs * scale + 0.5).astype("int64")
+    vecs = np.array(pdf[VEC_COL].tolist(), dtype="float64")
+    iv = np.floor(vecs * PQ_SCALE + 0.5).astype("int64")
     dim = iv.shape[1]
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
@@ -736,13 +681,7 @@ def pq_sampled_codebooks(
     return books, sub_dim
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks) -> DataFrame:
     """Encode each vector to ``n_subspaces`` codes (nearest codeword by
     squared L2 per subspace, ties to the smaller code — numpy argmin's
     first-occurrence IS the smaller index).  One narrow Arrow pass with
@@ -754,7 +693,6 @@ def pq_encode(
     deployment would persist instead of raw vectors (dim·4 bytes →
     n_subspaces bytes per row at 256 codes: 32× less scan IO).
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     books = codebooks  # (C, M, d) int64
@@ -763,10 +701,8 @@ def pq_encode(
 
     @pandas_udf("array<int>")
     def encode(batch: pd.Series) -> pd.Series:
-        import numpy as np
-
         v = np.array(batch.tolist(), dtype="float64")
-        iv = np.floor(v * scale + 0.5).astype("int64")
+        iv = np.floor(v * PQ_SCALE + 0.5).astype("int64")
         pts = iv.reshape(len(iv), n_sub, sub_dim)
         codes = np.empty((len(iv), n_sub), dtype="int32")
         for m in range(n_sub):
@@ -779,7 +715,7 @@ def pq_encode(
             codes[:, m] = d.argmin(1)
         return pd.Series(list(codes))
 
-    return corpus.select(id_col, encode(F.col(vec_col)).alias("__codes"))
+    return corpus.select(ID_COL, encode(F.col(VEC_COL)).alias("__codes"))
 
 
 def pq_adc_topk(
@@ -788,13 +724,7 @@ def pq_adc_topk(
     k: int = 5,
     n_subspaces: int = 8,
     id_modulus: int = 33,
-    scale: int = 1_000_000,
     lloyd_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    max_queries: int = 1024,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: exact query vectors against the
     PQ-compressed corpus.
@@ -804,7 +734,7 @@ def pq_adc_topk(
     ``Σ_m LUT[m][code_m]`` — a pure table-gather over the CODES, never
     touching raw vectors.  Scale shape: codes table is ~dim·4/M× smaller
     than the corpus, the scan is map-side (LUTs ride in the closure,
-    query set bounded by *max_queries* — chunk bigger batches), and the
+    query set bounded by :data:`PQ_MAX_QUERIES` — chunk bigger batches), and the
     only shuffle is the per-query top-k window.  Ranking uses the raw
     INTEGER score (descending, ties to the smaller id) so Spark and an
     SQL oracle agree bit-for-bit; ``adc_dot`` rescales to cosine units
@@ -812,79 +742,60 @@ def pq_adc_topk(
 
     Returns ``(query_id, vec_id, adc_dot)``, k rows per query.
     """
-    import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import LongType, StructField, StructType
 
     books, sub_dim = pq_sampled_codebooks(
         corpus,
-        id_col=id_col,
-        vec_col=vec_col,
         n_subspaces=n_subspaces,
         id_modulus=id_modulus,
-        scale=scale,
         lloyd_iters=lloyd_iters,
     )
 
     # orderBy before limit: an unordered limit keeps a partition/plan-
-    # dependent subset once the query set exceeds max_queries, silently
+    # dependent subset once the query set exceeds PQ_MAX_QUERIES, silently
     # diverging from an oracle that scores every query (ADVICE r5 #2);
     # ordered, the kept subset is the deterministic id-smallest prefix.
     qpdf = (
-        queries.select(query_id_col, query_vec_col)
-        .orderBy(query_id_col)
-        .limit(max_queries)
+        queries.select(QUERY_ID_COL, QUERY_VEC_COL)
+        .orderBy(QUERY_ID_COL)
+        .limit(PQ_MAX_QUERIES)
         .toPandas()
     )
-    qids = qpdf[query_id_col].to_numpy()
-    qv = np.array(qpdf[query_vec_col].tolist(), dtype="float64")
-    qi = np.floor(qv * scale + 0.5).astype("int64")
+    qids = qpdf[QUERY_ID_COL].to_numpy()
+    qv = np.array(qpdf[QUERY_VEC_COL].tolist(), dtype="float64")
+    qi = np.floor(qv * PQ_SCALE + 0.5).astype("int64")
     qsub = qi.reshape(len(qi), n_subspaces, sub_dim)  # (Q, M, d)
-    # LUTs: (Q, M, C) int64 — Q·M·C·8 bytes, bounded by max_queries
+    # LUTs: (Q, M, C) int64 — Q·M·C·8 bytes, bounded by PQ_MAX_QUERIES
     luts = np.einsum("qmd,cmd->qmc", qsub, books)
 
-    codes = pq_encode(
-        corpus, books, id_col=id_col, vec_col=vec_col, scale=scale
-    )
+    codes = pq_encode(corpus, books)
 
     out_schema = StructType(
         [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
+            StructField(QUERY_ID_COL, LongType()),
+            StructField(ID_COL, LongType()),
             StructField("__iscore", LongType()),
         ]
     )
 
     def score(batches):
-        import numpy as np
-        import pandas as pd
-
         m_idx = np.arange(n_subspaces)
         for pdf in batches:
             if not len(pdf):
                 continue
             c = np.stack(pdf["__codes"].to_numpy()).astype("int64")  # (n, M)
-            ids = pdf[id_col].to_numpy()
+            ids = pdf[ID_COL].to_numpy()
             for j, qid in enumerate(qids):
                 s = luts[j][m_idx[None, :], c].sum(axis=1)  # (n,)
                 yield pd.DataFrame(
-                    {"query_id": int(qid), id_col: ids, "__iscore": s}
+                    {QUERY_ID_COL: int(qid), ID_COL: ids, "__iscore": s}
                 )
 
     scored = codes.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__iscore"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            "query_id",
-            id_col,
-            F.round(F.col("__iscore") / float(scale) ** 2, 4).alias("adc_dot"),
-        )
+    return priority_dedup(
+        scored, QUERY_ID_COL, [F.desc("__iscore"), F.asc(ID_COL)], k
+    ).select(
+        QUERY_ID_COL,
+        ID_COL,
+        F.round(F.col("__iscore") / float(PQ_SCALE) ** 2, 4).alias("adc_dot"),
     )

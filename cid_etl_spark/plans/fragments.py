@@ -298,8 +298,8 @@ def user_event_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def signed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical hyperplane-LSH-signed embedding corpus: every
     vector tagged with its 4-bit sign-of-projection bucket
-    (``operators.similarity.random_hyperplane_signature``, dim=64,
-    seed=42) — the signature the ANN probe path and its full-probe
+    (``operators.similarity.random_hyperplane_signature``, dim=64)
+    — the signature the ANN probe path and its full-probe
     oracle twin both compute.  Signing is 4 dim-64 dot products per
     row as SQL array expressions, the expensive half of the LSH scan;
     in a batch the corpus signs once.  The NORMALIZED-matrix fragment
@@ -317,7 +317,7 @@ def signed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.withColumn(
         "__bucket",
-        random_hyperplane_signature("embedding", dim=64, bits=4, seed=42),
+        random_hyperplane_signature("embedding", dim=64, bits=4),
     )
 
 

@@ -40,7 +40,8 @@ from cid_etl_spark.queries._registry import (  # noqa: F401
 )
 
 # Import order == registration order: the original module's layout,
-# then the co-purchase graph family gathered from four of them.
+# then the co-purchase graph family gathered from four of them, then
+# the embedding family gathered from eight.
 from cid_etl_spark.queries import core as _core  # noqa: E402
 from cid_etl_spark.queries import stats as _stats  # noqa: E402
 from cid_etl_spark.queries import tpch as _tpch  # noqa: E402
@@ -53,6 +54,7 @@ from cid_etl_spark.queries import round5 as _round5  # noqa: E402
 from cid_etl_spark.queries import round11 as _round11  # noqa: E402
 from cid_etl_spark.queries import round12 as _round12  # noqa: E402
 from cid_etl_spark.queries import graph as _graph  # noqa: E402
+from cid_etl_spark.queries import embeddings as _embeddings  # noqa: E402
 
 # Re-export every module-level name so the package namespace is a
 # drop-in for the former flat module (tests and tools import query
@@ -72,6 +74,7 @@ for _m in (
     _round11,
     _round12,
     _graph,
+    _embeddings,
 ):
     for _k, _v in vars(_m).items():
         if not _k.startswith("__"):

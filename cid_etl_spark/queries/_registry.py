@@ -68,19 +68,29 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 #: Rows to put at the very front of the next driver window (changed
 #: plans, suspect rows).  Without an entry here the window is the
 #: never-verified rows, then the stalest green rows.  Current entries:
-#: the connected-components rows (one Spark action per round, the
-#: convergence count observed in it) and the rows built on the Arrow
-#: shingle index (operators.dedup.shingle_index_arrow, whose gram
-#: hashing is one batched call per Arrow batch).
+#: the oracled rows of the embedding family (moved into
+#: queries/embeddings.py, twins sharing one cosine, top-k through
+#: operators.dedup.priority_dedup), the two run_batch rows (one digest
+#: helper) and the star connected-components row (unlabeled endpoints
+#: kept).
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    "dedup_clusters_documents",
+    "cosine_topk_bruteforce",
+    "cosine_topk_lsh_probeall",
+    "cosine_topk_ivf_fullprobe",
+    "pq_adc_topk",
+    "embedding_neardup_exact",
+    "semantic_dedup_exact_embeddings",
+    "hard_negative_mining",
+    "knn_label_vote_embeddings",
+    "kmeans_cluster_assign",
+    "embedding_split_contamination",
+    "embedding_outliers_by_label",
+    "embedding_norms_arrow",
+    "jl_projection_embeddings",
+    "embedding_quantize_int8",
+    "run_batch_fragments_verified",
+    "run_batch_stats_verified",
     "dedup_clusters_star",
-    "neardup_curation_pipeline",
-    "pretraining_data_pipeline",
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "decontaminate_documents",
-    "lsh_recall_report",
 )
 
 

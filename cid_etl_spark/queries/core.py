@@ -1,6 +1,6 @@
 """Scan/project/scalar, aggregation, join, set-op, window, JSON/event,
-text, similarity and as-of/multimodal/array query registrations
-(SURVEY sections A-M)."""
+text, near-dup and as-of/multimodal/array query registrations
+(SURVEY sections A-M; the dense-vector rows live in :mod:`.embeddings`)."""
 
 from __future__ import annotations
 
@@ -16,14 +16,12 @@ from cid_etl_spark.functions.strings import (
 )
 from cid_etl_spark.functions.text import mean_token_length, punct_ratio, token_count
 from cid_etl_spark.functions.text import LANG_MARKERS
-from cid_etl_spark.functions.vectors import cosine_similarity
 from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
 from cid_etl_spark.operators.dedup import (
     minhash_dedup_pairs,
     priority_dedup,
     simhash_dedup_pairs,
 )
-from cid_etl_spark.operators.similarity import embedding_neardup_pairs
 from cid_etl_spark.sources.parquet import load_table
 
 
@@ -656,51 +654,6 @@ def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# H. Embedding similarity (north-star)
-# ---------------------------------------------------------------------------
-
-
-@_register(
-    "cosine_topk_bruteforce",
-    """
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 5
-    ), c AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), s AS (
-      SELECT q.query_id, c.vec_id,
-             round(list_cosine_similarity(c.v, q.qv), 4) AS cosine
-      FROM q CROSS JOIN c
-    )
-    SELECT query_id, vec_id, cosine
-    FROM s
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC
-    ) <= 3
-    """,
-)
-def cosine_topk_bruteforce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ANN baseline: brute-force cosine top-3 for 5 query
-    vectors.  Queries broadcast; corpus scanned once, no shuffle except
-    the per-query top-k window.  Ranked on the ROUNDED similarity (both
-    engines) so float ulps can't flip the order."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    joined = emb.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "vec_id",
-        F.round(cosine_similarity("embedding", "qv"), 4).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return joined.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= 3
-    ).drop("__rn")
-
-
-# ---------------------------------------------------------------------------
 # I. Near-dup extensions without SQL oracles (driver: rows-only check).
 #    They sign with pandas siphash, which DuckDB lacks; their md5 twins
 #    (minhash_lsh_verified, simhash_pairs_verified) run the same
@@ -725,17 +678,6 @@ def simhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking, Hamming ≤ 3)."""
     d = load_table(spark, sf_dir, "documents")
     return simhash_dedup_pairs(d, "doc_id", "text", max_hamming=3, n=3)
-
-
-@_register("embedding_neardup")
-def embedding_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH bucket blocking —
-    the sub-quadratic path; embedding_neardup_exact is the oracle-backed
-    O(N²) baseline its recall is judged against.  Threshold 0.45 sits
-    in the fixtures' actual cosine range (max pairwise ≈ 0.51) so the
-    two variants produce comparable non-empty outputs."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(emb, dim=64, threshold=0.45, bits=8)
 
 
 # ---------------------------------------------------------------------------
@@ -1116,7 +1058,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# K. More text + embedding analytics (north-star)
+# K. More text analytics (north-star)
 # ---------------------------------------------------------------------------
 
 
@@ -1175,11 +1117,11 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs with language blocking,
     via the inverted shingle index (operators.dedup
     .ngram_jaccard_pairs_exact): work scales with shingles actually
-    shared, not with N² candidate pairs.  Two scale escapes exist with
-    the same contract: PPJoin prefix filtering
-    (ngram_jaccard_pairs_prefix) when hot shingles make the inverted
-    index quadratic in a key, and MinHash banding (minhash_lsh_pairs)
-    as the sub-quadratic approximate path."""
+    shared, not with N² candidate pairs.  When hot shingles make the
+    inverted index quadratic in a key, MinHash banding
+    (minhash_lsh_pairs) is the sub-quadratic approximate path; a PPJoin
+    prefix-filter variant was measured (BASELINE.md, 8× corpus) and
+    deleted unused."""
     from cid_etl_spark.operators.dedup import ngram_jaccard_pairs_exact
 
     d = load_table(spark, sf_dir, "documents")
@@ -1245,26 +1187,6 @@ def content_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         content_fingerprint("text").alias("fingerprint"),
         F.size(winnowing_fingerprints("text", k=8, window=4)).alias("n_winnow_fps"),
-    )
-
-
-@_register("cosine_topk_lsh")
-def cosine_topk_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate (LSH-bucketed) cosine top-k — the ANN scale path
-    beside cosine_topk_bruteforce.  Rows-only: approximate by design;
-    recall vs. brute force is asserted in tests/test_similarity.py."""
-    from cid_etl_spark.operators.similarity import cosine_topk_lsh
-    from cid_etl_spark.plans.fragments import signed_embeddings
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    # corpus signing through the canonical fragment (r8): identical
-    # plan standalone, signed once when batched with the probeall twin
-    return cosine_topk_lsh(
-        emb, queries, dim=64, k=3, bits=4,
-        signed_corpus=signed_embeddings(spark, sf_dir),
     )
 
 
@@ -1434,22 +1356,6 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_audio_features(attach_fake_media(d, "doc_id", "doc_id"))
 
 
-@_register("cosine_topk_ivf")
-def cosine_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-k (operators.similarity.cosine_topk_ivf): k-means
-    coarse quantizer trained on normalized vectors, corpus assigned to
-    cells once, queries probe their 4 nearest of 16 cells.  Rows-only:
-    approximate by design; nprobe=n_cells == brute force is asserted in
-    tests/test_similarity.py."""
-    from cid_etl_spark.operators.similarity import cosine_topk_ivf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return cosine_topk_ivf(emb, queries, k=3, n_cells=16, nprobe=4)
-
-
 # ---------------------------------------------------------------------------
 # L. Array / date / outer-join built-in surface (free in Spark; oracled)
 # ---------------------------------------------------------------------------
@@ -1555,35 +1461,6 @@ def full_outer_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o.n_orders"),
         F.col("e.n_events"),
     )
-
-
-@_register(
-    "embedding_neardup_exact",
-    """
-    SELECT a.vec_id AS id_a,
-           b.vec_id AS id_b,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(b.embedding AS DOUBLE[])), 4) AS cosine
-    FROM embeddings a
-    JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                       CAST(b.embedding AS DOUBLE[])), 4) >= 0.45
-    """,
-)
-def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact embedding near-dup pairs (full pairwise cosine) — the
-    oracle-checked twin of the LSH-blocked embedding_neardup: same
-    contract, O(N²) cost, the correctness baseline LSH recall is judged
-    against.  Computed fully distributed (no driver collect): vectors
-    hash into blocks, each unordered block pair is one shuffle group,
-    per-group Arrow matmul (operators.similarity.
-    exact_cosine_pairs_distributed — executor state bounded by
-    2N/n_blocks).  At corpus scale run it per LSH/IVF block or on
-    samples, never the full corpus."""
-    from cid_etl_spark.operators.similarity import exact_cosine_pairs_distributed
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return exact_cosine_pairs_distributed(emb, threshold=0.45, round_digits=4)
 
 
 @_register(

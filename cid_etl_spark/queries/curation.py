@@ -1,6 +1,6 @@
 """Model-based quality filtering, media codec rows and round-3
 curation extensions (the co-purchase graph suite lives in
-:mod:`.graph`)."""
+:mod:`.graph`, the embedding rows in :mod:`.embeddings`)."""
 
 from __future__ import annotations
 
@@ -746,119 +746,6 @@ def cogroup_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_purchases") > 0)
     )
-
-
-_ARROW_NORMS_SQL = r"""
-    SELECT vec_id,
-           CAST(len(embedding) AS INTEGER) AS dim,
-           round(sqrt(list_sum(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2_norm
-    FROM embeddings
-    """
-
-
-@_register("embedding_norms_arrow", _ARROW_NORMS_SQL)
-def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``mapInArrow`` surface: per-vector L2 norms computed on RAW
-    Arrow RecordBatches — the list<float> column's flat values buffer
-    reshapes into a numpy matrix with ZERO copies and no pandas object
-    boxing (``applyInPandas``/``mapInPandas`` would materialize one
-    Python list-of-floats per row first, the dominant cost for
-    array-typed columns at scale).  This is the right UDF tier for
-    dense-vector math over 100 TB of embeddings: bytes stay columnar
-    from parquet through Arrow into BLAS.  Falls back to per-row
-    summation only if a batch arrives ragged (mixed dims), so the
-    fast path is taken exactly when the data is truly fixed-width."""
-    import numpy as np
-    import pyarrow as pa
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    def norms(batches):
-        for batch in batches:
-            ids = batch.column("vec_id")
-            col = batch.column("embedding")
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            lens = np.diff(col.offsets.to_numpy())
-            # flatten() honors a sliced array's offset; .values would
-            # hand back the unsliced buffer and misalign every row
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype("float64")
-            if len(set(lens.tolist())) == 1 and len(lens):
-                mat = flat.reshape(len(lens), int(lens[0]))
-                l2 = np.sqrt((mat * mat).sum(axis=1))
-            else:
-                # ragged fallback: segment sums over the flat buffer
-                idx = np.repeat(np.arange(len(lens)), lens)
-                l2 = np.sqrt(np.bincount(idx, weights=flat * flat,
-                                         minlength=len(lens)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(lens.astype("int32")),
-                    pa.array(np.round(l2, 6)),
-                ],
-                names=["vec_id", "dim", "l2_norm"],
-            )
-
-    return emb.mapInArrow(norms, "vec_id long, dim int, l2_norm double")
-
-
-def _jl_projection_sql(out_dims: int = 4) -> str:
-    """DuckDB twin of the deterministic JL projection: each output
-    coordinate is a seed-derived signed-weight dot product over the
-    embedding, replayed term-by-term."""
-    cols = ",\n           ".join(
-        "round(list_sum(list_transform(range(1, len(embedding) + 1), "
-        f"i -> CAST(embedding[i] AS DOUBLE) * "
-        f"((('0x' || substr(md5(i::VARCHAR || '_{j}'), 1, 7))::BIGINT "
-        f"% 2001 - 1000) / 1000.0))), 4) AS p{j}"
-        for j in range(out_dims)
-    )
-    return f"""
-    SELECT vec_id,
-           {cols}
-    FROM embeddings
-    """
-
-
-@_register("jl_projection_embeddings", _jl_projection_sql())
-def jl_projection_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson-Lindenstrauss random projection to 4 dims with a
-    DETERMINISTIC projection matrix — every weight w(i, j) derives
-    from md5(dim_index || component), so the reduction is reproducible
-    run-to-run, needs no fitted model or driver state, and the oracle
-    replays every dot product exactly (PCA by contrast is
-    eigen-solver- and sign-ambiguous — unverifiable bit-for-bit).
-    Map-only array expressions, one SQL text per coordinate: at 100 TB
-    this is the shuffle-free pre-step that shrinks embeddings before
-    LSH/IVF indexing or near-dup blocking, trading dimensionality for
-    distance distortion bounded by the JL lemma.  Weights are uniform
-    in [-1, 1] (signed md5 mix).  Because w(i, j) is data-INDEPENDENT,
-    the matrix is hashed once on the driver and inlined as literal
-    arrays — the
-    executors run multiply-add only; hashing per element inside the
-    lambda would pay the interpreted md5 path per value (~16 µs/term,
-    measured for the verification-only suites) for values that never
-    change."""
-    import hashlib
-
-    from cid_etl_spark.functions.vectors import array_sql, col_sql, dot_sql
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    max_dim = 256
-
-    def w(i: int, j: int) -> float:
-        hv = int(hashlib.md5(f"{i}_{j}".encode()).hexdigest()[:7], 16)
-        return (hv % 2001 - 1000) / 1000.0
-
-    def proj(j: int):
-        weights = array_sql(w(i, j) for i in range(1, max_dim + 1))
-        vec = col_sql("embedding")
-        coord = dot_sql(vec, f"slice({weights}, 1, size({vec}))")
-        return F.expr(f"round({coord}, 4)").alias(f"p{j}")
-
-    return emb.select("vec_id", *[proj(j) for j in range(4)])
 
 
 _BINARYFILE_SQL = r"""

@@ -524,94 +524,6 @@ def correlation_matrix_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding-space cross-split contamination check
-# ---------------------------------------------------------------------------
-
-#: Rounded-cosine threshold above which a holdout vector counts as
-#: contaminated by (≈ memorizable from) its nearest training vector.
-_CONTAM_THRESHOLD = 0.98
-#: md5-hex threshold assigning ~20% of vec_ids to the holdout side —
-#: same split idiom as holdout_split_documents (stable under reruns
-#: and corpus growth).
-_CONTAM_HOLDOUT_HEX = "3333333333333333333333333333333333"
-
-_CONTAM_SQL = f"""
-WITH split AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         md5(CAST(vec_id AS VARCHAR)) < '{_CONTAM_HOLDOUT_HEX}' AS is_holdout
-  FROM embeddings
-),
-scored AS (
-  -- zero-norm guard mirrors Spark's cosine_similarity (0.0 when either
-  -- norm is zero, functions/vectors.py:38); DuckDB's
-  -- list_cosine_similarity would divide by zero instead (ADVICE r11)
-  SELECT h.vec_id, t.vec_id AS train_id,
-         round(CASE WHEN list_dot_product(h.v, h.v) = 0
-                      OR list_dot_product(t.v, t.v) = 0 THEN 0.0
-               ELSE list_cosine_similarity(h.v, t.v) END, 4) AS cosine
-  FROM split h JOIN split t ON h.is_holdout AND NOT t.is_holdout
-)
-SELECT vec_id, train_id AS nearest_train_id, cosine AS max_cosine,
-       cosine >= {_CONTAM_THRESHOLD} AS contaminated
-FROM scored
-QUALIFY row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cosine DESC, train_id) = 1
-ORDER BY vec_id
-"""
-
-
-@_register("embedding_split_contamination", _CONTAM_SQL)
-def embedding_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space train/holdout contamination audit: for every
-    holdout vector (md5 split, ~20%), the nearest TRAINING vector by
-    cosine and a contamination flag at >= {thr} — the embedding-side
-    complement of the n-gram `cross_split_contamination` row (exact
-    string overlap misses paraphrases; cosine neighbors catch them).
-
-    Scale shape: the holdout side of an eval split is the SMALL side
-    by construction, so it broadcasts and the training corpus streams
-    once — per-partition partial argmax (max over a (cosine, -id)
-    struct), then one holdout-keyed reduction; no all-pairs shuffle
-    materializes.  At corpus scale, pre-filter the training stream
-    through the IVF/LSH cells of each holdout vector (the registered
-    ANN rows) and this query's reduction is unchanged.  Ordering uses
-    the ROUNDED cosine (4 dp, the cross-engine-stable precedent of
-    embedding_neardup_exact) with the train id as tiebreak, so the
-    argmax is deterministic."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        (
-            F.md5(F.col("vec_id").cast("string")) < _CONTAM_HOLDOUT_HEX
-        ).alias("is_holdout"),
-    )
-    holdout = emb.filter("is_holdout").select(
-        F.col("vec_id").alias("h_id"), F.col("v").alias("hv")
-    )
-    train = emb.filter(~F.col("is_holdout")).select(
-        F.col("vec_id").alias("train_id"), F.col("v").alias("tv")
-    )
-    from cid_etl_spark.functions.vectors import cosine_similarity
-
-    scored = train.join(F.broadcast(holdout)).select(
-        "h_id",
-        "train_id",
-        F.round(cosine_similarity("hv", "tv"), 4).alias("cosine"),
-    )
-    best = scored.groupBy("h_id").agg(
-        F.max(F.struct(F.col("cosine"), (-F.col("train_id")).alias("neg_id"))).alias(
-            "top"
-        )
-    )
-    return best.select(
-        F.col("h_id").alias("vec_id"),
-        (-F.col("top.neg_id")).cast("long").alias("nearest_train_id"),
-        F.col("top.cosine").alias("max_cosine"),
-        (F.col("top.cosine") >= _CONTAM_THRESHOLD).alias("contaminated"),
-    ).orderBy("vec_id")
-
-
-# ---------------------------------------------------------------------------
 # Retrieval quality evaluation: NDCG / precision / MRR over BM25@20
 # ---------------------------------------------------------------------------
 

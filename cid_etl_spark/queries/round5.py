@@ -1,6 +1,6 @@
 """Round-5 analytics widening: customer-value segmentation, fraud/
 forensics diagnostics (Benford, CUSUM, Gini), behavioral entropy,
-kNN label voting, rolling correlation, column profiling and bigram
+rolling correlation, column profiling and bigram
 PMI phrase mining — classic warehouse/ML-prep shapes the reference's
 users would reach for next, each under the hard DuckDB oracle."""
 
@@ -228,84 +228,6 @@ def session_entropy_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.log(F.col("n").cast("double")) - ssum / F.col("n"), 6
         ).alias("type_entropy"),
-    )
-
-
-_KNN_VOTE_SQL = """
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id % 97 = 0
-    ), c AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), nn AS (
-      SELECT query_id, vec_id, label,
-             round(list_cosine_similarity(v, qv), 4) AS cosine
-      FROM q JOIN c ON c.vec_id <> q.query_id
-      QUALIFY row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC
-      ) <= 7
-    )
-    SELECT query_id, label AS pred_label, votes, mean_cosine
-    FROM (
-      SELECT query_id, label,
-             CAST(count(*) AS BIGINT) AS votes,
-             round(avg(cosine), 4) AS mean_cosine,
-             row_number() OVER (
-               PARTITION BY query_id ORDER BY count(*) DESC, label ASC
-             ) AS rn
-      FROM nn GROUP BY query_id, label
-    ) WHERE rn = 1
-    """
-
-
-@_register("knn_label_vote_embeddings", _KNN_VOTE_SQL)
-def knn_label_vote_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN classification by majority vote — the standard label-
-    propagation / weak-labeling step in a training-data pipeline:
-    each query vector takes the modal label of its 7 nearest
-    neighbors (cosine, self excluded; vote ties break to the smaller
-    label, neighbor ties to the smaller id).  Built on the same
-    broadcast-queries brute-force scan as cosine_topk_bruteforce —
-    the corpus is scanned once, per-query top-k via window; at scale
-    the scan swaps to the IVF/PQ variants with the vote stage
-    unchanged."""
-    from cid_etl_spark.functions.vectors import cosine_similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-    )
-    nn = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            "label",
-            F.round(cosine_similarity("embedding", "qv"), 4)
-            .alias("cosine"),
-        )
-    )
-    topw = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    nn7 = nn.withColumn("__rn", F.row_number().over(topw)).filter(
-        F.col("__rn") <= 7
-    )
-    votes = nn7.groupBy("query_id", "label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("votes"),
-        F.round(F.avg("cosine"), 4).alias("mean_cosine"),
-    )
-    votew = Window.partitionBy("query_id").orderBy(
-        F.desc("votes"), F.asc("label")
-    )
-    return (
-        votes.withColumn("__rn", F.row_number().over(votew))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "query_id", F.col("label").alias("pred_label"), "votes",
-            "mean_cosine",
-        )
     )
 
 
@@ -2679,10 +2601,39 @@ def _batch_digest_member_sql(name: str, cols_expr: str) -> str:
     )
 
 
+def _batch_digest(df: DataFrame, double_fmt: str) -> tuple[int, int]:
+    """``(row count, digest)`` of a batch member, the Spark side of
+    :func:`_batch_digest_member_sql`: each row canonicalized as its
+    columns in sorted-name order joined by ``|``, doubles formatted
+    with *double_fmt*, everything else cast to string; the digest is
+    the SUM of the 48-bit md5 prefixes of those strings.  A NULL double
+    stays NULL (and concat_ws drops it): Spark's format_string would
+    render the literal 'null' where DuckDB's printf yields SQL NULL
+    (ADVICE r7 #2)."""
+    parts = []
+    for c in sorted(df.columns):
+        if df.schema[c].dataType.simpleString() == "double":
+            parts.append(
+                F.when(F.col(c).isNull(), F.lit(None)).otherwise(
+                    F.format_string(double_fmt, F.col(c))
+                )
+            )
+        else:
+            parts.append(F.col(c).cast("string"))
+    h = F.conv(
+        F.substring(F.md5(F.concat_ws("|", *parts)), 1, 12), 16, 10
+    ).cast("bigint")
+    r = df.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(h).cast("bigint").alias("d"),
+    ).collect()[0]
+    return (r["n"], r["d"])
+
+
 #: Per-member canonical row expression: columns in sorted-name order,
 #: doubles via printf at their already-rounded precision (identical
 #: formatting in both engines for pre-rounded values), everything else
-#: cast to string — mirrored exactly by the Spark digest action below.
+#: cast to string — mirrored exactly by :func:`_batch_digest`.
 _BATCH_MEMBER_CANON: dict[str, str] = {
     "bm25_search_documents": (
         "concat_ws('|', printf('%.4f', bm25), CAST(doc_id AS VARCHAR))"
@@ -2719,34 +2670,9 @@ def run_batch_fragments_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cid_etl_spark.plans.batch import run_batch
 
     members = list(_BATCH_MEMBER_CANON)
-
-    def digest(df: DataFrame) -> tuple[int, int]:
-        parts = []
-        for c in sorted(df.columns):
-            dt = df.schema[c].dataType.simpleString()
-            if dt == "double":
-                # NULL-safe: Spark's format_string renders a NULL
-                # double as the literal 'null' while DuckDB's printf
-                # yields SQL NULL (which concat_ws drops) — emit NULL
-                # here too so both engines canonicalize a NULL double
-                # identically (ADVICE r7 #2)
-                parts.append(
-                    F.when(F.col(c).isNull(), F.lit(None)).otherwise(
-                        F.format_string("%.4f", F.col(c))
-                    )
-                )
-            else:
-                parts.append(F.col(c).cast("string"))
-        h = F.conv(
-            F.substring(F.md5(F.concat_ws("|", *parts)), 1, 12), 16, 10
-        ).cast("bigint")
-        r = df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(h).cast("bigint").alias("d"),
-        ).collect()[0]
-        return (r["n"], r["d"])
-
-    res = run_batch(spark, sf_dir, members, action=digest)
+    res = run_batch(
+        spark, sf_dir, members, action=lambda df: _batch_digest(df, "%.4f")
+    )
     return spark.createDataFrame(
         [(m, int(res[m][0]), int(res[m][1])) for m in members],
         "member string, n_rows bigint, digest bigint",
@@ -2819,31 +2745,9 @@ def run_batch_stats_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cid_etl_spark.plans.batch import run_batch
 
     members = list(_STATS_BATCH_CANON)
-
-    def digest(df: DataFrame) -> tuple[int, int]:
-        parts = []
-        for c in sorted(df.columns):
-            dt = df.schema[c].dataType.simpleString()
-            if dt == "double":
-                # NULL-safe double canon, as in
-                # run_batch_fragments_verified (ADVICE r7 #2)
-                parts.append(
-                    F.when(F.col(c).isNull(), F.lit(None)).otherwise(
-                        F.format_string("%.6f", F.col(c))
-                    )
-                )
-            else:
-                parts.append(F.col(c).cast("string"))
-        h = F.conv(
-            F.substring(F.md5(F.concat_ws("|", *parts)), 1, 12), 16, 10
-        ).cast("bigint")
-        r = df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(h).cast("bigint").alias("d"),
-        ).collect()[0]
-        return (r["n"], r["d"])
-
-    res = run_batch(spark, sf_dir, members, action=digest)
+    res = run_batch(
+        spark, sf_dir, members, action=lambda df: _batch_digest(df, "%.6f")
+    )
     return spark.createDataFrame(
         [(m, int(res[m][0]), int(res[m][1])) for m in members],
         "member string, n_rows bigint, digest bigint",

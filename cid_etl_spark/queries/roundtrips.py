@@ -370,165 +370,6 @@ def cid_pipeline_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "cosine_topk_ivf_fullprobe",
-    """
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 5
-    ), c AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), s AS (
-      SELECT q.query_id, c.vec_id,
-             round(list_cosine_similarity(c.v, q.qv), 4) AS cosine
-      FROM q CROSS JOIN c
-    )
-    SELECT query_id, vec_id, cosine
-    FROM s
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC
-    ) <= 3
-    """,
-)
-def cosine_topk_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF machinery under a hard oracle: with ``nprobe == n_cells``
-    every cell is probed, so the k-means training, broadcast centroid
-    assignment, probe join, and top-k window must together reproduce
-    EXACT brute force — which a DuckDB cross join recomputes
-    independently.  This is the driver-checked twin of the unit test
-    pinning full-probe ≡ brute force; the pruned variant
-    (``cosine_topk_ivf``, nprobe=4) stays rows-only since its recall
-    is approximate by design."""
-    from cid_etl_spark.operators.similarity import cosine_topk_ivf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return cosine_topk_ivf(
-        emb, queries, k=3, n_cells=8, nprobe=8, round_digits=4
-    )
-
-
-_PQ_ADC_SQL = """
-    WITH scaled AS (
-      SELECT vec_id,
-             list_transform(embedding,
-                            x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5)
-                                      AS BIGINT)) AS iv
-      FROM embeddings
-    ), codebook AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, iv
-      FROM scaled WHERE vec_id % 33 = 0
-      ORDER BY vec_id LIMIT 4096
-    ), subspaces AS (
-      SELECT CAST(range AS BIGINT) AS m FROM range(8)
-    ), corpus_sub AS (
-      SELECT s.vec_id, ss.m, list_slice(s.iv, ss.m * 8 + 1, ss.m * 8 + 8) AS v
-      FROM scaled s CROSS JOIN subspaces ss
-    ), code_sub AS (
-      SELECT c.code, ss.m, list_slice(c.iv, ss.m * 8 + 1, ss.m * 8 + 8) AS v
-      FROM codebook c CROSS JOIN subspaces ss
-    ), assigned AS (
-      SELECT vec_id, m, code FROM (
-        SELECT cs.vec_id, cs.m, ks.code,
-               row_number() OVER (
-                 PARTITION BY cs.vec_id, cs.m
-                 ORDER BY list_sum(list_transform(range(1, 9),
-                           i -> (cs.v[i] - ks.v[i]) * (cs.v[i] - ks.v[i]))),
-                          ks.code) AS rn
-        FROM corpus_sub cs JOIN code_sub ks USING (m)
-      ) WHERE rn = 1
-    ), lut AS (
-      SELECT q.vec_id AS query_id, ks.m, ks.code,
-             list_sum(list_transform(range(1, 9), i -> q.v[i] * ks.v[i])) AS dot
-      FROM (SELECT * FROM corpus_sub WHERE vec_id % 97 = 0) q
-      JOIN code_sub ks USING (m)
-    ), scores AS (
-      SELECT l.query_id, a.vec_id, SUM(l.dot) AS iscore
-      FROM assigned a JOIN lut l ON l.m = a.m AND l.code = a.code
-      GROUP BY 1, 2
-    )
-    SELECT query_id, vec_id,
-           round(iscore / 1000000000000.0, 4) AS adc_dot
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY iscore DESC, vec_id) AS rn
-      FROM scores
-    )
-    WHERE rn <= 5
-    """
-
-
-@_register("pq_adc_topk", _PQ_ADC_SQL)
-def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC retrieval under a HARD oracle (ADVICE
-    r4 #3 — the PQ tier lands WITH a driver row, not as dead code).
-    ``lloyd_iters=0`` keeps the id-sampled codebook and every stage in
-    exact int64 fixed-point, so DuckDB independently replays the whole
-    compressed-search pipeline: fixed-point scaling → per-subspace
-    nearest-codeword encode (ties to the smaller code) → per-query LUT
-    → additive ADC score → top-5 (ties to the smaller id).  A hash
-    match certifies encode AND scoring bit-for-bit — the part of PQ
-    that survives at 100 TB, where the corpus scan touches only the
-    8-byte code rows (64-dim float → 8 codes: 32× less scan IO) and
-    LUTs ride in the task closure (operators/similarity.py:650,722,768;
-    production refines codebooks with lloyd_iters>0, same machinery)."""
-    from cid_etl_spark.operators.similarity import pq_adc_topk as pq_op
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 97 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    return pq_op(
-        emb, queries, k=5, n_subspaces=8, id_modulus=33, lloyd_iters=0
-    )
-
-
-@_register(
-    "cosine_topk_lsh_probeall",
-    """
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 5
-    ), c AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), s AS (
-      SELECT q.query_id, c.vec_id,
-             round(list_cosine_similarity(c.v, q.qv), 4) AS cosine
-      FROM q CROSS JOIN c
-    )
-    SELECT query_id, vec_id, cosine
-    FROM s
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id ASC
-    ) <= 3
-    """,
-)
-def cosine_topk_lsh_probeall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hyperplane-LSH machinery under a hard oracle: multiprobe ==
-    bits probes every bucket (all Hamming perturbations of the query
-    signature), so signing, bucket join, and top-k window together must
-    reproduce EXACT brute force, recomputed independently by a DuckDB
-    cross join.  The pruned variant (``cosine_topk_lsh``, multiprobe=0)
-    stays rows-only since its recall is approximate by design; this row
-    plus the recall unit tests bound it from both sides."""
-    from cid_etl_spark.operators.similarity import cosine_topk_lsh
-    from cid_etl_spark.plans.fragments import signed_embeddings
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    # corpus signing through the canonical fragment (r8): identical
-    # plan standalone, signed once when batched with the pruned twin
-    return cosine_topk_lsh(
-        emb, queries, dim=64, k=3, bits=4, multiprobe=4, round_digits=4,
-        signed_corpus=signed_embeddings(spark, sf_dir),
-    )
-
-
-@_register(
     "interval_overlap_shipments",
     """
     WITH ships AS (

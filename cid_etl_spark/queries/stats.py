@@ -736,59 +736,6 @@ def bloom_semi_join_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "semantic_dedup_exact_embeddings",
-    """
-    WITH dropped AS (
-        SELECT DISTINCT b.vec_id
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                           CAST(b.embedding AS DOUBLE[])), 4)
-              >= 0.45
-    )
-    SELECT label,
-           COUNT(*) AS n_kept,
-           CAST(MIN(vec_id) AS BIGINT) AS min_kept_id
-    FROM embeddings
-    WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-    GROUP BY label
-    """,
-)
-def semantic_dedup_exact_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic dedup, exact global rule (operators.similarity.
-    semantic_dedup_exact): a row is dropped iff any lower-id row has
-    cosine >= 0.45; survivors rolled up per label.  The pair list comes
-    from the Arrow blocked matmul; this O(N^2) variant is the
-    correctness baseline for the SemDeDup celled variant
-    (semantic_dedup_embeddings, rows-only)."""
-    from cid_etl_spark.operators.similarity import semantic_dedup_exact
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    kept = semantic_dedup_exact(emb, threshold=0.45)
-    return kept.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.min("vec_id").cast("bigint").alias("min_kept_id"),
-    )
-
-
-@_register("semantic_dedup_embeddings")
-def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup celled variant: IVF k-means clusters bound the O(N^2)
-    pairwise pass to within-cell matmuls (sum of cell^2 << N^2); drops
-    are a subset of the exact rule's (tests pin that).  No SQL oracle —
-    the k-means quantizer isn't expressible in DuckDB; the driver
-    records a rows-only check and tests/test_similarity.py carries the
-    semantics."""
-    from cid_etl_spark.operators.similarity import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    kept = semantic_dedup(emb, threshold=0.45, n_cells=8)
-    return kept.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.min("vec_id").cast("bigint").alias("min_kept_id"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # O. Span dedup / sequence packing / time-series resample / UDTF / sketches
 # ---------------------------------------------------------------------------
@@ -1309,47 +1256,6 @@ def unpivot_order_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         variableColumnName="metric",
         valueColumnName="value",
     )
-
-
-@_register(
-    "embedding_outliers_by_label",
-    r"""
-    WITH flat AS (
-      SELECT label, vec_id, CAST(u.i AS INT) AS i, embedding[u.i] AS x
-      FROM embeddings, unnest(range(1, len(embedding)+1)) AS u(i)
-    ),
-    cent AS (
-      SELECT label, i, avg(x) AS c FROM flat GROUP BY label, i
-    ),
-    dist AS (
-      SELECT f.label, f.vec_id, round(sqrt(sum((f.x - c.c)^2)), 4) AS rd,
-             sqrt(sum((f.x - c.c)^2)) AS d
-      FROM flat f JOIN cent c ON f.label = c.label AND f.i = c.i
-      GROUP BY f.label, f.vec_id
-    ),
-    mx AS (
-      SELECT label, max(rd) AS max_rd FROM dist GROUP BY label
-    )
-    SELECT d.label,
-           CAST(count(*) AS BIGINT) AS n,
-           round(avg(d.d), 4) AS avg_dist,
-           any_value(mx.max_rd) AS max_dist,
-           CAST(min(d.vec_id) FILTER (WHERE d.rd = mx.max_rd) AS BIGINT)
-             AS top_outlier
-    FROM dist d JOIN mx USING (label)
-    GROUP BY d.label
-    """,
-)
-def embedding_outliers_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid outlier report via grouped-map
-    ``applyInPandas`` (operators.similarity.label_centroid_outliers):
-    one Arrow batch per label, vectorized centroid + distances, one
-    summary row out.  The oracle walks the same math element-wise with
-    the unnest-by-position idiom."""
-    from cid_etl_spark.operators.similarity import label_centroid_outliers
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return label_centroid_outliers(emb, "embedding", "label", "vec_id")
 
 
 @_register(

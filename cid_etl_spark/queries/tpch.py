@@ -982,71 +982,6 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_register(
-    "embedding_quantize_int8",
-    """
-    WITH scaled AS (
-        SELECT vec_id,
-               list_max(list_transform(embedding,
-                   x -> abs(CAST(x AS DOUBLE)))) AS scale,
-               embedding
-        FROM embeddings
-    ), q AS (
-        SELECT vec_id, scale,
-               list_transform(embedding,
-                   x -> CAST(round(CAST(x AS DOUBLE) / scale * 127) AS BIGINT))
-                 AS qv,
-               embedding
-        FROM scaled WHERE scale > 0
-    )
-    SELECT vec_id,
-           round(scale, 6) AS scale,
-           CAST(list_aggregate(qv, 'sum') AS BIGINT) AS q_sum,
-           round(list_max(list_transform(
-               list_zip(qv, embedding),
-               p -> abs(CAST(p[1] AS DOUBLE) * scale / 127
-                        - CAST(p[2] AS DOUBLE)))), 6) AS max_abs_err
-    FROM q
-    """,
-)
-def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization of the embedding column (per-vector
-    absmax scale, the storage layout ANN serving uses at scale: 4x
-    smaller vectors, SIMD-friendly dot products) plus its own audit —
-    the max reconstruction error per vector, bounded by scale/254.
-    Entirely lambda expressions over the array; the checksum and error
-    fold to scalars so the oracle compares no float arrays."""
-    d = load_table(spark, sf_dir, "embeddings")
-    dbl = lambda x: x.cast("double")  # noqa: E731
-    scale = F.array_max(F.transform("embedding", lambda x: F.abs(dbl(x))))
-    scaled = d.select("vec_id", scale.alias("scale"), "embedding").filter(
-        F.col("scale") > 0
-    )
-    qv = F.transform(
-        "embedding", lambda x: F.round(dbl(x) / F.col("scale") * 127).cast("bigint")
-    )
-    q = scaled.select("vec_id", "scale", qv.alias("qv"), "embedding")
-    err = F.array_max(
-        F.zip_with(
-            "qv",
-            "embedding",
-            lambda a, b: F.abs(dbl(a) * F.col("scale") / 127 - dbl(b)),
-        )
-    )
-    # NOTE: compute err BEFORE aliasing the rounded scale — a rounded
-    # alias named "scale" in the same select would shadow the raw column
-    # via lateral column alias resolution and skew the error term.
-    q = q.withColumn("__err", err)
-    return q.select(
-        "vec_id",
-        F.round("scale", 6).alias("scale"),
-        F.aggregate("qv", F.lit(0).cast("bigint"), lambda acc, x: acc + x).alias(
-            "q_sum"
-        ),
-        F.round("__err", 6).alias("max_abs_err"),
-    )
-
-
-@_register(
     "null_safe_join_counts",
     """
     WITH a AS (

@@ -1,5 +1,6 @@
-"""Training-pipeline widening: composed near-dup curation, hard
-negatives, data lake maintenance (X)."""
+"""Training-pipeline widening: composed near-dup curation, data lake
+maintenance (X); the hard-negative and k-means rows live in
+:mod:`.embeddings`."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cid_etl_spark.functions.vectors import cosine_similarity
 from cid_etl_spark.operators.aggregates import (
     bucketed_cumsum,
     bucketed_row_number,
@@ -95,64 +95,6 @@ def neardup_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs_kept"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
-    )
-
-
-@_register(
-    "hard_negative_mining",
-    """
-    WITH q AS (
-      SELECT vec_id AS anchor_id, label AS anchor_label,
-             CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 8
-    ), c AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), s AS (
-      SELECT q.anchor_id, c.vec_id AS negative_id, c.label AS negative_label,
-             round(list_cosine_similarity(c.v, q.qv), 4) AS cosine
-      FROM q CROSS JOIN c
-      WHERE c.label <> q.anchor_label
-    )
-    SELECT anchor_id, negative_id, negative_label, cosine
-    FROM s
-    QUALIFY row_number() OVER (
-        PARTITION BY anchor_id ORDER BY cosine DESC, negative_id ASC
-    ) <= 5
-    """,
-)
-def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive-training hard negatives: for each anchor vector, the
-    top-5 most-similar vectors with a DIFFERENT label — the mining step
-    behind embedding-model training batches.  Anchors broadcast over
-    one corpus scan (same plan family as cosine_topk_bruteforce); the
-    label inequality rides the join condition, so negatives filter
-    before the similarity evaluates; per-anchor top-k is a heap window
-    on the ROUNDED cosine with a unique id tiebreak.  At 100 TB the
-    anchor set is the small side by construction (a training batch),
-    so the corpus never shuffles."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("label").alias("anchor_label"),
-        F.col("embedding").alias("qv"),
-    )
-    joined = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("label") != F.col("anchor_label"))
-        .select(
-            "anchor_id",
-            F.col("vec_id").alias("negative_id"),
-            F.col("label").alias("negative_label"),
-            F.round(cosine_similarity("embedding", "qv"), 4).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cosine"), F.asc("negative_id"))
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= 5)
-        .drop("__rn")
     )
 
 
@@ -488,95 +430,6 @@ def parse_url_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.parse_url(url, F.lit("HOST")).alias("host"),
         F.parse_url(url, F.lit("PATH")).alias("path"),
         F.parse_url(url, F.lit("QUERY"), F.lit("lang")).alias("lang_param"),
-    )
-
-
-@_register(
-    "kmeans_cluster_assign",
-    """
-    WITH v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), c0 AS (
-        SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-        FROM embeddings WHERE vec_id < 8
-    ), a1 AS (
-        SELECT v.vec_id, c0.cid,
-               round(list_cosine_similarity(v.v, c0.cv), 6) AS cos6
-        FROM v CROSS JOIN c0
-        QUALIFY row_number() OVER (
-            PARTITION BY v.vec_id ORDER BY cos6 DESC, c0.cid ASC
-        ) = 1
-    ), dims AS (
-        SELECT unnest(range(1, 65)) AS i
-    ), m1 AS (
-        SELECT a1.cid, dims.i, round(avg(v.v[dims.i]), 6) AS cd
-        FROM a1 JOIN v USING (vec_id) CROSS JOIN dims
-        GROUP BY a1.cid, dims.i
-    ), c1 AS (
-        SELECT cid, list(cd ORDER BY i) AS cv FROM m1 GROUP BY cid
-    ), a2 AS (
-        SELECT v.vec_id, c1.cid,
-               round(list_cosine_similarity(v.v, c1.cv), 6) AS cos6
-        FROM v CROSS JOIN c1
-        QUALIFY row_number() OVER (
-            PARTITION BY v.vec_id ORDER BY cos6 DESC, c1.cid ASC
-        ) = 1
-    )
-    SELECT vec_id, cid AS cluster_id, round(cos6, 4) AS cosine
-    FROM a2
-    """,
-)
-def kmeans_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document/topic clustering via deterministic Lloyd k-means (two
-    assignment passes, k=8, seeds = first eight vectors): the
-    corpus-bucketing step behind topic-balanced mixtures, SemDeDup
-    cells and curriculum ordering.  Fully replayable: seeds are fixed
-    rows (not RNG), assignment maximizes the cosine ROUNDED to 6dp with
-    a centroid-id tiebreak, and the updated centroids round each
-    coordinate to 6dp before pass two — every float boundary crossing
-    engines is pinned.
-
-    Scale shape: centroids BROADCAST both passes (k x dim is tiny), so
-    the corpus never shuffles for assignment; the centroid update is
-    one (cluster, dim)-keyed partial aggregation — 8 x 64 groups — via
-    posexplode, the same map-side-combine shape at any corpus size.
-    The IVF index (operators.similarity.cosine_topk_ivf) wires the
-    same loop with sampled training; this row pins the math under a
-    hard oracle."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    c0 = v.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-
-    def assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-        j = vecs.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "cid",
-            F.round(cosine_similarity("v", "cv"), 6).alias("cos6"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.desc("cos6"), F.asc("cid"))
-        return (
-            j.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-
-    a1 = assign(v, c0).select("vec_id", "cid")
-    m1 = (
-        a1.join(v, "vec_id")
-        .select("cid", F.posexplode("v").alias("i0", "x"))
-        .groupBy("cid", "i0")
-        .agg(F.round(F.avg("x"), 6).alias("cd"))
-    )
-    c1 = (
-        m1.groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("i0", "cd"))).alias("pairs"))
-        .select("cid", F.transform("pairs", lambda p: p.cd).alias("cv"))
-    )
-    a2 = assign(v, c1)
-    return a2.select(
-        "vec_id", F.col("cid").alias("cluster_id"), F.round("cos6", 4).alias("cosine")
     )
 
 

@@ -110,6 +110,9 @@ def test_one_checkpoint_job_per_round_and_no_other_action(spark, monkeypatch):
 
 
 def test_star_cc_matches_propagation_on_random_graphs(spark):
+    """The star loop returns exactly the propagation loop's output,
+    including self-loop-only nodes, nodes whose only edges have a NULL
+    end, and the (NULL, NULL) row."""
     import random
 
     from cid_etl_spark.operators.graph import (
@@ -117,22 +120,23 @@ def test_star_cc_matches_propagation_on_random_graphs(spark):
         connected_components_star,
     )
 
-    rng = random.Random(7)
-    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    a = {
-        (r.node, r.cluster_id)
-        for r in connected_components(df).collect()
-    }
-    b = {
-        (r.node, r.cluster_id)
-        for r in connected_components_star(df).collect()
-    }
-    # propagation returns self-loops' nodes too when a==b edges exist;
-    # star filters self-edges first — compare on the common node set
-    nodes_b = {n for n, _ in b}
-    a = {(n, c) for n, c in a if n in nodes_b}
-    assert a == b
+    graphs = [[(1, 2), (2, None), (None, 3), (3, 4), (None, None), (5, 5), (6, None)]]
+    for seed in (7, 8, 9):
+        rng = random.Random(seed)
+        edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(80)]
+        edges += [(v, u) for u, v in rng.sample(edges, 10)]  # reversed
+        edges += rng.sample(edges, 10)  # duplicated
+        edges += [(n, n) for n in rng.sample(range(60, 70), 4)]  # self-loops
+        graphs.append(edges)
+    for edges in graphs:
+        df = spark.createDataFrame(edges, "src long, dst long")
+        want = sorted(
+            (tuple(r) for r in connected_components(df).collect()), key=repr
+        )
+        got = sorted(
+            (tuple(r) for r in connected_components_star(df).collect()), key=repr
+        )
+        assert got == want, edges
 
 
 def test_star_cc_contracts_long_chain_in_logarithmic_rounds(spark):

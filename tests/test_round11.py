@@ -253,7 +253,7 @@ def test_embedding_contamination_bruteforce(spark, duck):
     id tiebreak), and split sides must not overlap."""
     import numpy as np
 
-    from cid_etl_spark.queries.round11 import (
+    from cid_etl_spark.queries.embeddings import (
         _CONTAM_HOLDOUT_HEX,
         embedding_split_contamination,
     )

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from cid_etl_spark.functions.vectors import cosine_similarity, dot
 from cid_etl_spark.operators.similarity import (
+    SEED,
     _hyperplane,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
@@ -82,8 +83,8 @@ def test_vector_sql_has_column_api_semantics(spark):
             _column_api_cosine(F.col("l.__vec"), F.col("l.q")),
         ),
         (
-            random_hyperplane_signature("l.__vec", dim=4, bits=5, seed=7),
-            _column_api_signature(F.col("l.__vec"), dim=4, bits=5, seed=7),
+            random_hyperplane_signature("l.__vec", dim=4, bits=5),
+            _column_api_signature(F.col("l.__vec"), dim=4, bits=5, seed=SEED),
         ),
     ]
     for new, old in pairs:
@@ -97,7 +98,7 @@ def test_jl_projection_matches_column_api_rows(spark):
     the Column-API construction (weight array + zip_with + aggregate)."""
     import hashlib
 
-    from cid_etl_spark.queries.curation import jl_projection_embeddings
+    from cid_etl_spark.queries.embeddings import jl_projection_embeddings
 
     def w(i, j):
         return (int(hashlib.md5(f"{i}_{j}".encode()).hexdigest()[:7], 16) % 2001 - 1000) / 1000.0
@@ -258,11 +259,12 @@ def test_semantic_dedup_celled_drops_are_justified(spark):
     assert dropped <= justified
 
 
-def test_exact_pairs_distributed_equals_blocked(spark):
+def test_exact_pairs_distributed_equals_blocked(spark, monkeypatch):
     """The no-collect block-pair form must reproduce the broadcast
     baseline bit-for-bit (ids and rounded cosines), including rows
     hashing into the same block (diagonal groups) and zero-norm
     vectors."""
+    from cid_etl_spark.operators import similarity
     from cid_etl_spark.operators.similarity import (
         exact_cosine_pairs_blocked,
         exact_cosine_pairs_distributed,
@@ -274,27 +276,28 @@ def test_exact_pairs_distributed_equals_blocked(spark):
         for r in exact_cosine_pairs_blocked(emb, threshold=0.3).collect()
     }
     for n_blocks in (1, 3, 8):
+        monkeypatch.setattr(similarity, "N_BLOCKS", n_blocks)
         got = {
             (r["id_a"], r["id_b"]): r["cosine"]
-            for r in exact_cosine_pairs_distributed(
-                emb, threshold=0.3, n_blocks=n_blocks
-            ).collect()
+            for r in exact_cosine_pairs_distributed(emb, threshold=0.3).collect()
         }
         assert got == ref, f"n_blocks={n_blocks}: {len(got)} vs {len(ref)} pairs"
 
 
-def test_exact_pairs_distributed_zero_norm(spark):
+def test_exact_pairs_distributed_zero_norm(spark, monkeypatch):
     rows = [
         (1, [0.0, 0.0]),  # zero norm: cosine defined as 0 vs anything
         (2, [1.0, 0.0]),
         (3, [1.0, 0.0]),
     ]
+    from cid_etl_spark.operators import similarity
     from cid_etl_spark.operators.similarity import exact_cosine_pairs_distributed
 
+    monkeypatch.setattr(similarity, "N_BLOCKS", 2)
     df = _vecs(spark, rows)
     pairs = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in exact_cosine_pairs_distributed(df, threshold=0.5, n_blocks=2).collect()
+        for r in exact_cosine_pairs_distributed(df, threshold=0.5).collect()
     }
     assert pairs == {(2, 3): 1.0}
 
@@ -412,18 +415,20 @@ def test_pq_lloyd_refinement_reduces_quantization_error(spark):
     assert qerr(b3, sd) <= qerr(b0, sd)
 
 
-def test_exact_pairs_distributed_builds_without_type_hint_warning(spark):
+def test_exact_pairs_distributed_builds_without_type_hint_warning(spark, monkeypatch):
     """The grouped-map function carries no partial type hints, so
     ``applyInPandas`` takes its grouped-map eval type without trying
     (and failing) to infer one from annotations — no UserWarning."""
     import warnings
 
+    from cid_etl_spark.operators import similarity
     from cid_etl_spark.operators.similarity import exact_cosine_pairs_distributed
 
+    monkeypatch.setattr(similarity, "N_BLOCKS", 2)
     df = _vecs(spark, [(1, [1.0, 0.0]), (2, [1.0, 0.0])])
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        pairs = exact_cosine_pairs_distributed(df, threshold=0.5, n_blocks=2)
+        pairs = exact_cosine_pairs_distributed(df, threshold=0.5)
     noisy = [
         str(w.message) for w in caught
         if issubclass(w.category, UserWarning) and "type hints" in str(w.message)
