@@ -68,12 +68,23 @@ def _verified_rounds(root: Path = _CORRECTNESS_DIR) -> list[frozenset[str]]:
 #: Rows to put at the very front of the next driver window (changed
 #: plans, suspect rows).  Without an entry here the window is the
 #: never-verified rows, then the stalest green rows.  Current entries:
-#: the oracled rows of the embedding family (moved into
-#: queries/embeddings.py, twins sharing one cosine, top-k through
-#: operators.dedup.priority_dedup), the two run_batch rows (one digest
-#: helper) and the star connected-components row (unlabeled endpoints
-#: kept).
+#: the five stream rows (FileSystem-based checkpoint manager, sinks
+#: read with the stream's schema), the rows whose constant table became
+#: an inline VALUES list, the oracled rows of the embedding family
+#: (moved into queries/embeddings.py, twins sharing one cosine, top-k
+#: through operators.dedup.priority_dedup; the k-means cosine now
+#: rounds through DECIMAL), the two run_batch rows (one digest helper,
+#: VALUES output) and the star connected-components row (unlabeled
+#: endpoints kept).
 _DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
+    "stream_hourly_events",
+    "stream_sessionized_users",
+    "stream_click_attribution",
+    "stream_user_totals_stateful",
+    "stream_dedup_admission",
+    "range_join_acctbal_bands",
+    "corpus_mixture_sample",
+    "conformal_threshold_classifier",
     "cosine_topk_bruteforce",
     "cosine_topk_lsh_probeall",
     "cosine_topk_ivf_fullprobe",

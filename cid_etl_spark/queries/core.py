@@ -23,6 +23,7 @@ from cid_etl_spark.operators.dedup import (
     simhash_dedup_pairs,
 )
 from cid_etl_spark.sources.parquet import load_table
+from cid_etl_spark.sources.values import values_table
 
 
 from cid_etl_spark.queries._registry import _register
@@ -327,7 +328,8 @@ def range_join_acctbal_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     (BroadcastNestedLoopJoin over a 4-row interval table) — replaces
     the reference's O(N·M) driver loops (etl_cid10.py:296-325)."""
     c = load_table(spark, sf_dir, "customer").select("c_acctbal")
-    bands = spark.createDataFrame(
+    bands = values_table(
+        spark,
         [
             ("negative", -1000000.0, 0.0),
             ("low", 0.0, 1000.0),

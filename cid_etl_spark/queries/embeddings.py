@@ -500,7 +500,8 @@ def knn_label_vote_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             PARTITION BY v.vec_id ORDER BY cos6 DESC, c1.cid ASC
         ) = 1
     )
-    SELECT vec_id, cid AS cluster_id, round(cos6, 4) AS cosine
+    SELECT vec_id, cid AS cluster_id,
+           CAST(round(CAST(cos6 AS DECIMAL(10,6)), 4) AS DOUBLE) AS cosine
     FROM a2
     """,
 )
@@ -512,7 +513,10 @@ def kmeans_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (not RNG), assignment maximizes the cosine ROUNDED to 6dp with
     a centroid-id tiebreak, and the updated centroids round each
     coordinate to 6dp before pass two — every float boundary crossing
-    engines is pinned.
+    engines is pinned.  The reported 4-dp cosine rounds the 6-dp one as
+    DECIMAL(10,6) in both engines: on the double, a ``…5`` tie at the
+    fifth decimal is broken half-up on Spark's decimal form but on the
+    binary value by DuckDB (0.1428 vs 0.1427 at sf0.1).
 
     Scale shape: centroids BROADCAST both passes (k x dim is tiny), so
     the corpus never shuffles for assignment; the centroid update is
@@ -549,7 +553,9 @@ def kmeans_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a2 = assign(v, c1)
     return a2.select(
-        "vec_id", F.col("cid").alias("cluster_id"), F.round("cos6", 4).alias("cosine")
+        "vec_id",
+        F.col("cid").alias("cluster_id"),
+        F.round(F.col("cos6").cast("decimal(10,6)"), 4).cast("double").alias("cosine"),
     )
 
 

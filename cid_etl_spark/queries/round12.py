@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from cid_etl_spark.queries._registry import _register
 from cid_etl_spark.sources.parquet import load_table
+from cid_etl_spark.sources.values import values_table
 
 # ---------------------------------------------------------------------------
 # §2.9 completion: grouped-agg pandas UDF (VERDICT r11 #5)
@@ -939,9 +940,7 @@ def conformal_threshold_classifier(spark: SparkSession, sf_dir: str) -> DataFram
             .alias("cum_n"),
         )
     )
-    alphas = spark.createDataFrame(
-        [(a,) for a in _CONF_ALPHAS], "alpha double"
-    )
+    alphas = values_table(spark, [(a,) for a in _CONF_ALPHAS], "alpha double")
     ks = alphas.crossJoin(F.broadcast(n_calib)).select(
         "alpha",
         F.ceil((F.col("n") + 1) * (1 - F.col("alpha"))).cast("bigint").alias("k"),

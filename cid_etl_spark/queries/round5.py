@@ -18,6 +18,7 @@ from cid_etl_spark.operators.aggregates import (
     materialize_once,
 )
 from cid_etl_spark.sources.parquet import load_table
+from cid_etl_spark.sources.values import values_table
 
 from cid_etl_spark.queries._registry import _register
 
@@ -2673,7 +2674,8 @@ def run_batch_fragments_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = run_batch(
         spark, sf_dir, members, action=lambda df: _batch_digest(df, "%.4f")
     )
-    return spark.createDataFrame(
+    return values_table(
+        spark,
         [(m, int(res[m][0]), int(res[m][1])) for m in members],
         "member string, n_rows bigint, digest bigint",
     )
@@ -2748,7 +2750,8 @@ def run_batch_stats_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = run_batch(
         spark, sf_dir, members, action=lambda df: _batch_digest(df, "%.6f")
     )
-    return spark.createDataFrame(
+    return values_table(
+        spark,
         [(m, int(res[m][0]), int(res[m][1])) for m in members],
         "member string, n_rows bigint, digest bigint",
     )

@@ -10,6 +10,7 @@ from pyspark.sql.window import Window
 from cid_etl_spark.functions.text import token_count, tokens
 from cid_etl_spark.operators.aggregates import count_if, decimal_sum, money
 from cid_etl_spark.sources.parquet import load_table
+from cid_etl_spark.sources.values import values_table
 
 
 from cid_etl_spark.queries._registry import _register
@@ -386,8 +387,8 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole pass is map-side (one shuffle only for the final per-source
     count)."""
     d = load_table(spark, sf_dir, "documents")
-    weights = spark.createDataFrame(
-        sorted(_MIXTURE_THRESHOLDS.items()), "source string, thr string"
+    weights = values_table(
+        spark, sorted(_MIXTURE_THRESHOLDS.items()), "source string, thr string"
     )
     sampled = d.join(F.broadcast(weights), "source").filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < F.col("thr")

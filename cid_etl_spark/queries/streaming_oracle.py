@@ -3,8 +3,12 @@ Streaming hard-oracle rows (SURVEY 2.10)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from cid_etl_spark.sources.parquet import load_table
@@ -171,37 +175,86 @@ def zipf_fit_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-class _bounded_state_partitions:
-    """Bound the streaming state-store fan-out for the verify streams.
+#: Spark's rename-based checkpoint manager on ``FileSystem.rename``.
+#: On a local filesystem that is one ``rename(2)``; Spark's default
+#: (``FileContext``) manager first asks for the link status of the
+#: file it renames, which Hadoop without ``libhadoop`` answers by
+#: forking ``readlink``.
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
-    A stateful streaming query freezes its number of state-store
-    partitions from ``spark.sql.shuffle.partitions`` at checkpoint
-    creation.  Under a vanilla session (default 200) every stateful
-    operator here gets 200 state stores for a fixture with ~150 keys —
-    measured 36.6 s vs ~5 s for ``stream_user_totals_stateful`` when the
-    driver runs it outside our tuned session.  The ``stream_*`` rows
-    create a FRESH checkpoint per call, so pinning a small fan-out is
-    safe and self-contained; production sizes its own fan-out (keys /
-    executor memory) when it creates its long-lived checkpoint.
-    Restores the caller's setting on exit either way.  Default n=4 by
-    measurement (round 5, three stateful rows at sf0.1): 12.8 s at
-    n=8, 10.9 s at n=4, 14.8 s at n=2 — fewer state stores win until
-    the Arrow worker concurrency of applyInPandasWithState is starved."""
 
-    _KEY = "spark.sql.shuffle.partitions"
+@contextmanager
+def _stream_run_conf(spark: SparkSession, checkpoint: str, n: int = 4):
+    """Session settings for one verify stream run over a FRESH
+    *checkpoint* (and a fresh sink beside it), restored on exit —
+    the caller's value, or unset if the caller had none — also when
+    the stream raises.
 
-    def __init__(self, spark: SparkSession, n: int = 4):
-        self._spark = spark
-        self._n = n
-        self._before: str | None = None
+    - ``spark.sql.shuffle.partitions`` = *n*: a stateful streaming
+      query freezes its number of state-store partitions from it at
+      checkpoint creation.  Under a vanilla session (default 200) every
+      stateful operator here gets 200 state stores for a fixture with
+      ~150 keys — measured 36.6 s vs ~5 s for
+      ``stream_user_totals_stateful``.  Default n=4 by measurement
+      (round 5, three stateful rows at sf0.1): 12.8 s at n=8, 10.9 s at
+      n=4, 14.8 s at n=2 — fewer state stores win until the Arrow
+      worker concurrency of applyInPandasWithState is starved.
+    - ``spark.sql.streaming.checkpointFileManagerClass`` = Spark's
+      ``FileSystemBasedCheckpointFileManager`` when the checkpoint's
+      scheme is ``file``.  Every offset, commit, state delta, schema
+      file and file-sink log entry is written to a temp file and
+      renamed; the default ``FileContext`` manager forks ``readlink``
+      per rename where Hadoop has no native library (312 forks per
+      ``stream_dedup_admission`` run at sf0.01).
+      A local ``rename(2)`` is atomic, and the run is the checkpoint's
+      only writer, so the FileSystem manager keeps exactly-once.  Other
+      schemes keep Spark's default manager.
 
-    def __enter__(self) -> None:
-        self._before = self._spark.conf.get(self._KEY)
-        self._spark.conf.set(self._KEY, str(self._n))
+    Production sizes its own fan-out (keys / executor memory) and keeps
+    Spark's manager for its long-lived checkpoints (the package helpers
+    ``stream_upsert_to_parquet`` / ``stream_dedup_ingest`` do not use
+    this context)."""
+    jvm = spark._jvm
+    # the checkpoint's own scheme, else the default filesystem's; the
+    # path is only parsed, no filesystem is created for it
+    scheme = jvm.org.apache.hadoop.fs.Path(checkpoint).toUri().getScheme()
+    scheme = scheme or jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+        spark._jsc.hadoopConfiguration()
+    ).getScheme()
+    pins = {"spark.sql.shuffle.partitions": str(n)}
+    if scheme == "file":
+        pins["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
+    before = {k: spark.conf.get(k, None) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
-    def __exit__(self, *exc) -> None:
-        if self._before is not None:
-            self._spark.conf.set(self._KEY, self._before)
+
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, ckpt: str, sink: str, schema: StructType
+) -> DataFrame:
+    """Run *writer* over every staged file (``availableNow``) from the
+    checkpoint *ckpt* under :func:`_stream_run_conf`, then read
+    the parquet *sink* with the *schema* the stream wrote — no footer
+    inference job."""
+    with _stream_run_conf(spark, ckpt):
+        (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.read.schema(schema).parquet(sink)
 
 
 #: (applicationId, sf_dir, n_files, variant) -> staged source dir.
@@ -284,16 +337,8 @@ def stream_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     def snapshot(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(sink)
 
-    with _bounded_state_partitions(spark):
-        (
-            agg.writeStream.foreachBatch(snapshot)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.read.parquet(sink)
+    writer = agg.writeStream.foreachBatch(snapshot).outputMode("complete")
+    return _drain(spark, writer, ckpt, sink, agg.schema)
 
 
 _STREAM_SESSION_SQL = """
@@ -350,16 +395,8 @@ def stream_sessionized_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     def snapshot(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(sink)
 
-    with _bounded_state_partitions(spark):
-        (
-            sess.writeStream.foreachBatch(snapshot)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.read.parquet(sink)
+    writer = sess.writeStream.foreachBatch(snapshot).outputMode("complete")
+    return _drain(spark, writer, ckpt, sink, sess.schema)
 
 
 _STREAM_CLICK_ATTR_SQL = """
@@ -399,17 +436,8 @@ def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = purchases_with_recent_click(
         stream, horizon="1 hour", watermark="90 days"
     )
-    with _bounded_state_partitions(spark):
-        (
-            joined.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.read.parquet(sink).select(
+    writer = joined.writeStream.format("parquet").option("path", sink)
+    return _drain(spark, writer.outputMode("append"), ckpt, sink, joined.schema).select(
         "user_id", "purchase_ts", "click_ts", "value"
     )
 
@@ -457,16 +485,8 @@ def stream_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink)
 
-    with _bounded_state_partitions(spark):
-        (
-            totals.writeStream.foreachBatch(append_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    emitted = spark.read.parquet(sink)
+    writer = totals.writeStream.foreachBatch(append_batch).outputMode("update")
+    emitted = _drain(spark, writer, ckpt, sink, totals.schema)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         emitted.withColumn("__rn", F.row_number().over(w))
@@ -507,14 +527,7 @@ def stream_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging, sink, ckpt = _stage_event_stream(spark, sf_dir, variant="dup")
     stream = read_event_stream(spark, staging, max_files_per_trigger=1)
     admitted = stream_dedup_events(stream, watermark="90 days")
-    with _bounded_state_partitions(spark):
-        (
-            admitted.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.read.parquet(sink).select("event_id", "user_id", "event_type")
+    writer = admitted.writeStream.format("parquet").option("path", sink)
+    return _drain(spark, writer.outputMode("append"), ckpt, sink, admitted.schema).select(
+        "event_id", "user_id", "event_type"
+    )

@@ -1,5 +1,5 @@
-"""Tests for CSV ingestion robustness (S1-S4) and the quoted single-file
-sink (S6)."""
+"""Tests for CSV ingestion robustness (S1-S4), the quoted single-file
+sink (S6) and the inline constant-table source."""
 
 from __future__ import annotations
 
@@ -14,6 +14,9 @@ from cid_etl_spark.sources.csv import (
     read_csv_robust,
 )
 from cid_etl_spark.sources.sinks import write_csv_single
+from cid_etl_spark.sources.values import values_table
+
+from .conftest import SF_SMOKE
 
 
 def _write(path, text, encoding="utf-8"):
@@ -75,3 +78,23 @@ def test_write_csv_single_bom_and_quoting(spark, tmp_path):
     assert rows[1] == ["A00", "Cólera"]
     # quoteAll: every field quoted in the raw bytes
     assert '"A00";"Cólera"' in body
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_values_table_is_a_local_scan(spark):
+    """A tiny constant table runs as a LocalTableScan in the JVM — no
+    pickled RDD, so no Python worker — typed by its DDL, with quotes
+    and backslashes kept; the range-join bands table is built so."""
+    from cid_etl_spark.queries import range_join_acctbal_bands
+
+    rows = [("it's", -1000000.0, 2**40), ("a\\b", float("inf"), -3)]
+    df = values_table(spark, rows, "name string, x double, n bigint")
+    assert df.dtypes == [("name", "string"), ("x", "double"), ("n", "bigint")]
+    assert [tuple(r) for r in df.collect()] == rows
+    assert _executed_plan(df).lstrip().startswith("LocalTableScan")
+
+    plan = _executed_plan(range_join_acctbal_bands(spark, SF_SMOKE))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan

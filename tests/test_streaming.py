@@ -279,20 +279,110 @@ def test_stream_dedup_ingest_admits_only_new_content(spark, tmp_path):
     assert after.count() == n1 + new_texts
 
 
-def test_bounded_state_partitions_restores_on_exception(spark):
-    """VERDICT r4 #6: the shuffle-partition pin around the stream runs
-    must restore the caller's setting even when the stream body raises
-    — otherwise one failed stream row would silently degrade every
-    later query in the session to 8 partitions."""
-    from cid_etl_spark.queries import _bounded_state_partitions
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+
+def _checkpoint_manager(spark, path):
+    """Simple class name of the manager Spark's streaming engine builds
+    for *path* under the session's current conf."""
+    jvm = spark._jvm
+    package = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    factory = getattr(getattr(package, "CheckpointFileManager$"), "MODULE$")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return factory.create(jvm.org.apache.hadoop.fs.Path(path), hadoop_conf).getClass().getSimpleName()
+
+
+def test_stream_run_conf_restores_on_exit_and_exception(spark, tmp_path):
+    """The stream-run context pins the state-store fan-out and, for a
+    ``file:`` checkpoint only, Spark's FileSystem-based checkpoint
+    manager; on exit — normal or by exception — every key is back to
+    the caller's value, or unset if the caller had none.  Otherwise one
+    failed stream row would silently change every later query in the
+    session."""
+    from cid_etl_spark.queries import _stream_run_conf
+
+    ckpt = str(tmp_path / "ckpt")
+    partitions = spark.conf.get(_PARTITIONS)
+    assert spark.conf.get(_MANAGER, None) is None
+    assert _checkpoint_manager(spark, ckpt) == "FileContextBasedCheckpointFileManager"
+
+    with _stream_run_conf(spark, ckpt, n=8):
+        assert spark.conf.get(_PARTITIONS) == "8"
+        assert _checkpoint_manager(spark, ckpt) == "FileSystemBasedCheckpointFileManager"
+        assert _checkpoint_manager(spark, f"file://{ckpt}") == "FileSystemBasedCheckpointFileManager"
+    assert spark.conf.get(_PARTITIONS) == partitions
+    assert spark.conf.get(_MANAGER, None) is None
+
     with pytest.raises(RuntimeError, match="boom"):
-        with _bounded_state_partitions(spark, n=8):
-            assert spark.conf.get(key) == "8"
+        with _stream_run_conf(spark, ckpt, n=8):
+            assert spark.conf.get(_PARTITIONS) == "8"
             raise RuntimeError("boom")
-    assert spark.conf.get(key) == before
+    assert spark.conf.get(_PARTITIONS) == partitions
+    assert spark.conf.get(_MANAGER, None) is None
+
+    # a caller's own manager comes back after the run, also on error
+    theirs = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    spark.conf.set(_MANAGER, theirs)
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            with _stream_run_conf(spark, ckpt):
+                assert _checkpoint_manager(spark, ckpt) == "FileSystemBasedCheckpointFileManager"
+                raise RuntimeError("boom")
+        assert spark.conf.get(_MANAGER) == theirs
+    finally:
+        spark.conf.unset(_MANAGER)
+
+    # any other scheme keeps Spark's default manager: the key stays
+    # untouched (the path is only parsed, no filesystem is created)
+    with _stream_run_conf(spark, "hdfs://namenode:8020/streams/ckpt"):
+        assert spark.conf.get(_PARTITIONS) == "4"
+        assert spark.conf.get(_MANAGER, None) is None
+    assert spark.conf.get(_MANAGER, None) is None
+
+
+def test_stream_restart_admits_each_event_once(spark, tmp_path):
+    """Exactly-once across a restart under the FileSystem-based commit
+    path: drain a dedup stream over two staged files, add a third that
+    repeats some ids, resume from the same checkpoint, and every
+    event_id lands in the sink once."""
+    from cid_etl_spark.queries import _drain
+
+    events = load_table(spark, SF, "events")
+    a = events.filter(F.col("event_id") % 3 == 0)
+    b = events.filter(F.col("event_id") % 3 == 1)
+    c = events.filter(F.col("event_id") % 3 == 2)
+    src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
+
+    def commits():
+        return sorted(
+            n for n in os.listdir(os.path.join(ckpt, "commits")) if not n.startswith(".")
+        )
+
+    def stage(df):
+        df.coalesce(1).write.mode("append").parquet(src)
+
+    def drain():
+        stream = read_event_stream(spark, src, max_files_per_trigger=1)
+        admitted = stream_dedup_events(stream, watermark="90 days")
+        writer = admitted.writeStream.format("parquet").option("path", sink)
+        return _drain(spark, writer.outputMode("append"), ckpt, sink, admitted.schema)
+
+    stage(a.unionAll(b))
+    stage(a)
+    first = drain()
+    assert first.count() == a.count() + b.count()
+    assert commits() == ["0", "1"]
+
+    stage(b.unionAll(c))
+    got = drain()
+    assert commits() == ["0", "1", "2"]
+    assert got.groupBy("event_id").count().filter("count > 1").count() == 0
+    want = sorted(r[0] for r in events.select("event_id").collect())
+    assert sorted(r[0] for r in got.select("event_id").collect()) == want
 
 
 def test_stream_scratch_root_requires_shared_dir_off_local(spark, tmp_path):
