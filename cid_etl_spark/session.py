@@ -13,6 +13,11 @@ degrades gracefully on ``local[N]``:
   not a constant the code depends on.
 - Arrow enabled so the few Pandas-UDF paths (multimodal decode,
   vector ops fallback) move columnar batches, never pickled rows.
+- Python workers fork from :mod:`cid_etl_spark.pydaemon`, Spark's own
+  daemon minus two per-task fixed costs: the re-read of every zip
+  importer's directory (``pyspark.zip``) and a full ``gc.collect()``
+  over the pandas/pyarrow heap.  Workers must be able to import this
+  package (working directory or ``PYTHONPATH``).
 
 Every file the engine writes for itself (fixture files, stream
 staging/sinks/checkpoints, batch fragments) lives under one root,
@@ -55,6 +60,8 @@ DEFAULT_CONF: dict[str, str] = {
     # hygiene belongs BETWEEN queries (bench.py clears the SQL cache and
     # triggers an explicit System.gc outside every timed window).
     "spark.cleaner.periodicGC.interval": "30min",
+    # Spark's daemon plus a zip re-read guard and a frozen pre-fork heap
+    "spark.python.daemon.module": "cid_etl_spark.pydaemon",
 }
 
 
